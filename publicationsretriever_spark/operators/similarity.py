@@ -1,15 +1,38 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>): exact and
+approximate cosine top-k (brute force, sign-LSH, IVF, PQ, IVF-PQ, SQ8,
+binary, Matryoshka), the alignment gate, SemDeDup and retrieval evals.
 
-Baseline: brute-force cosine top-k — JVM-side via zip_with/aggregate
-(no Python in the row path). Scale path: sign-LSH bucketing (random
-hyperplane projections) so candidate generation is a bucket join, then
-exact cosine only within buckets.
+Two forms of the same arithmetic. The REFERENCE form is JVM
+expressions — :func:`dot`/:func:`l2_norm`/:func:`cosine`,
+:func:`ivf_assign`, :func:`_probe_topk` and the PQ encode — which the
+equivalence tests compare against and the resident IVF-PQ index
+serves. The SCAN form trains the bounded quantizers on the driver and
+scores the corpus in one NumPy ``mapInPandas`` stage per operator.
+Both must match Spark (and the DuckDB oracle) bit for bit, so every
+driver loop and scorer takes its rounding, ordering and fold from the
+kernel :mod:`.exact`; the @6dp round of a returned score stays
+JVM-side (``F.round``).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from publicationsretriever_spark.operators.exact import (
+    double_compare,
+    fold_cos,
+    fold_cross,
+    fold_cross_d2,
+    fold_dot,
+    fold_norm,
+    fold_rows,
+    round_half_up,
+    rounded_argbest,
+    vec_matrix,
+)
 
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
@@ -89,7 +112,13 @@ def _local_literal_df(spark, rows, fields):
     literal form stays entirely JVM-side (measured ~0.3s saved per
     consuming action at 32 cores) and its values are the exact doubles
     passed in (no string round-trip). ``fields`` = [(name, sql_type)];
-    list values become array<double> literals."""
+    list values become array<double> literals. Zero rows give a typed
+    empty frame (``inline`` of an empty literal array is ARRAY<VOID>,
+    which no consumer can resolve)."""
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(typ).alias(name) for name, typ in fields]
+        )
     structs = []
     for r in rows:
         cols = []
@@ -155,16 +184,12 @@ def _np_cross_scores(
 ) -> DataFrame:
     """Broadcast-queries x corpus cosine scoring as ONE mapInPandas
     stage (guide §4.2): the bounded query set rides in the task
-    closure as plain Python lists, each corpus batch is scored in
-    NumPy with the EXACT same IEEE op sequence as the JVM unrolled
-    fold — acc starts at 0.0 and adds the per-dimension products in
-    index order (one multiply + one add per step, no BLAS/FMA
-    reassociation), norms fold the same way, and the division
-    associates (dot / (cn * qn)) — so the raw double scores are
-    BIT-IDENTICAL to the expression path (pinned by
-    test_np_scorer_bit_identical). The @6dp HALF_UP round stays
-    JVM-side on the returned column (decimal rounding has no exact
-    vectorized form).
+    closure as plain Python lists, each corpus batch is scored with
+    the kernel's fold (exact.fold_cross / fold_norm — the JVM unrolled
+    fold's IEEE op sequence, division associated dot / (cn * qn)), so
+    the raw double scores are BIT-IDENTICAL to the expression path
+    (pinned by test_np_scorer_bit_identical). The @6dp HALF_UP round
+    stays JVM-side on the returned column.
 
     Why: the unrolled 64-dim expression chains cost the DRIVER
     hundreds of ms of codegen text generation / subexpression
@@ -193,13 +218,9 @@ def _np_cross_scores(
         import numpy as np
         import pandas as pd
 
-        Q = np.array(qvecs, dtype=np.float64)
+        Q = vec_matrix(qvecs, dim)
         n_q = Q.shape[0]
-        qn = np.zeros(n_q)
-        for d in range(dim):
-            qd = Q[:, d]
-            qn = qn + qd * qd
-        qn = np.sqrt(qn)
+        qn = fold_norm(Q)
         qid_arr = np.array(qids, dtype=np.int64)
         ex_arr = (
             np.array(extras, dtype=np.float64)
@@ -209,21 +230,10 @@ def _np_cross_scores(
         for pdf in batches:
             if len(pdf) == 0 or n_q == 0:
                 continue
-            C = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[vec_col].to_numpy()
-                ]
-            )
+            C = vec_matrix(pdf[vec_col], dim)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             n_c = C.shape[0]
-            acc = np.zeros((n_c, n_q))
-            cn = np.zeros(n_c)
-            for d in range(dim):
-                cd = C[:, d]
-                cn = cn + cd * cd
-                acc = acc + cd[:, None] * Q[:, d][None, :]
-            s = acc / (np.sqrt(cn)[:, None] * qn[None, :])
+            s = fold_cross(C, Q) / (fold_norm(C)[:, None] * qn[None, :])
             out = {
                 query_id_col: np.tile(qid_arr, n_c),
                 id_col: np.repeat(ids, n_q),
@@ -245,6 +255,23 @@ def _collect_query_rows(
         for r in queries.select(query_id_col, vec_col).collect()
         if r[1] is not None
     ]
+
+
+def _no_candidates(
+    vectors: DataFrame,
+    query_id_col: str,
+    id_col: str,
+    score_name: str,
+    score_type: str = "double",
+) -> DataFrame:
+    """The typed empty top-k of an empty corpus: no vector width, no
+    trained cells or codewords, nothing to score."""
+    return vectors.limit(0).select(
+        F.lit(None).cast("long").alias(query_id_col),
+        F.lit(None).cast("int").alias("rank"),
+        F.col(id_col),
+        F.lit(None).cast(score_type).alias(score_name),
+    )
 
 
 def brute_force_topk(
@@ -472,51 +499,6 @@ def embedding_neardup_pairs(
     return pairs
 
 
-def _round6_py(x: float) -> float:
-    """Spark's round(double, 6): HALF_UP on the shortest decimal repr
-    of the double (BigDecimal.valueOf == Decimal(repr(x))). The same
-    rule the driver-side Lloyd loops already replicate."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
-
-
-def _double_compare(a: float, b: float) -> int:
-    """java.lang.Double.compare — the ordering Spark's sorts, windows
-    and max_by/min_by apply to DoubleType. Differs from Python's
-    native float compare in exactly two places: -0.0 < 0.0, and NaN
-    sorts above everything. The bit-compare branch only runs when
-    a == b or either is NaN."""
-    import struct as _st
-
-    if a < b:
-        return -1
-    if a > b:
-        return 1
-    ab = _st.unpack("<q", _st.pack("<d", a))[0]
-    bb = _st.unpack("<q", _st.pack("<d", b))[0]
-    return (ab > bb) - (ab < bb)
-
-
-def _py_fold_cos(a: list, b: list) -> float:
-    """Sequential-fold cosine in plain Python (IEEE doubles, same op
-    sequence as the JVM unrolled fold: products added in index order,
-    correctly-rounded sqrt, dot / (na * nb) association) — raw value
-    bit-identical to the expression form."""
-    import math
-
-    acc = 0.0
-    na = 0.0
-    nb = 0.0
-    for x, y in zip(a, b):
-        acc = acc + float(x) * float(y)
-        na = na + float(x) * float(x)
-        nb = nb + float(y) * float(y)
-    return acc / (math.sqrt(na) * math.sqrt(nb))
-
-
 def _py_probe_cells(
     q_rows: list, cent_rows: list, nprobe: int
 ) -> dict:
@@ -527,14 +509,14 @@ def _py_probe_cells(
     import functools
 
     def _cmp(x, y):
-        # desc by sim under Double.compare, asc by cell
-        c = _double_compare(y[0], x[0])
+        # desc by sim in Spark's double order, asc by cell
+        c = double_compare(y[0], x[0])
         return c if c != 0 else (x[1] > y[1]) - (x[1] < y[1])
 
     out = {}
     for qid, qv in q_rows:
         sims = [
-            (_round6_py(_py_fold_cos(qv, cv)), c) for c, cv in cent_rows
+            (round_half_up(fold_cos(qv, cv)), c) for c, cv in cent_rows
         ]
         sims.sort(key=functools.cmp_to_key(_cmp))
         out[int(qid)] = [c for _, c in sims[:nprobe]]
@@ -549,8 +531,8 @@ def _py_assign_cells(rows: list, cent_rows: list) -> list:
     for rid, v in rows:
         best_c, best_s = None, None
         for c, cv in cent_rows:  # ascending cell + strict '>' = ties low
-            s = _round6_py(_py_fold_cos(v, cv))
-            if best_s is None or _double_compare(s, best_s) > 0:
+            s = round_half_up(fold_cos(v, cv))
+            if best_s is None or double_compare(s, best_s) > 0:
                 best_c, best_s = c, s
         out.append((rid, v, best_c))
     return out
@@ -576,27 +558,23 @@ def _np_ivf_probe_scan(
     with a single opaque stage of NumPy batch math.
 
     Per batch: (1) nearest-cell assignment by @6dp-rounded cosine
-    argmax with ties to the lowest cell. The fast path takes the RAW
-    argmax and accepts it when the margin to the runner-up exceeds
-    1e-6 — rounding moves a value by at most 5e-7, so a raw margin
-    > 1e-6 cannot flip the rounded order or create a rounded tie;
-    rows inside the margin go through the exact decimal path
-    (_round6_py per cell, tie to lowest). (2) optionally PQ-encode the
-    row (per-subspace squared-L2 argmin, same margin rule on the
-    rounded d2, ties to the lowest code) and reconstruct the stored
-    payload (flat: codeword concat; residual/IVFADC: centroid +
-    recon(residual)). (3) score the payload against every query that
-    probes the row's cell (``probe_cells``; None = score all rows for
-    all queries, the flat-PQ exhaustive scan) with the bit-identical
-    per-dimension fold, and emit (query_id, id, raw score). The @6dp
-    round of the score stays JVM-side on the returned column.
+    argmax with ties to the lowest cell (exact.rounded_argbest: raw
+    fast path, exact decimal re-rank inside the 1e-6 margin).
+    (2) optionally PQ-encode the row (per-subspace squared-L2 argmin,
+    same rule on the rounded d2, ties to the lowest code) and
+    reconstruct the stored payload (flat: codeword concat;
+    residual/IVFADC: centroid + recon(residual)). (3) score the payload
+    against every query that probes the row's cell (``probe_cells``;
+    None = score all rows for all queries, the flat-PQ exhaustive scan)
+    with the bit-identical per-dimension fold, and emit (query_id, id,
+    raw score). The @6dp round of the score stays JVM-side on the
+    returned column.
 
     The query set and trained tables are bounded by contract and ride
     in the task closure; at 10^10 rows the scan still reads each
     corpus row once and emits only probed candidates. The distributed
-    join/aggregate formulation remains in ivf_assign/_probe_topk for
-    quantizers too large to ship as closures (n_cells x dim beyond
-    list-literal scale)."""
+    join/aggregate formulation in ivf_assign/_probe_topk is the
+    reference the equivalence tests compare this scan against."""
     qids = [int(q) for q, _ in q_rows]
     qvecs = [[float(x) for x in v] for _, v in q_rows]
     cells = [int(c) for c, _ in cent_rows]
@@ -617,29 +595,6 @@ def _np_ivf_probe_scan(
         }
     schema = f"{query_id_col} long, {id_col} long, {score_name} double"
 
-    # nested (pickled-by-value) copies of _round6_py/_double_compare:
-    # the scorer must be self-contained — module-level references
-    # would require the package to be importable on every worker
-    def _r6(x):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), ROUND_HALF_UP
-            )
-        )
-
-    def _dcmp(a, b):
-        import struct as _st
-
-        if a < b:
-            return -1
-        if a > b:
-            return 1
-        ab = _st.unpack("<q", _st.pack("<d", a))[0]
-        bb = _st.unpack("<q", _st.pack("<d", b))[0]
-        return (ab > bb) - (ab < bb)
-
     def scorer(batches):
         import numpy as np
         import pandas as pd
@@ -647,137 +602,62 @@ def _np_ivf_probe_scan(
         n_q = len(qids)
         if n_q == 0:
             return
-        Q = np.array(qvecs, dtype=np.float64)
-        qn = np.zeros(n_q)
-        for d in range(dim):
-            qd = Q[:, d]
-            qn = qn + qd * qd
-        qn = np.sqrt(qn)
-        CENT = np.array(cvecs, dtype=np.float64)
+        Q = vec_matrix(qvecs, dim)
+        qn = fold_norm(Q)
+        CENT = vec_matrix(cvecs, dim)
         cell_arr = np.array(cells, dtype=np.int64)
-        cent_n = np.zeros(len(cells))
-        for d in range(dim):
-            cd = CENT[:, d]
-            cent_n = cent_n + cd * cd
-        cent_n = np.sqrt(cent_n)
-        cell_index = {c: i for i, c in enumerate(cells)}
+        cent_n = fold_norm(CENT)
         if pq_cfg is not None:
             m, width = pq_cfg["m"], pq_cfg["width"]
-            cb_codes = []  # per subspace: sorted code ids
-            cb_mats = []  # per subspace: (n_codes, width) matrix
+            cb_mats = []  # per subspace: (n_codes, width), code order
             by_sub: dict[int, list] = {}
             for sj, cid, cw in pq_cfg["cb"]:
                 by_sub.setdefault(int(sj), []).append((int(cid), cw))
             for j in range(m):
                 ent = sorted(by_sub.get(j, []))
-                cb_codes.append(np.array([c for c, _ in ent]))
-                cb_mats.append(
-                    np.array([w for _, w in ent], dtype=np.float64)
-                )
-
-        def rounded_argbest(raw, maximize):
-            """Row-wise arg-best of @6dp-rounded values with ties to
-            the LOWEST id. raw: (n, k) matrix whose columns are in
-            ascending id order (so the exact path's first-win scan
-            breaks ties low); fast path when the raw margin > 1e-6."""
-            n, k = raw.shape
-            if maximize:
-                best = np.argmax(raw, axis=1)  # first (lowest id) max
-            else:
-                best = np.argmin(raw, axis=1)
-            vals = raw[np.arange(n), best]
-            tmp = raw.copy()
-            tmp[np.arange(n), best] = -np.inf if maximize else np.inf
-            second = (
-                np.max(tmp, axis=1) if maximize else np.min(tmp, axis=1)
-            )
-            margin = np.abs(vals - second)
-            near = margin <= 1e-6
-            if near.any():
-                for i in np.flatnonzero(near):
-                    rb, rs = None, None
-                    for jj in range(k):
-                        s = _r6(float(raw[i, jj]))
-                        if (
-                            rs is None
-                            or (maximize and _dcmp(s, rs) > 0)
-                            or (not maximize and _dcmp(s, rs) < 0)
-                        ):
-                            rb, rs = jj, s
-                    best[i] = rb
-            return best
+                cb_mats.append(vec_matrix([w for _, w in ent], width))
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[vec_col].to_numpy()
-                ]
-            )
+            C = vec_matrix(pdf[vec_col], dim)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             n_c = C.shape[0]
             # (1) nearest-cell assignment (skipped for the flat-PQ
             # exhaustive scan, which passes one dummy cell)
             if probe is None and len(cells) == 1:
                 pick = np.zeros(n_c, dtype=np.int64)
-                row_cell = cell_arr[pick]
             else:
-                accs = np.zeros((n_c, len(cells)))
-                cn = np.zeros(n_c)
-                for d in range(dim):
-                    cd = C[:, d]
-                    cn = cn + cd * cd
-                    accs = accs + cd[:, None] * CENT[:, d][None, :]
-                sims = accs / (np.sqrt(cn)[:, None] * cent_n[None, :])
+                sims = fold_cross(C, CENT) / (
+                    fold_norm(C)[:, None] * cent_n[None, :]
+                )
                 pick = rounded_argbest(sims, maximize=True)
-                row_cell = cell_arr[pick]
+            row_cell = cell_arr[pick]
             # (2) payload
-            if pq_cfg is None:
-                payload = C
-            else:
-                base = C
-                if pq_cfg["residual"]:
-                    base = C - CENT[pick]  # elementwise, exact
+            payload = C
+            if pq_cfg is not None:
+                base = C - CENT[pick] if pq_cfg["residual"] else C
                 recon = np.empty_like(base)
                 for j in range(m):
-                    sl = base[:, j * width : (j + 1) * width]
-                    cwm = cb_mats[j]  # (n_codes, width)
-                    d2 = np.zeros((n_c, cwm.shape[0]))
-                    for d in range(width):
-                        t = sl[:, d][:, None] - cwm[:, d][None, :]
-                        d2 = d2 + t * t
-                    cpick = rounded_argbest(d2, maximize=False)
-                    recon[:, j * width : (j + 1) * width] = cwm[cpick]
-                if pq_cfg["residual"]:
-                    recon = CENT[pick] + recon
-                payload = recon
-            pn = np.zeros(n_c)
-            for d in range(dim):
-                pd_ = payload[:, d]
-                pn = pn + pd_ * pd_
-            pn = np.sqrt(pn)
+                    sl = slice(j * width, (j + 1) * width)
+                    cpick = rounded_argbest(
+                        fold_cross_d2(base[:, sl], cb_mats[j]),
+                        maximize=False,
+                    )
+                    recon[:, sl] = cb_mats[j][cpick]
+                payload = CENT[pick] + recon if pq_cfg["residual"] else recon
+            pn = fold_norm(payload)
             # (3) score probed rows per query
             out_q, out_i, out_s = [], [], []
             for j in range(n_q):
                 if probe is not None:
-                    pcells = probe.get(qids[j])
-                    mask = np.isin(row_cell, list(pcells))
+                    mask = np.isin(row_cell, list(probe.get(qids[j])))
                     if not mask.any():
                         continue
-                    P = payload[mask]
-                    pnm = pn[mask]
-                    idm = ids[mask]
+                    P, pnm, idm = payload[mask], pn[mask], ids[mask]
                 else:
-                    P = payload
-                    pnm = pn
-                    idm = ids
-                acc = np.zeros(P.shape[0])
-                qv = Q[j]
-                for d in range(dim):
-                    acc = acc + P[:, d] * qv[d]
-                s = acc / (pnm * qn[j])
+                    P, pnm, idm = payload, pn, ids
+                s = fold_cross(P, Q[j : j + 1])[:, 0] / (pnm * qn[j])
                 out_q.append(np.full(len(idm), qids[j], dtype=np.int64))
                 out_i.append(idm)
                 out_s.append(s)
@@ -814,33 +694,17 @@ def _np_keyed_scores(
         import pandas as pd
 
         keys = [k for k, _ in q_items]
-        Q = np.array([v for _, v in q_items], dtype=np.float64)
-        qn = np.zeros(len(keys))
-        for d in range(dim):
-            qd = Q[:, d]
-            qn = qn + qd * qd
-        qn = np.sqrt(qn)
+        Q = vec_matrix([v for _, v in q_items], dim)
+        qn = fold_norm(Q)
         kpos = {k: i for i, k in enumerate(keys)}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[vec_col].to_numpy()
-                ]
-            )
+            C = vec_matrix(pdf[vec_col], dim)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             qs = pdf[qid_col].to_numpy(dtype=np.int64)
             pos = np.array([kpos[int(k)] for k in qs])
-            Qr = Q[pos]
-            acc = np.zeros(len(C))
-            cn = np.zeros(len(C))
-            for d in range(dim):
-                cd = C[:, d]
-                cn = cn + cd * cd
-                acc = acc + cd * Qr[:, d]
-            s = acc / (np.sqrt(cn) * qn[pos])
+            s = fold_rows(C, Q[pos]) / (fold_norm(C) * qn[pos])
             yield pd.DataFrame(
                 {qid_col: qs, id_col: ids, score_name: s}
             )
@@ -869,20 +733,14 @@ def _np_sq_scan(
     with decimal HALF_UP only when y sits within ~1 ulp of a
     half-integer — elements with |y - (floor(y) + 0.5)| <= 1e-9 are
     re-done with exact Decimal rounding (the same rule F.round
-    applies). The @6dp score round stays JVM-side."""
+    applies — exact.round_half_up at dp=0). The @6dp score round stays
+    JVM-side."""
     dim = len(mins)
     qids = [int(q) for q, _ in q_rows]
     qvecs = [[float(x) for x in v] for _, v in q_rows]
     mins_l = [float(x) for x in mins]
     maxs_l = [float(x) for x in maxs]
     schema = f"{query_id_col} long, {id_col} long, {score_name} double"
-
-    def _r0(x):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(x)).quantize(Decimal("1"), ROUND_HALF_UP)
-        )
 
     def scorer(batches):
         import numpy as np
@@ -891,12 +749,8 @@ def _np_sq_scan(
         n_q = len(qids)
         if n_q == 0:
             return
-        Q = np.array(qvecs, dtype=np.float64)
-        qn = np.zeros(n_q)
-        for d in range(dim):
-            qd = Q[:, d]
-            qn = qn + qd * qd
-        qn = np.sqrt(qn)
+        Q = vec_matrix(qvecs, dim)
+        qn = fold_norm(Q)
         qid_arr = np.array(qids, dtype=np.int64)
         mn = np.array(mins_l)
         mx = np.array(maxs_l)
@@ -905,12 +759,7 @@ def _np_sq_scan(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[vec_col].to_numpy()
-                ]
-            )
+            C = vec_matrix(pdf[vec_col], dim)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             n_c = C.shape[0]
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -921,19 +770,11 @@ def _np_sq_scan(
             near &= ~zero_span[None, :]
             if near.any():
                 for i, j in zip(*np.nonzero(near)):
-                    code[i, j] = _r0(float(y[i, j]))
+                    code[i, j] = round_half_up(y[i, j], 0)
             code = np.clip(code, 0.0, 255.0)
             code[:, zero_span] = 0.0
             dv = mn[None, :] + (code * span[None, :]) / 255.0
-            pn = np.zeros(n_c)
-            for d in range(dim):
-                dd = dv[:, d]
-                pn = pn + dd * dd
-            pn = np.sqrt(pn)
-            acc = np.zeros((n_c, n_q))
-            for d in range(dim):
-                acc = acc + dv[:, d][:, None] * Q[:, d][None, :]
-            s = acc / (pn[:, None] * qn[None, :])
+            s = fold_cross(dv, Q) / (fold_norm(dv)[:, None] * qn[None, :])
             yield pd.DataFrame(
                 {
                     query_id_col: np.tile(qid_arr, n_c),
@@ -989,17 +830,12 @@ def _np_binary_scan(
                     out[:, w] |= bits[:, i].astype(np.int64) << j
             return out
 
-        QC = pack(np.array(qvecs, dtype=np.float64))
+        QC = pack(vec_matrix(qvecs, dim))
         qid_arr = np.array(qids, dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[vec_col].to_numpy()
-                ]
-            )
+            C = vec_matrix(pdf[vec_col], dim)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             CC = pack(C)
             n_c = CC.shape[0]
@@ -1027,86 +863,40 @@ def _np_ivf_assign_scan(
     cent_rows: list,
     id_col: str,
     vec_col: str,
-    dim: int,
+    dim: int | None,
 ) -> DataFrame:
     """Inverted-list build as one NumPy scan: (id, vec, cell_id, _n)
-    with the same rounded-argmax assignment (near-tie exact path, see
-    _np_ivf_probe_scan) and the bit-identical fold norm. Replaces the
-    assignment cross-join + map-side argmax aggregate + id join-back
-    and the norm projection — the vectors ride through Arrow
-    losslessly (float32 in, float32 out). The distributed ivf_assign
-    remains for quantizers too large to ship as closures."""
+    with the rounded-argmax assignment (exact.rounded_argbest, ties to
+    the lowest cell) and the bit-identical fold norm. The one
+    assignment path of build_ivf_index and IvfIndex.append; ivf_assign
+    (cross-join + map-side argmax aggregate + id join-back) is its
+    test reference. The vectors ride through Arrow losslessly in their
+    input type."""
     cells = [int(c) for c, _ in cent_rows]
     cvecs = [[float(x) for x in v] for _, v in cent_rows]
+    vec_type = vectors.schema[vec_col].dataType.simpleString()
     schema = (
-        f"{id_col} long, {vec_col} array<float>, cell_id long, _n double"
+        f"{id_col} long, {vec_col} {vec_type}, cell_id long, _n double"
     )
-
-    def _r6(x):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), ROUND_HALF_UP
-            )
-        )
-
-    def _dcmp(a, b):
-        import struct as _st
-
-        if a < b:
-            return -1
-        if a > b:
-            return 1
-        ab = _st.unpack("<q", _st.pack("<d", a))[0]
-        bb = _st.unpack("<q", _st.pack("<d", b))[0]
-        return (ab > bb) - (ab < bb)
 
     def scorer(batches):
         import numpy as np
         import pandas as pd
 
-        CENT = np.array(cvecs, dtype=np.float64)
+        CENT = vec_matrix(cvecs, dim)
         cell_arr = np.array(cells, dtype=np.int64)
-        cent_n = np.zeros(len(cells))
-        for d in range(dim):
-            cd = CENT[:, d]
-            cent_n = cent_n + cd * cd
-        cent_n = np.sqrt(cent_n)
+        cent_n = fold_norm(CENT)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            raw_cells = pdf[vec_col].to_numpy()
-            C = np.vstack(
-                [np.asarray(c, dtype=np.float64) for c in raw_cells]
-            )
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            n_c = C.shape[0]
-            accs = np.zeros((n_c, len(cells)))
-            cn = np.zeros(n_c)
-            for d in range(dim):
-                cd = C[:, d]
-                cn = cn + cd * cd
-                accs = accs + cd[:, None] * CENT[:, d][None, :]
-            cn = np.sqrt(cn)
-            sims = accs / (cn[:, None] * cent_n[None, :])
-            best = np.argmax(sims, axis=1)
-            vals = sims[np.arange(n_c), best]
-            tmp = sims.copy()
-            tmp[np.arange(n_c), best] = -np.inf
-            margin = np.abs(vals - np.max(tmp, axis=1))
-            for i in np.flatnonzero(margin <= 1e-6):
-                rb, rs = None, None
-                for jj in range(len(cells)):
-                    s = _r6(float(sims[i, jj]))
-                    if rs is None or _dcmp(s, rs) > 0:
-                        rb, rs = jj, s
-                best[i] = rb
+            C = vec_matrix(pdf[vec_col], dim)
+            cn = fold_norm(C)
+            sims = fold_cross(C, CENT) / (cn[:, None] * cent_n[None, :])
             yield pd.DataFrame(
                 {
-                    id_col: ids,
-                    vec_col: raw_cells,
-                    "cell_id": cell_arr[best],
+                    id_col: pdf[id_col].to_numpy(dtype=np.int64),
+                    vec_col: pdf[vec_col].to_numpy(),
+                    "cell_id": cell_arr[rounded_argbest(sims, maximize=True)],
                     "_n": cn,
                 }
             )
@@ -1142,36 +932,14 @@ def _np_pair_scores_cols(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[a_col].to_numpy()
-                ]
-            )
-            B = np.vstack(
-                [
-                    np.asarray(c, dtype=np.float64)
-                    for c in pdf[b_col].to_numpy()
-                ]
-            )
-            acc = np.zeros(len(A))
+            A = vec_matrix(pdf[a_col], dim)
+            B = vec_matrix(pdf[b_col], dim)
             if norms is None:
-                na = np.zeros(len(A))
-                nb = np.zeros(len(A))
-                for d in range(dim):
-                    ad = A[:, d]
-                    bd = B[:, d]
-                    acc = acc + ad * bd
-                    na = na + ad * ad
-                    nb = nb + bd * bd
-                s = acc / (np.sqrt(na) * np.sqrt(nb))
+                nrm = fold_norm(A) * fold_norm(B)
             else:
-                for d in range(dim):
-                    acc = acc + A[:, d] * B[:, d]
-                s = acc / (
-                    pdf[norms[0]].to_numpy(dtype=np.float64)
-                    * pdf[norms[1]].to_numpy(dtype=np.float64)
-                )
+                na, nb = (pdf[c].to_numpy(dtype=np.float64) for c in norms)
+                nrm = na * nb
+            s = fold_rows(A, B) / nrm
             out = {k: pdf[k].to_numpy(dtype=np.int64) for k in keys}
             out[score_name] = s
             yield pd.DataFrame(out)
@@ -1230,21 +998,20 @@ def ivf_centroids(
     collected and the Lloyd loop runs ON THE DRIVER in plain Python —
     a ≤sample_n-row loop is driver work (same call FAISS/MLlib make:
     quantizer training is not a distributed job), while the corpus-wide
-    assignment stays a distributed broadcast pass (ivf_assign). Running
+    assignment stays one pass over the corpus. Running
     the loop as Spark jobs costs ~20 tiny stages of pure scheduling per
     iteration for 4096 rows of math; driver-side it is sub-millisecond
     and the returned centroid table is a LITERAL, so downstream
     consumers (inverted-list build + query probe) broadcast a value,
-    not a plan subtree. Arithmetic mirrors the SQL spec: cosine with
-    sequential left-fold sums, HALF_UP decimal round at 6dp (Spark's
-    F.round), argmax ties to the lowest cell, per-dimension double
-    mean, empty cells keep their previous centroid.
+    not a plan subtree. Arithmetic mirrors the SQL spec through the
+    exact kernel: cosine with sequential left-fold sums and sqrt
+    norms, HALF_UP decimal round at 6dp (Spark's F.round), argmax in
+    Spark's double order with ties to the lowest cell, per-dimension
+    double mean, empty cells keep their previous centroid.
+    ``refine_iters=0`` is the same literal after zero Lloyd steps; an
+    empty corpus gives an empty table (``_dim`` None).
     """
-    if refine_iters <= 0:
-        return vectors.orderBy(F.col(id_col).asc()).limit(n_cells).select(
-            F.col(id_col).alias("cell_id"), F.col(vec_col).alias("_cv")
-        )
-    if sample_order == "id":
+    if sample_order == "id" or refine_iters <= 0:
         # init cells are the lowest-id prefix of the id-ordered
         # sample: ONE TakeOrdered job serves both collects (and the
         # caller may pass the already-collected prefix — the IVF-PQ
@@ -1254,7 +1021,7 @@ def ivf_centroids(
         if rows is None:
             rows = (
                 vectors.orderBy(F.col(id_col).asc())
-                .limit(max(n_cells, sample_n))
+                .limit(max(n_cells, sample_n if refine_iters > 0 else 0))
                 .select(
                     F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
                 )
@@ -1291,30 +1058,17 @@ def ivf_centroids(
         ((int(r["_id"]), [float(x) for x in r["_v"]]) for r in sample_rows),
         key=lambda t: t[0],
     )
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _round6(x: float) -> float:
-        # Spark's round(double, 6): HALF_UP on the shortest decimal
-        # repr of the double (BigDecimal.valueOf == Decimal(repr(x)))
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
-
-    def _dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    norms = {i: _dot(v, v) ** 0.5 for i, v in samp}
+    norms = {i: math.sqrt(fold_dot(v, v)) for i, v in samp}
     for _ in range(refine_iters):
-        cnorm = {c: _dot(cent[c], cent[c]) ** 0.5 for c in cells}
+        cnorm = {c: math.sqrt(fold_dot(cent[c], cent[c])) for c in cells}
         members: dict[int, list[list[float]]] = {}
         for i, v in samp:
             best_cell, best_sim = None, None
             for c in cells:  # ascending + strict '>' = ties to lowest
-                s = _round6(_dot(v, cent[c]) / (norms[i] * cnorm[c]))
-                if best_sim is None or s > best_sim:
+                s = round_half_up(
+                    fold_dot(v, cent[c]) / (norms[i] * cnorm[c])
+                )
+                if best_sim is None or double_compare(s, best_sim) > 0:
                     best_cell, best_sim = c, s
             members.setdefault(best_cell, []).append(v)
         for c, vs in members.items():
@@ -1347,7 +1101,8 @@ def ivf_assign(
     write the result partitioned by cell_id and each probe touches
     only nprobe/n_cells of the data. Norms are computed once per side
     before the cross join and the dot is unrolled (same fold order —
-    bit-identical _sim)."""
+    bit-identical _sim). The expression reference of the NumPy build
+    scan (_np_ivf_assign_scan), and the IVF-PQ build's assignment."""
     if dim is None:
         dim = _dim_of(vectors, vec_col)
     cent = centroids.withColumn("_cn", l2_norm(F.col("_cv"), dim))
@@ -1432,18 +1187,24 @@ class IvfIndex:
         deltas; compaction IS a rebuild. The trade (documented, same
         as FAISS): cells go stale if the data distribution drifts
         far from the training sample — rebuild on a drift signal,
-        don't retrain per batch."""
+        don't retrain per batch. Assignment is the build's NumPy scan
+        (_np_ivf_assign_scan), so build and append share one path."""
         from pyspark import StorageLevel
 
-        dim = self.dim or _dim_of(new_vectors, self.vec_col)
-        add = (
-            ivf_assign(
-                new_vectors, self.centroids, self.vec_col, self.id_col,
-                dim,
+        # centroids trained elsewhere: one bounded collect
+        cent_rows = getattr(self.centroids, "_cent_rows", None) or [
+            (r["cell_id"], r["_cv"])
+            for r in self.centroids.orderBy("cell_id").collect()
+        ]
+        if not cent_rows:
+            raise ValueError(
+                "index has no cells (built on an empty corpus); "
+                "rebuild it to add vectors"
             )
-            .withColumn("_n", l2_norm(F.col(self.vec_col), dim))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        dim = self.dim or len(cent_rows[0][1])
+        add = _np_ivf_assign_scan(
+            new_vectors, cent_rows, self.id_col, self.vec_col, dim
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         add.count()  # batch-sized job: the whole append cost
         if not hasattr(self, "_base"):
             self._base = self.inverted  # the persisted build output
@@ -1474,31 +1235,21 @@ def build_ivf_index(
     pays the build lazily)."""
     from pyspark import StorageLevel
 
-    # with refine_iters > 0 ivf_centroids trains on the driver and
-    # returns a LITERAL centroid table, so its two consumers (inverted-
-    # list build + query probe) broadcast a value, not a plan subtree
+    # ivf_centroids trains on the driver and returns a LITERAL centroid
+    # table, so its two consumers (inverted-list build + query probe)
+    # broadcast a value, not a plan subtree. The build is one NumPy
+    # scan (assignment + norm once per vector BEFORE the probe join, no
+    # cross-join/aggregate/join-back); dim rides along from the
+    # training collect — no separate limit-1 probe job.
     cent = ivf_centroids(
         vectors, vec_col, id_col, n_cells,
         refine_iters=refine_iters, sample_n=sample_n,
         sample_order=sample_order,
     )
-    # norms once per vector BEFORE the probe join: the higher-order
-    # array expressions run interpreted, so per-(vector x probe)-pair
-    # norm recomputation would triple the hot-path work (same move as
-    # embedding_neardup_pairs). dim rides along from the centroid
-    # training collect — no separate limit-1 probe job. With a
-    # driver-resident quantizer the whole build is one NumPy scan
-    # (assignment + norm, no cross-join/aggregate/join-back).
-    dim = getattr(cent, "_dim", None) or _dim_of(vectors, vec_col)
-    cent_rows = getattr(cent, "_cent_rows", None)
-    if cent_rows is not None and dim is not None:
-        inv = _np_ivf_assign_scan(
-            vectors, cent_rows, id_col, vec_col, dim
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        inv = ivf_assign(vectors, cent, vec_col, id_col, dim).withColumn(
-            "_n", l2_norm(F.col(vec_col), dim)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    dim = cent._dim
+    inv = _np_ivf_assign_scan(
+        vectors, cent._cent_rows, id_col, vec_col, dim
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     if materialize:
         inv.count()
     return IvfIndex(cent, inv, vec_col, id_col, dim=dim)
@@ -1534,25 +1285,15 @@ def ivf_topk(
     one-shot overhead drops to ~0 across repeated queries). The
     one-shot runs as a single NumPy probe scan (_np_ivf_probe_scan —
     probe cells chosen on the driver, bit-identical scores, JVM @6dp
-    round) when the trained quantizer is driver-resident; the
-    distributed build path remains behind build_ivf_index for
-    resident/serve-many indexes."""
+    round); the resident IvfIndex probes through _probe_topk."""
     cent = ivf_centroids(
         vectors, vec_col, id_col, n_cells,
         refine_iters=refine_iters, sample_n=sample_n,
         sample_order=sample_order,
     )
-    cent_rows = getattr(cent, "_cent_rows", None)
-    dim = getattr(cent, "_dim", None)
-    if cent_rows is None or dim is None:
-        ix = build_ivf_index(
-            vectors, vec_col, id_col, n_cells,
-            refine_iters=refine_iters, sample_n=sample_n,
-            sample_order=sample_order,
-        )
-        out = ix.topk(queries, query_id_col, k=k, nprobe=nprobe)
-        ix.inverted.unpersist()
-        return out
+    cent_rows, dim = cent._cent_rows, cent._dim
+    if dim is None:
+        return _no_candidates(vectors, query_id_col, id_col, "cos_sim")
     q_rows = _collect_query_rows(queries, query_id_col, vec_col)
     probe = _py_probe_cells(q_rows, cent_rows, nprobe)
     scored = _np_ivf_probe_scan(
@@ -1624,14 +1365,11 @@ def pq_codebooks(
             return r[0], r[1]
 
     rows = [_idv(r) for r in rows]
-    dim = (
-        len(rows[0][1])
-        if rows and rows[0][1] is not None
-        else 0
-    )
-    if dim == 0 or dim % m != 0:
+    # an empty corpus trains an empty codebook (``_dim`` None)
+    dim = len(rows[0][1] or []) if rows else None
+    if dim is not None and (dim == 0 or dim % m != 0):
         raise ValueError(f"vector dim {dim} not divisible by m={m}")
-    w = dim // m
+    w = (dim or 0) // m
     init = sorted(
         ((int(i), [float(x) for x in v]) for i, v in rows[:n_codes]),
         key=lambda t: t[0],
@@ -1645,15 +1383,6 @@ def pq_codebooks(
             ((int(i), [float(x) for x in v]) for i, v in rows[:sample_n]),
             key=lambda t: t[0],
         )
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def _round6(x: float) -> float:
-            return float(
-                Decimal(repr(x)).quantize(
-                    Decimal("0.000001"), ROUND_HALF_UP
-                )
-            )
-
         for j in range(m):
             slices = [(i, v[j * w : (j + 1) * w]) for i, v in samp]
             codes = sorted(cb[j])
@@ -1666,8 +1395,8 @@ def pq_codebooks(
                         acc = 0.0
                         for x, y in zip(sv, cw):
                             acc += (x - y) * (x - y)
-                        d2 = _round6(acc)
-                        if best_d is None or d2 < best_d:
+                        d2 = round_half_up(acc)
+                        if best_d is None or double_compare(d2, best_d) < 0:
                             best_code, best_d = c, d2
                     members.setdefault(best_code, []).append(sv)
                 for c, vs in members.items():
@@ -1888,48 +1617,29 @@ def pq_topk(
         vectors, vec_col, id_col, m=m, n_codes=n_codes,
         refine_iters=refine_iters, sample_n=sample_n,
     )
-    dim = getattr(cbs, "_dim", None) or _dim_of(vectors, vec_col)
-    width = dim // m if dim else None
-    cb_rows = getattr(cbs, "_cb_rows", None)
-    if cb_rows is None or dim is None:
-        # codebooks not driver-resident: fused encode+reconstruct in
-        # the distributed form (one corpus shuffle), expression scoring
-        recon = pq_reconstruct_fused(
-            vectors, cbs, m, vec_col, id_col, width=width
-        ).withColumn("_n", l2_norm(F.col("recon"), dim))
-        q = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("_qv")
-        ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-        scored = recon.crossJoin(F.broadcast(q)).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                dot(F.col("recon"), F.col("_qv"), dim)
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("adc_sim"),
-        )
-    else:
-        # one NumPy scan: encode (rounded argmin, near-tie exact),
-        # reconstruct, and asymmetric scoring fused per batch — the
-        # compressed exhaustive scan with no join and no shuffle
-        # before the bounded top-k
-        q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-        # probe=None but a full scan still needs cell assignment
-        # inputs; pass a single dummy cell so the assignment stage is
-        # trivial and unused (flat PQ has no coarse quantizer)
-        scored = _np_ivf_probe_scan(
-            vectors,
-            [(0, [0.0] * dim)],
-            q_rows, None, id_col, vec_col, query_id_col, "_sraw",
-            dim,
-            pq={"m": m, "width": width, "cb_rows": cb_rows,
-                "residual": False},
-        ).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(F.col("_sraw"), 6).alias("adc_sim"),
-        )
+    dim = cbs._dim
+    if dim is None:
+        return _no_candidates(vectors, query_id_col, id_col, "adc_sim")
+    # one NumPy scan: encode (rounded argmin, near-tie exact),
+    # reconstruct, and asymmetric scoring fused per batch — the
+    # compressed exhaustive scan with no join and no shuffle before
+    # the bounded top-k
+    q_rows = _collect_query_rows(queries, query_id_col, vec_col)
+    # probe=None but a full scan still needs cell assignment inputs;
+    # pass a single dummy cell so the assignment stage is trivial and
+    # unused (flat PQ has no coarse quantizer)
+    scored = _np_ivf_probe_scan(
+        vectors,
+        [(0, [0.0] * dim)],
+        q_rows, None, id_col, vec_col, query_id_col, "_sraw",
+        dim,
+        pq={"m": m, "width": dim // m, "cb_rows": cbs._cb_rows,
+            "residual": False},
+    ).select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(F.col("_sraw"), 6).alias("adc_sim"),
+    )
     return partial_topk(
         scored,
         query_id_col,
@@ -2267,9 +1977,8 @@ def ivfpq_topk(
     # (coarse quantizer; flat codebooks from the raw prefix; residual
     # codebooks from the prefix rows assigned + residualized with the
     # same exact rounded-argmax arithmetic the distributed form uses),
-    # then search as a single NumPy probe scan. The distributed
-    # build/probe pipeline remains behind build_ivfpq_index for
-    # resident serve-many indexes.
+    # then search as a single NumPy probe scan. The resident
+    # IvfPqIndex builds and probes with the expression pipeline.
     prefix_n = max(n_cells, n_codes, sample_n)
     prefix_rows = (
         vectors.orderBy(F.col(id_col).asc())
@@ -2282,22 +1991,9 @@ def ivfpq_topk(
         refine_iters=refine_iters, sample_n=sample_n,
         _prefix_rows=prefix_rows,
     )
-    cent_rows = getattr(cent, "_cent_rows", None)
-    dim = getattr(cent, "_dim", None)
-    if cent_rows is None or dim is None or dim % m != 0:
-        ix = build_ivfpq_index(
-            vectors, vec_col, id_col, n_cells,
-            nprobe_refine_iters=refine_iters, m=m, n_codes=n_codes,
-            refine_iters=refine_iters, sample_n=sample_n,
-            residual=residual,
-        )
-        out = ix.topk(queries, vec_col, query_id_col, k=k, nprobe=nprobe)
-        if residual:
-            # the residual build materialized the inverted list
-            # eagerly; cut the tiny top-k result before dropping it
-            out = out.localCheckpoint(eager=True)
-        ix.inverted.unpersist()
-        return out
+    cent_rows, dim = cent._cent_rows, cent._dim
+    if dim is None:
+        return _no_candidates(vectors, query_id_col, id_col, "adc_sim")
     if residual:
         pfx = [
             (int(r["_id"]), [float(x) for x in r["_v"]])
@@ -2354,13 +2050,17 @@ def sq_stats(
     partially per partition, the driver receives a single row — no
     shuffle of vectors, no explode (an explode would multiply the scan
     by dim). min/max are order-insensitive, so the result is exact and
-    engine-independent (what keeps the operator oracle-checkable)."""
+    engine-independent (what keeps the operator oracle-checkable). An
+    empty corpus has no dimensions: ([], [])."""
     # limit-1 probe, not a first() AGGREGATE: first() as an aggregate
     # scans the whole corpus (partial aggs on every partition) just to
     # learn the width; the limit short-circuits after one row
-    dim = _dim_of(vectors, vec_col) or 0
-    if dim == 0:
-        raise ValueError("empty corpus or null vectors")
+    row = vectors.select(F.size(F.col(vec_col)).alias("d")).head()
+    if row is None:
+        return [], []
+    dim = row["d"] or 0
+    if dim <= 0:
+        raise ValueError("null or empty vectors")
     aggs = []
     for i in range(dim):
         x = F.get(F.col(vec_col), i).cast("double")
@@ -2459,7 +2159,8 @@ def sq_topk(
     (not 16-64x) byte cut. Quantization error <= span/510 per
     dimension, so recall degrades gracefully; ties broken by id."""
     mins, maxs = sq_stats(vectors, vec_col, id_col)
-    dim = len(mins)
+    if not mins:
+        return _no_candidates(vectors, query_id_col, id_col, "sq_sim")
     # encode -> dequantize -> score fused into ONE NumPy corpus scan
     # (_np_sq_scan): the expression form needed an eager materialized
     # cut between encode and dequantize because the fused per-row
@@ -2543,6 +2244,10 @@ def binary_topk(
     bits approximates angular distance (Charikar 2002 sign-LSH, here
     with ALL dims as planes instead of a sampled few)."""
     mins, maxs = sq_stats(vectors, vec_col, id_col)
+    if not mins:
+        return _no_candidates(
+            vectors, query_id_col, id_col, "hamming", "long"
+        )
     mids = [(a + b) / 2.0 for a, b in zip(mins, maxs)]
     # binarize + hamming ranking as one NumPy corpus scan — exact
     # (threshold compare + integer bit ops, no rounding anywhere);
@@ -2972,8 +2677,8 @@ def retrieval_recall_at_k(
     dim = _dim_of(corpus, vec_col)
     # the bounded query sample is collected once; each query's TRUE
     # match score is computed ON THE DRIVER from the matching corpus
-    # rows (plain Python floats are IEEE doubles, same sequential
-    # fold -> bit-identical raw cosine to the expression form) and
+    # rows (exact.fold_cos: bit-identical raw cosine to the
+    # expression form) and
     # rides into the NumPy corpus scan as a per-query extra column,
     # so the whole evaluation is one scan + one bounded collect —
     # no truth join, no broadcast of a second scored table. Queries
@@ -2988,24 +2693,9 @@ def retrieval_recall_at_k(
         .collect()
         if r[1] is not None
     }
-
-    def _fold_cos(a: list, b: list) -> float:
-        import math
-
-        # math.sqrt is the IEEE-correctly-rounded sqrt (same bits as
-        # Java Math.sqrt / np.sqrt); x ** 0.5 would be libm pow
-        acc = 0.0
-        na = 0.0
-        nb = 0.0
-        for i in range(dim):
-            acc = acc + float(a[i]) * float(b[i])
-            na = na + float(a[i]) * float(a[i])
-            nb = nb + float(b[i]) * float(b[i])
-        return acc / (math.sqrt(na) * math.sqrt(nb))
-
     q_rows = [(q, v) for q, v in q_rows if int(q) in truth_rows]
     ts_raw = {
-        int(q): _fold_cos(truth_rows[int(q)], v) for q, v in q_rows
+        int(q): fold_cos(truth_rows[int(q)], v) for q, v in q_rows
     }
     scored = (
         _np_cross_scores(

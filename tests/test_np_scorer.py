@@ -178,9 +178,22 @@ def test_ivf_scan_path_matches_distributed_index_path(spark, vecs):
         assert got == want, f"residual={residual}"
 
 
+def _signed_zero_corpus(spark):
+    """Cells 1 = [-4e-7, 1] and 2 = [4e-7, 1] are the lowest ids (the
+    untrained quantizer's centroids); vector 3 = [1, 0] has raw cosine
+    -4e-7 / +4e-7 to them, both rounding to 0.0 — a tie Spark breaks
+    to the lower cell. A -0.0 from the round would break it the other
+    way."""
+    return spark.createDataFrame(
+        [(1, [-4e-7, 1.0]), (2, [4e-7, 1.0]), (3, [1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+
+
 def test_np_assign_scan_matches_distributed_assign(spark, vecs):
     """The NumPy inverted-list build must be row-identical (including
-    the _n norm BITS) to ivf_assign + l2_norm."""
+    the _n norm BITS) to ivf_assign + l2_norm — on the fixture with a
+    trained quantizer, and on the signed-zero tie."""
     import struct as st
 
     from pyspark.sql import functions as F
@@ -192,17 +205,122 @@ def test_np_assign_scan_matches_distributed_assign(spark, vecs):
         l2_norm,
     )
 
-    cent = ivf_centroids(vecs, refine_iters=1, n_cells=4, sample_n=16)
-    got = {
-        r["vec_id"]: (r["cell_id"], st.pack("d", r["_n"]))
-        for r in _np_ivf_assign_scan(
-            vecs, cent._cent_rows, "vec_id", "embedding", 8
+    tie = _signed_zero_corpus(spark)
+    for corpus, dim, cent in (
+        (vecs, 8, ivf_centroids(vecs, refine_iters=1, n_cells=4, sample_n=16)),
+        (tie, 2, ivf_centroids(tie, refine_iters=0, n_cells=2)),
+    ):
+        got = {
+            r["vec_id"]: (r["cell_id"], st.pack("d", r["_n"]))
+            for r in _np_ivf_assign_scan(
+                corpus, cent._cent_rows, "vec_id", "embedding", dim
+            ).collect()
+        }
+        want = {
+            r["vec_id"]: (r["cell_id"], st.pack("d", r["_n"]))
+            for r in ivf_assign(corpus, cent, "embedding", "vec_id", dim)
+            .withColumn("_n", l2_norm(F.col("embedding"), dim))
+            .collect()
+        }
+        assert got == want, dim
+
+
+def test_signed_zero_probe_matches_index_topk(spark):
+    """The driver-side probe ranks the rounded-0.0 tie like the
+    distributed probe window: query [1, 0] probes cell 1, so the
+    one-shot scan returns the rows of a reference index (expression
+    assign + _probe_topk) probing one cell."""
+    from publicationsretriever_spark.operators.similarity import (
+        IvfIndex,
+        ivf_assign,
+        ivf_centroids,
+        ivf_topk,
+    )
+
+    corpus = _signed_zero_corpus(spark)
+    queries = corpus.filter(F.col("vec_id") == 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
+    )
+    got = sorted(
+        tuple(r)
+        for r in ivf_topk(
+            corpus, queries, k=3, n_cells=2, nprobe=1, refine_iters=0
         ).collect()
-    }
-    want = {
-        r["vec_id"]: (r["cell_id"], st.pack("d", r["_n"]))
-        for r in ivf_assign(vecs, cent, "embedding", "vec_id", 8)
-        .withColumn("_n", l2_norm(F.col("embedding"), 8))
-        .collect()
-    }
+    )
+    cent = ivf_centroids(corpus, n_cells=2)
+    ix = IvfIndex(
+        cent,
+        ivf_assign(corpus, cent, "embedding", "vec_id", 2).withColumn(
+            "_n", l2_norm(F.col("embedding"), 2)
+        ),
+        "embedding",
+        "vec_id",
+        dim=2,
+    )
+    want = sorted(tuple(r) for r in ix.topk(queries, k=3, nprobe=1).collect())
+    assert len(want) == 3
     assert got == want
+
+
+def _empty_corpus_ops():
+    from publicationsretriever_spark.operators import similarity as S
+
+    top = ["query_id", "rank", "vec_id"]
+    return {
+        "brute_force_topk": (
+            lambda v, q: S.brute_force_topk(v, q, k=3), top + ["cos_sim"]
+        ),
+        "ivf_topk": (
+            lambda v, q: S.ivf_topk(v, q, k=3, n_cells=2, nprobe=1),
+            top + ["cos_sim"],
+        ),
+        "pq_topk": (
+            lambda v, q: S.pq_topk(v, q, k=3, m=2, n_codes=2),
+            top + ["adc_sim"],
+        ),
+        "ivfpq_topk": (
+            lambda v, q: S.ivfpq_topk(
+                v, q, k=3, n_cells=2, nprobe=1, m=2, n_codes=2
+            ),
+            top + ["adc_sim"],
+        ),
+        "ivfpq_topk_residual": (
+            lambda v, q: S.ivfpq_topk(
+                v, q, k=3, n_cells=2, nprobe=1, m=2, n_codes=2,
+                residual=True,
+            ),
+            top + ["adc_sim"],
+        ),
+        "sq_topk": (lambda v, q: S.sq_topk(v, q, k=3), top + ["sq_sim"]),
+        "binary_topk": (
+            lambda v, q: S.binary_topk(v, q, k=3), top + ["hamming"]
+        ),
+        "mrl_rerank_topk": (
+            lambda v, q: S.mrl_rerank_topk(v, q, d_prime=4, k=3),
+            top + ["cos_sim"],
+        ),
+        "lsh_topk": (lambda v, q: S.lsh_topk(v, q, k=3), top + ["cos_sim"]),
+        "semdedup_refine0": (
+            lambda v, q: S.semdedup(v, n_cells=2, refine_iters=0),
+            ["vec_id", "cell_id", "dup_of", "kept"],
+        ),
+        "semdedup_refine1": (
+            lambda v, q: S.semdedup(v, n_cells=2, refine_iters=1),
+            ["vec_id", "cell_id", "dup_of", "kept"],
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_empty_corpus_ops()))
+def test_ann_ops_on_empty_corpus(spark, vecs, op):
+    """An empty corpus gives every ANN top-k op and semdedup an empty
+    frame with the op's usual columns — not an unresolvable literal
+    table or a misleading dim error."""
+    fn, cols = _empty_corpus_ops()[op]
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    queries = vecs.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
+    )
+    out = fn(empty, queries)
+    assert out.columns == cols
+    assert out.collect() == []
