@@ -1830,7 +1830,7 @@ def _aspect_ladder_values() -> str:
 #: phash-hamming near-dup oracle
 _SIMHASH_SQL_CTE = """
             WITH toks AS (
-              SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS t FROM documents
+              SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t FROM documents
             ),
             th AS (SELECT doc_id, substr(md5(t), 1, 4) AS th FROM toks),
             bitsums AS (
@@ -2036,7 +2036,7 @@ def oracle_sql() -> dict[str, str]:
             FROM documents ORDER BY doc_id
         """,
         "dedup_minhash_lsh": """
-            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
+            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents),
             sh AS (
               SELECT doc_id, unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS sh
               FROM words WHERE len(w) >= 3
@@ -2073,7 +2073,7 @@ def oracle_sql() -> dict[str, str]:
             -- a doc's signature depends only on its own text, so
             -- banding ALL docs then splitting is identical to banding
             -- the corpus and batch separately
-            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
+            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents),
             sh AS (
               SELECT doc_id, unnest([array_to_string(w[i:i+2], ' ') for i in range(1, len(w)-1)]) AS sh
               FROM words WHERE len(w) >= 3
@@ -2113,7 +2113,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY vs, batch_id, match_id
         """,
         "dedup_ngram_jaccard": """
-            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
+            WITH words AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents),
             sh AS (
               SELECT DISTINCT doc_id, unnest([array_to_string(w[i:i+4], ' ') for i in range(1, len(w)-3)]) AS sh
               FROM words WHERE len(w) >= 5
@@ -2372,7 +2372,7 @@ def oracle_sql() -> dict[str, str]:
 
         "text_quality": """
             WITH d AS (
-              SELECT doc_id, text, string_split_regex(lower(trim(text)), '\s+') AS w,
+              SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS w,
                      length(text) AS n_chars_actual,
                      length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
               FROM documents
@@ -2462,7 +2462,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
         """,
         "lang_id": """
-            WITH d AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents),
+            WITH d AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM documents),
             sc AS (
               SELECT doc_id,
                  len(list_filter(w, x -> list_contains(['der','die','und','das','ein'], x))) AS s_de,

@@ -392,7 +392,10 @@ def filter_unseen(
     bloom_threshold: int = 2_000_000,
     fpp: float = 0.01,
 ) -> DataFrame:
-    """The production operator: bloom-prefiltered exact anti-join.
+    """Bloom-prefiltered exact anti-join that returns only the unseen
+    rows. The crawl engine runs :func:`mark_seen` instead; this one
+    serves the load-scaling workers (``tools/scaling_worker.py``,
+    ``tools/cluster_scaling_worker.py``).
 
     Below ``bloom_threshold`` seen-keys the sketch isn't worth its build
     pass and we do the plain anti-join. Above it: rows that the sketch

@@ -33,9 +33,11 @@ Scale design (10^10 frontier):
   next round (kills zipf-head skew; the reference instead serializes
   threads on the domain lock).
 - **DELTA state**: results/seen/payloads are APPEND-ONLY — each round
-  materializes only its delta (localCheckpoint or catalog append) and
-  the cumulative table is the union of immutable parts, compacted
-  every ``compact_every`` rounds. The seen deltas are exact-unique and
+  commits only its delta, through one store interface
+  (sources/catalog.py: ``SnapshotCatalog`` appends parquet parts,
+  ``MemoryCatalog`` localCheckpoints them) and one close sequence; the
+  cumulative table is the union of immutable parts, compacted once
+  ``compact_every`` parts accumulate. The seen deltas are exact-unique and
   pairwise disjoint by construction (the round's unseen survivors plus
   redirect-final hashes anti-joined against everything prior), so the
   union IS a set — no O(cumulative) distinct + rewrite per round.
@@ -45,22 +47,22 @@ Scale design (10^10 frontier):
 - all counters are groupBy aggregates merged into dimension tables
   (operators/blocking.py — the reference-exact A2/A3/A4 rules).
 - ONE metrics job per round (a union of tagged aggregates over warm
-  caches + materialized deltas) carries the per-partition lineage AND
-  the next-frontier count, so the driver never runs isEmpty()/count()
-  probe jobs between rounds.
+  caches, run alongside the round's close) carries the per-partition
+  lineage; the delta and next-frontier counts come from the store's
+  commit (parquet footers, or ``observe()`` on the checkpoint job), so
+  the driver never runs isEmpty()/count() probe jobs between rounds.
 """
 
 from __future__ import annotations
 
-import os
 import time as _time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import filters as FL
@@ -73,6 +75,7 @@ from ..operators.besturl import ladder_order, pick_best_url_per_id
 from . import stats as ST
 from ..operators import seen as SEEN
 from ..operators.seen import mark_seen
+from ..sources.catalog import MemoryCatalog
 from ..sources.synthetic_web import SyntheticWeb
 
 #: reference constants
@@ -204,6 +207,30 @@ class RoundOutput:
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
+
+
+#: the CrawlState tables a crawl starts with empty, and their schemas
+_EMPTY_STATE = {
+    "results": RESULT_SCHEMA,
+    "seen": "url_hash long",
+    "blocked_domains": "domain string",
+    "domain_counts": B.DOMAIN_COUNTS_SCHEMA,
+    "path_counts": B.PATH_COUNTS_SCHEMA,
+    "domain_flags": DOMAIN_FLAGS_SCHEMA,
+    "structure_model": "page_path string, structure string",
+    "path_model": PATH_MODEL_SCHEMA,
+    "fallback_pool": FALLBACK_POOL_SCHEMA,
+}
+#: every CrawlState field a state store holds as a table
+_STATE_TABLES = {f.name for f in fields(CrawlState)} - {
+    "blocked_paths", "seen_sketch", "sketch_meta", "metrics",
+}
+
+
+def _timed_collect(df: DataFrame) -> tuple[list, float]:
+    t = _time.time()
+    rows = df.collect()
+    return rows, round(_time.time() - t, 3)
 
 
 def _count_row(df: DataFrame, tag: str) -> DataFrame:
@@ -634,8 +661,8 @@ class CrawlEngine:
         _cut_secs = [0.0]  # cumulative eager-materialization time:
         # run_round wall minus this = pure driver-side plan
         # CONSTRUCTION (py4j + Catalyst analysis), the per-round fixed
-        # cost that does not shrink with executors (PR_TIMING surfaces
-        # the split in the crawl loop)
+        # cost that does not shrink with executors (the crawl loop
+        # records the split in each round's driver_phases)
 
         _cut_names: dict[str, float] = {}
 
@@ -1787,19 +1814,25 @@ class CrawlEngine:
     # ------------------------------------------------------------------
 
     def _fresh_state(self) -> CrawlState:
-        spark = self.spark
-        return CrawlState(
-            results=_empty(spark, RESULT_SCHEMA),
-            seen=_empty(spark, "url_hash long"),
-            blocked_domains=_empty(spark, "domain string"),
-            domain_counts=_empty(spark, B.DOMAIN_COUNTS_SCHEMA),
-            path_counts=_empty(spark, B.PATH_COUNTS_SCHEMA),
-            blocked_paths=_empty(spark, "domain string, path string"),
-            domain_flags=_empty(spark, DOMAIN_FLAGS_SCHEMA),
-            structure_model=_empty(spark, "page_path string, structure string"),
-            path_model=_empty(spark, PATH_MODEL_SCHEMA),
-            fallback_pool=_empty(spark, FALLBACK_POOL_SCHEMA),
+        return self._state_from({}, [])
+
+    def _state_from(
+        self, tables: dict[str, DataFrame], metrics: list[dict]
+    ) -> CrawlState:
+        """The CrawlState over a store's tables: a round's read-back or
+        a resumed snapshot. A table the store does not hold (a catalog
+        written before the table existed, or a fresh crawl) starts
+        empty; ``blocked_paths`` is a filter over ``path_counts``,
+        re-derived here and never stored."""
+        held = {n: df for n, df in tables.items() if n in _STATE_TABLES}
+        state = CrawlState(
+            **{n: _empty(self.spark, schema)
+               for n, schema in _EMPTY_STATE.items() if n not in held},
+            **held,
+            metrics=metrics,
         )
+        state.blocked_paths = B.eval_blocked_paths(state.path_counts)
+        return state
 
     def _maintain_seen_sketch(
         self,
@@ -1851,71 +1884,29 @@ class CrawlEngine:
         catalog=None,
         resume: bool = False,
     ) -> CrawlState:
-        """Run the round loop. With ``catalog`` set, every round commits
-        one snapshot (delta appends + dimension tables + lineage);
-        ``resume=True`` restores the latest snapshot and continues
-        exactly where it stopped — byte-identical to an uninterrupted
-        run (tested).
+        """Run the round loop. Every round commits one snapshot (delta
+        appends + dimension tables + lineage) to ``catalog``, or to an
+        in-memory ``MemoryCatalog`` when none is given; ``resume=True``
+        restores the catalog's latest snapshot and continues exactly
+        where it stopped — byte-identical to an uninterrupted run
+        (tested).
 
         Each round costs a FIXED number of driver actions regardless of
-        crawl age: one results-delta materialization (which computes the
-        round's caches), the remaining delta/dimension materializations
-        concurrently against warm caches, and ONE fused metrics job that
-        also yields the next-frontier count (no isEmpty probe). State
-        I/O is O(round delta), not O(cumulative): the union of immutable
-        delta parts is the cumulative table, compacted every
-        ``compact_every`` rounds."""
+        crawl age: the results delta and the two counter tables
+        materialize first (which computes the round's caches), the
+        remaining tables concurrently against warm caches, and ONE
+        fused metrics job overlapping all of them; the delta and
+        next-frontier counts ride the writes (no isEmpty probe). State
+        I/O is O(round delta), not O(cumulative): the union of
+        immutable delta parts is the cumulative table, compacted once
+        the parent snapshot holds ``compact_every`` parts."""
         spark = self.spark
-        start_round = 0
-        part_schemas = {
-            "results": RESULT_SCHEMA,
-            "seen": "url_hash long",
-            "payloads": "image_id string",
-        }
-        if self.record_order:
-            part_schemas["order_log"] = (
-                "round int, host string, url_hash long, planned_fetch_ms long"
-            )
-        if self.store_html:
-            part_schemas["pages_html"] = (
-                "url string, final_url string, html_hash string, "
-                "html_size long, round int"
-            )
-        parts: dict[str, list[DataFrame]] = {n: [] for n in part_schemas}
+        store = catalog if catalog is not None else MemoryCatalog()
         if resume:
-            manifest, tables = catalog.load(spark)
-            state = CrawlState(
-                results=tables["results"].cache(),
-                seen=tables["seen"].cache(),
-                blocked_domains=tables["blocked_domains"],
-                payloads=tables.get("payloads"),
-                domain_counts=tables.get("domain_counts"),
-                path_counts=tables.get("path_counts"),
-                blocked_paths=tables.get("blocked_paths"),
-                domain_flags=tables.get("domain_flags"),
-                structure_model=tables.get("structure_model"),
-                path_model=tables.get("path_model"),
-                fallback_pool=tables.get("fallback_pool"),
-                pages_html=tables.get("pages_html"),
-                order_log=tables.get("order_log"),
-                metrics=manifest["lineage"].get("rounds", []),
+            manifest, tables = store.load(spark)
+            state = self._state_from(
+                tables, manifest["lineage"].get("rounds", [])
             )
-            if state.domain_counts is None:
-                fresh = self._fresh_state()
-                state.domain_counts = fresh.domain_counts
-                state.path_counts = fresh.path_counts
-            if state.blocked_paths is None:
-                state.blocked_paths = B.eval_blocked_paths(state.path_counts)
-            if state.domain_flags is None:
-                state.domain_flags = _empty(spark, DOMAIN_FLAGS_SCHEMA)
-            if state.structure_model is None:
-                state.structure_model = _empty(
-                    spark, "page_path string, structure string"
-                )
-            if state.fallback_pool is None:
-                state.fallback_pool = _empty(spark, FALLBACK_POOL_SCHEMA)
-            if state.path_model is None:
-                state.path_model = _empty(spark, PATH_MODEL_SCHEMA)
             # A8 gate state round-trips through snapshot lineage
             if self.use_mla and state.metrics:
                 gate_lineage = state.metrics[-1].get("mla_gate")
@@ -1936,327 +1927,96 @@ class CrawlEngine:
                 .withColumn("structure", F.lit(None).cast("string"))
                 .withColumn("link_phase", F.lit(None).cast("string"))
             )
+            start_round = 0
             pending = None
 
-        def union_parts(name: str, schema: str) -> DataFrame:
-            dfs = parts[name]
-            if not dfs:
-                return _empty(spark, schema)
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out
-
+        # Narrow-coalesce the two union deltas before the close: the
+        # results and frontier deltas are unions of MANY per-branch
+        # frames, each carrying its own parallelism-sized partition
+        # slice (measured 384 and 194 partitions per round), so the
+        # close job AND every next-round scan pay hundreds of
+        # near-empty task dispatches. coalesce is shuffle-free and
+        # num_buckets scales with the configured cluster parallelism.
+        nb = self.num_buckets
         for rnd in range(start_round, max_rounds):
             if pending == 0:
                 break
             if pending is None and frontier.isEmpty():
                 break
-            _round_t0 = _time.time()
-            _t0 = _time.time()
-            _timing = os.environ.get("PR_TIMING") == "1"
+            round_t0 = _time.time()
             out = self.run_round(state, frontier, rnd)
+            built = _time.time() - round_t0
+            parent = store.latest()
+            compact = bool(parent) and len(
+                parent["tables"].get("results", {}).get("paths", [])
+            ) >= self.compact_every
+            # the fused metrics job reads only warm caches
+            # (staged/classified/links) and the delta counts come from
+            # the store, so it overlaps the whole close
+            with ThreadPoolExecutor(max_workers=1) as side:
+                metrics_job = side.submit(_timed_collect, out.metrics_df)
+                snap_id, table_meta, loaded = store.write_round(
+                    spark,
+                    deltas={
+                        **out.deltas,
+                        "results": out.deltas["results"].coalesce(nb),
+                    },
+                    fulls={
+                        **out.fulls,
+                        "frontier": out.next_frontier.coalesce(nb),
+                    },
+                    prior={n: getattr(state, n) for n in out.deltas},
+                    warm_first=("results", "domain_counts", "path_counts"),
+                    compact=compact,
+                )
+                rows, metrics_s = metrics_job.result()
+            prev_sketch, prev_meta = state.seen_sketch, state.sketch_meta
+            state = self._state_from(loaded, state.metrics)
+            frontier = loaded["frontier"]
+            out.finalize(rows, {
+                "results": table_meta["results"]["delta_rows"],
+                "seen": table_meta["seen"]["delta_rows"],
+                "frontier": table_meta["frontier"]["rows"],
+            })
+            # incremental J2 sketch over the round's seen delta part —
+            # O(delta) per round; a compacting round (cumulative
+            # rewrite, already O(age) by design) rebuilds it in full
+            t0 = _time.time()
+            seen_delta = None if compact else store.read_part(
+                spark, table_meta["seen"]["paths"][-1]
+            )
+            state.seen_sketch, state.sketch_meta = self._maintain_seen_sketch(
+                prev_sketch, prev_meta, state.seen, seen_delta,
+                state.metrics[-1]["seen_total"],
+            )
+            last = state.metrics[-1]
             # always-on driver-phase ledger (cheap time.time() deltas):
-            # the scaling bench reads it from metrics to split the
-            # per-round wall into fixed driver cost vs scalable work
-            _pb = _time.time() - _t0
-            _phases: dict = {
-                "construct": round(_pb - out.cut_secs, 3),
+            # the scaling bench reads it to split the per-round wall
+            # into fixed driver cost vs scalable work
+            last["driver_phases"] = {
+                "construct": round(built - out.cut_secs, 3),
                 "cuts": {
                     k: round(v, 3)
                     for k, v in (out.cut_breakdown or {}).items()
                 },
                 "cut_parts": dict(out.cut_parts or {}),
+                **store.walls,
+                "metrics": metrics_s,
+                "sketch": round(_time.time() - t0, 3),
             }
-            if _timing:
-                print(f"TIMING r{rnd} plan_build {_pb:.2f} "
-                      f"(construct {_pb - out.cut_secs:.2f}, "
-                      f"cut_exec {out.cut_secs:.2f})",
-                      flush=True)
-                _t0 = _time.time()
-
-            if catalog is not None:
-                compact = (
-                    len(catalog.latest()["tables"].get("results", {}).get("paths", []))
-                    >= self.compact_every
-                    if catalog.latest() else False
-                )
-                snap_id, table_meta, loaded = catalog.write_round(
-                    spark,
-                    deltas=out.deltas,
-                    fulls={**out.fulls, "frontier": out.next_frontier},
-                    prior={n: getattr(state, n) for n in out.deltas},
-                    warm_first="results",
-                    compact=compact,
-                )
-                prev_sketch, prev_meta = state.seen_sketch, state.sketch_meta
-                state = CrawlState(
-                    results=loaded["results"],
-                    seen=loaded["seen"],
-                    blocked_domains=loaded["blocked_domains"],
-                    payloads=loaded.get("payloads"),
-                    domain_counts=loaded["domain_counts"],
-                    path_counts=loaded["path_counts"],
-                    blocked_paths=B.eval_blocked_paths(loaded["path_counts"]),
-                    domain_flags=loaded["domain_flags"],
-                    structure_model=loaded["structure_model"],
-                    path_model=loaded["path_model"],
-                    fallback_pool=loaded["fallback_pool"],
-                    # optional delta tables must flow back into state:
-                    # the next round's compaction unions prior parts
-                    # via ``prior`` and would hit None otherwise
-                    pages_html=loaded.get("pages_html"),
-                    order_log=loaded.get("order_log"),
-                    metrics=state.metrics,
-                )
-                frontier = loaded["frontier"]
-                delta_counts = {
-                    "results": table_meta["results"]["delta_rows"],
-                    "seen": table_meta["seen"]["delta_rows"],
-                    "payloads": table_meta["payloads"]["delta_rows"],
-                    "frontier": table_meta["frontier"]["rows"],
-                }
-                rows = out.metrics_df.collect()
-                out.finalize(rows, delta_counts)
-                # incremental J2 sketch: non-compact rounds sketch ONLY
-                # the just-written delta file; compact rounds (cumulative
-                # rewrite, already O(age) by design) do a full rebuild
-                seen_delta_df = (
-                    spark.read.parquet(table_meta["seen"]["paths"][-1])
-                    if not compact and table_meta["seen"].get("paths")
-                    else None
-                )
-                state.seen_sketch, state.sketch_meta = (
-                    self._maintain_seen_sketch(
-                        prev_sketch, prev_meta, state.seen, seen_delta_df,
-                        state.metrics[-1]["seen_total"],
-                    )
-                )
-                # wall_sec must land BEFORE the manifest serializes the
-                # metrics — set afterwards it would never persist for
-                # the crawl's final round (flatness evidence reads it
-                # from lineage on resume)
-                state.metrics[-1]["wall_sec"] = round(
-                    _time.time() - _round_t0, 3
-                )
-                state.metrics[-1]["compacted"] = compact
-                catalog.finish_commit(
-                    snap_id, table_meta, rnd,
-                    {"rounds": state.metrics, "last": state.metrics[-1]},
-                )
-            else:
-                # LINEAGE TRUNCATION at the round boundary: without it
-                # each round's plan nests the whole previous round's DAG
-                # and analysis/codegen time grows super-linearly.
-                # warm-up cuts (results + counter dims) run first in a
-                # small pool of mutually-independent jobs; the remaining
-                # cuts then run concurrently against warm caches.
-                # delta cardinalities ride the checkpoint jobs as
-                # Observations (CollectMetrics): each count is computed
-                # DURING the cut's own materialization — zero extra scan
-                # jobs, and the fused metrics job no longer blocks on the
-                # slowest cut future (measured: the old count-union made
-                # the pool barrier max(cut)+metrics instead of max(...))
-                _obs: dict[str, Observation] = {}
-
-                def _observed(name: str, df: DataFrame) -> DataFrame:
-                    o = Observation()
-                    _obs[name] = o
-                    return df.observe(o, F.count(F.lit(1)).alias("n"))
-
-                _tp = _time.time()
-                # Narrow-coalesce the union deltas before the cut: the
-                # results and frontier deltas are unions of MANY
-                # per-branch frames, each carrying its own
-                # parallelism-sized partition slice (measured 384 and
-                # 194 partitions per round), so the checkpoint job AND
-                # every next-round scan pay hundreds of near-empty task
-                # dispatches — pure per-round fixed cost on a small
-                # executor count. coalesce is shuffle-free (one output
-                # task concatenates ~n_branches warm cached blocks) and
-                # the target is num_buckets, which scales with the
-                # configured cluster parallelism — a proportional cap,
-                # not a constant.
-                nb = self.num_buckets
-                # warm-up cuts: results + the two counter dims. The
-                # counter caches must be warm BEFORE the member pool
-                # below starts (members like blocked_domains/domain_flags
-                # read them; concurrent cold jobs would race to compute
-                # the same cached partitions and multiply the work —
-                # measured 5x slower on a multi-executor cluster). But
-                # the three warm-up frames share NO lazy subtree with
-                # each other (results is a union of selects over eager
-                # cuts; each counter is its own merge aggregation over
-                # cuts), so they overlap in a small pool instead of
-                # running serially (measured 4.3s serial at 8 executors
-                # -> max of the three).
-                _pre = {
-                    "results": _observed(
-                        "results", out.deltas["results"].coalesce(nb)
-                    ),
-                }
-                to_cut = {
-                    **{
-                        n: (_observed(n, df) if n in ("seen", "payloads") else df)
-                        for n, df in out.deltas.items()
-                        if n != "results"
-                    },
-                    "frontier": _observed(
-                        "frontier", out.next_frontier.coalesce(nb)
-                    ),
-                    **out.fulls,
-                }
-                for name in ("domain_counts", "path_counts"):
-                    if name in to_cut:
-                        _pre[name] = to_cut.pop(name)
-                cut = {}
-                if _timing:
-                    for name, df in _pre.items():
-                        _tt = _time.time()
-                        cut[name] = df.localCheckpoint(eager=True)
-                        _k = "results_ckpt" if name == "results" else f"ckpt_{name}"
-                        _phases[_k] = round(_time.time() - _tt, 3)
-                        print(f"TIMING r{rnd} ckpt:{name} {_time.time()-_tt:.2f}",
-                              flush=True)
-                    _t0 = _time.time()
-                else:
-                    _pwalls: dict[str, float] = {}
-
-                    def _pre_ckpt(name, df):
-                        _t = _time.time()
-                        r = df.localCheckpoint(eager=True)
-                        _pwalls[name] = round(_time.time() - _t, 3)
-                        return r
-
-                    with ThreadPoolExecutor(max_workers=len(_pre)) as prepool:
-                        _pfuts = {
-                            name: prepool.submit(_pre_ckpt, name, df)
-                            for name, df in _pre.items()
-                        }
-                        cut.update({n: f.result() for n, f in _pfuts.items()})
-                    _phases["results_ckpt"] = _pwalls.get("results", 0.0)
-                    for name in ("domain_counts", "path_counts"):
-                        if name in _pwalls:
-                            _phases[f"ckpt_{name}"] = _pwalls[name]
-                    _phases["warmup_pool"] = round(_time.time() - _tp, 3)
-                _mrows = None
-                _tp = _time.time()
-                if _timing:
-                    for name, df in to_cut.items():
-                        _tt = _time.time()
-                        cut[name] = df.localCheckpoint(eager=True)
-                        print(f"TIMING r{rnd} ckpt:{name} {_time.time()-_tt:.2f}",
-                              flush=True)
-                else:
-                    # the fused metrics job reads only warm caches
-                    # (staged/classified/links) — with the delta counts
-                    # riding the cuts as Observations it has NO dependency
-                    # on the cut futures, so it overlaps them fully and
-                    # the pool barrier is max(member walls), not
-                    # max(cuts)+metrics
-                    _fwalls: dict[str, float] = {}
-
-                    def _timed_ckpt(name, df):
-                        _t = _time.time()
-                        r = df.localCheckpoint(eager=True)
-                        _fwalls[name] = round(_time.time() - _t, 3)
-                        return r
-
-                    with ThreadPoolExecutor(max_workers=len(to_cut) + 1) as pool:
-                        futs = {
-                            name: pool.submit(_timed_ckpt, name, df)
-                            for name, df in to_cut.items()
-                        }
-
-                        def _metrics_job():
-                            return out.metrics_df.collect()
-
-                        _t_m = _time.time()
-                        _mfut = pool.submit(_metrics_job)
-                        cut.update({n: f.result() for n, f in futs.items()})
-                        _mrows = _mfut.result()
-                        _fwalls["metrics"] = round(_time.time() - _t_m, 3)
-                    _phases["pooled_members"] = _fwalls
-                _phases["pooled_ckpt"] = round(_time.time() - _tp, 3)
-                _phases["close_parts"] = {
-                    n: cut[n].rdd.getNumPartitions()
-                    for n in ("frontier", "seen", "results")
-                    if n in cut
-                }
-                if _timing:
-                    print(f"TIMING r{rnd} other_ckpt {_time.time()-_t0:.2f}",
-                          flush=True)
-                    _t0 = _time.time()
-                for name in parts:
-                    parts[name].append(cut[name])
-                # compaction: bound the number of union parts (and the
-                # per-round scan fan-in) without ever rewriting state
-                # more often than every compact_every rounds
-                _tp = _time.time()
-                compacted_now = len(parts["results"]) >= self.compact_every
-                if compacted_now:
-                    for name, schema in part_schemas.items():
-                        merged = union_parts(name, schema).localCheckpoint(eager=True)
-                        parts[name] = [merged]
-                _phases["compact"] = round(_time.time() - _tp, 3)
-                prev_sketch, prev_meta = state.seen_sketch, state.sketch_meta
-                state = CrawlState(
-                    results=union_parts("results", RESULT_SCHEMA),
-                    seen=union_parts("seen", "url_hash long"),
-                    blocked_domains=cut["blocked_domains"],
-                    payloads=union_parts("payloads", "image_id string"),
-                    domain_counts=cut["domain_counts"],
-                    path_counts=cut["path_counts"],
-                    blocked_paths=B.eval_blocked_paths(cut["path_counts"]),
-                    domain_flags=cut["domain_flags"],
-                    structure_model=cut["structure_model"],
-                    path_model=cut["path_model"],
-                    fallback_pool=cut["fallback_pool"],
-                    pages_html=(
-                        union_parts("pages_html", part_schemas["pages_html"])
-                        if self.store_html else None
-                    ),
-                    order_log=(
-                        union_parts("order_log", part_schemas["order_log"])
-                        if self.record_order else None
-                    ),
-                    metrics=state.metrics,
-                )
-                frontier = cut["frontier"]
-                # lineage aggregates were collected inside the pool
-                # (unless PR_TIMING serialized the cuts); the delta
-                # cardinalities come free from the cuts' Observations
-                rows = _mrows if _mrows is not None else out.metrics_df.collect()
-                delta_counts = {
-                    name: int(o.get["n"]) for name, o in _obs.items()
-                }
-                out.finalize(rows, delta_counts)
-                # incremental J2 sketch over this round's checkpointed
-                # seen delta (cut["seen"]) — O(delta) per round
-                _tp = _time.time()
-                state.seen_sketch, state.sketch_meta = (
-                    self._maintain_seen_sketch(
-                        prev_sketch, prev_meta, state.seen, cut["seen"],
-                        state.metrics[-1]["seen_total"],
-                    )
-                )
-                _phases["sketch"] = round(_time.time() - _tp, 3)
-                # flag the round that paid the amortized state rewrite:
-                # flatness evidence must separate the compaction cadence
-                # (O(cumulative) every compact_every rounds BY DESIGN)
-                # from steady-state per-round cost
-                state.metrics[-1]["compacted"] = compacted_now
-                if _timing:
-                    print(f"TIMING r{rnd} metrics {_time.time()-_t0:.2f}",
-                          flush=True)
-            # per-round wall for scaling-flatness evidence (delta state
-            # must keep round cost O(delta), not O(cumulative)); the
-            # catalog branch already recorded it pre-commit
-            state.metrics[-1].setdefault(
-                "wall_sec", round(_time.time() - _round_t0, 3)
+            # flag the round that paid the amortized state rewrite:
+            # flatness evidence must separate the compaction cadence
+            # (O(cumulative) every compact_every rounds BY DESIGN)
+            # from steady-state per-round cost
+            last["compacted"] = compact
+            # the per-round wall (scaling-flatness evidence) lands
+            # BEFORE the commit serializes the lineage, so it persists
+            # for the crawl's final round too
+            last["wall_sec"] = round(_time.time() - round_t0, 3)
+            store.finish_commit(
+                snap_id, table_meta, rnd, {"rounds": state.metrics, "last": last}
             )
-            state.metrics[-1]["driver_phases"] = _phases
-            pending = state.metrics[-1]["frontier_next"]
+            pending = last["frontier_next"]
         state.frontier = frontier
         # J4 end-of-crawl flush (handleLogOfRemainingUrls,
         # LoaderAndChecker.java:685-698): pool urls never checked —

@@ -12,6 +12,10 @@ catalog detects them and uses Iceberg tables when available
 (``iceberg_available()``), otherwise this parquet+manifest
 implementation provides the same commit/resume contract. The engine
 code is identical either way.
+
+``MemoryCatalog`` gives a crawl run without a catalog root the same
+round interface over driver memory (``localCheckpoint`` parts instead
+of files), so the crawl loop closes every round one way.
 """
 
 from __future__ import annotations
@@ -21,8 +25,10 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -36,6 +42,71 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _parent_part(parent_tables: dict, name: str) -> tuple[list[str], int]:
+    """(data-part paths, rows) of table ``name`` in the parent
+    snapshot's table meta; ([], 0) when the parent lacks the table."""
+    meta = parent_tables.get(name)
+    if not meta:
+        return [], 0
+    paths = meta.get("paths", [meta["path"]] if "path" in meta else [])
+    return paths, meta.get("rows", 0)
+
+
+def _manifest(
+    parent: dict | None, snap_id: str, table_meta: dict, round_no: int,
+    lineage: dict,
+) -> dict:
+    return {
+        "snapshot_id": snap_id,
+        "parent": parent["snapshot_id"] if parent else None,
+        "round": round_no,
+        "committed_at": time.time(),
+        "tables": table_meta,
+        "lineage": lineage,
+    }
+
+
+def _materialize(
+    write_one: Callable[[tuple[str, DataFrame]], tuple[str, dict, DataFrame]],
+    items: dict[str, DataFrame],
+    warm_first: str | tuple[str, ...] | None,
+) -> tuple[dict, dict[str, DataFrame], dict]:
+    """The round close both stores share: ``write_one`` over the
+    ``warm_first`` tables concurrently, then over all the others in one
+    pool. The crawl's warm-first tables are its results and its
+    ``.cache()``d counter tables, which share no lazy subtree; others
+    (blocked_domains) read the counters, and concurrent jobs over a
+    cold cache each compute the same cached partitions (no
+    per-partition cache lock), so the counters must be warm before
+    that pool starts.
+
+    Returns the table meta, the read-back tables and the walls in
+    seconds: ``warmup_pool`` and ``pooled_ckpt`` per group,
+    ``pooled_members`` per table."""
+    names = (warm_first,) if isinstance(warm_first, str) else warm_first or ()
+    first = {n: items[n] for n in names if n in items}
+    rest = {n: df for n, df in items.items() if n not in first}
+    members: dict[str, float] = {}
+
+    def timed(item):
+        t = time.time()
+        out = write_one(item)
+        members[item[0]] = round(time.time() - t, 3)
+        return out
+
+    written: list[tuple] = []
+    walls: dict = {"pooled_members": members}
+    for key, group in (("warmup_pool", first), ("pooled_ckpt", rest)):
+        t = time.time()
+        if group:
+            with ThreadPoolExecutor(max_workers=len(group)) as pool:
+                written.extend(pool.map(timed, group.items()))
+        walls[key] = round(time.time() - t, 3)
+    table_meta = {n: meta for n, meta, _ in written}
+    loaded = {n: back for n, _, back in written}
+    return table_meta, loaded, walls
+
+
 class SnapshotCatalog:
     """commit() appends an immutable snapshot; load() restores any
     snapshot's tables; resume = load(latest)."""
@@ -43,6 +114,8 @@ class SnapshotCatalog:
     def __init__(self, root: str):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
+        #: walls of the last ``write_round`` (see ``_materialize``)
+        self.walls: dict = {}
 
     # -- manifest helpers ---------------------------------------------------
 
@@ -102,15 +175,7 @@ class SnapshotCatalog:
         self, snap_id: str, table_meta: dict, round_no: int, lineage: dict
     ) -> str:
         """Phase 2: publish the snapshot (manifest = the atomic swap)."""
-        parent = self.latest()
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": parent["snapshot_id"] if parent else None,
-            "round": round_no,
-            "committed_at": time.time(),
-            "tables": table_meta,
-            "lineage": lineage,
-        }
+        manifest = _manifest(self.latest(), snap_id, table_meta, round_no, lineage)
         # two-phase publish: write to a temp file, then atomic rename —
         # a crash mid-write can never leave a truncated manifest behind
         # (the Iceberg metadata-swap atomicity contract)
@@ -126,7 +191,7 @@ class SnapshotCatalog:
         deltas: dict[str, DataFrame],
         fulls: dict[str, DataFrame],
         prior: dict[str, DataFrame] | None = None,
-        warm_first: str | None = None,
+        warm_first: str | tuple[str, ...] | None = None,
         compact: bool = False,
     ) -> tuple[str, dict, dict[str, DataFrame]]:
         """Iceberg-append-style commit: ``deltas`` tables write ONLY this
@@ -145,19 +210,10 @@ class SnapshotCatalog:
         parent = self.latest()
         parent_tables = parent["tables"] if parent else {}
 
-        def parent_paths(name: str) -> list[str]:
-            meta = parent_tables.get(name)
-            if not meta:
-                return []
-            return meta.get("paths", [meta["path"]] if "path" in meta else [])
-
-        def parent_rows(name: str) -> int:
-            meta = parent_tables.get(name)
-            return meta.get("rows", 0) if meta else 0
-
         def write_one(item):
             name, df = item
             is_delta = name in deltas
+            old_paths, old_rows = _parent_part(parent_tables, name)
             if is_delta and compact and prior is not None:
                 # a prior view the caller didn't carry (e.g. resuming a
                 # catalog written before the table existed) falls back
@@ -165,8 +221,8 @@ class SnapshotCatalog:
                 # never drop history just because the in-memory state
                 # lost the handle
                 p = prior.get(name)
-                if p is None and parent_paths(name):
-                    p = spark.read.parquet(*parent_paths(name))
+                if p is None and old_paths:
+                    p = spark.read.parquet(*old_paths)
                 if p is not None:
                     df = p.unionByName(df)
             path = snap_dir / name
@@ -174,29 +230,22 @@ class SnapshotCatalog:
             back = spark.read.parquet(str(path))
             n = back.count()  # parquet footer metadata — no plan recompute
             if is_delta and not compact:
-                paths = parent_paths(name) + [str(path)]
-                meta = {
-                    "paths": paths,
-                    "rows": parent_rows(name) + n,
-                    "delta_rows": n,
-                }
+                paths = old_paths + [str(path)]
+                meta = {"paths": paths, "rows": old_rows + n, "delta_rows": n}
                 return name, meta, spark.read.parquet(*paths)
             meta = {"paths": [str(path)], "rows": n}
             if is_delta:
-                meta["delta_rows"] = n - (parent_rows(name) if compact else 0)
+                meta["delta_rows"] = n - (old_rows if compact else 0)
             return name, meta, back
 
-        items = {**deltas, **fulls}
-        written = []
-        rest = dict(items)
-        if warm_first is not None and warm_first in rest:
-            written.append(write_one((warm_first, rest.pop(warm_first))))
-        if rest:
-            with ThreadPoolExecutor(max_workers=max(1, len(rest))) as pool:
-                written.extend(pool.map(write_one, rest.items()))
-        table_meta = {n: meta for n, meta, _ in written}
-        loaded = {n: back for n, _, back in written}
+        table_meta, loaded, self.walls = _materialize(
+            write_one, {**deltas, **fulls}, warm_first
+        )
         return snap_id, table_meta, loaded
+
+    def read_part(self, spark: SparkSession, path: str) -> DataFrame:
+        """One data part named in a snapshot's ``paths``."""
+        return spark.read.parquet(path)
 
     def commit(
         self,
@@ -262,7 +311,6 @@ class SnapshotCatalog:
         _, to_tables = self.load(spark, to_snapshot)
         new = to_tables[table]
         val_cols = [c for c in new.columns if c not in key_cols]
-        from pyspark.sql import functions as F
 
         def keyed_hash(df: DataFrame) -> DataFrame:
             # xxhash64 leaves its running seed UNCHANGED for NULL
@@ -326,3 +374,84 @@ class SnapshotCatalog:
             delta_keys.filter(F.col("change") == "removed"), old
         )
         return added_changed.unionByName(removed)
+
+
+class MemoryCatalog:
+    """The state store of a crawl run without a catalog root:
+    ``SnapshotCatalog``'s round interface (``latest``, ``write_round``,
+    ``read_part``, ``finish_commit``) over driver memory. Every table
+    of a round becomes one ``localCheckpoint``ed part (which also cuts
+    the round's plan lineage), its row count an ``observe()`` metric of
+    that same checkpoint job, and the manifests stay in the driver.
+    Part labels stand where the catalog keeps file paths, so the meta
+    and the compaction rule read the same for both stores."""
+
+    def __init__(self):
+        self._snaps: list[dict] = []
+        self._parts: dict[str, DataFrame] = {}
+        #: walls of the last ``write_round`` (see ``_materialize``)
+        self.walls: dict = {}
+
+    def latest(self) -> dict | None:
+        return self._snaps[-1] if self._snaps else None
+
+    def read_part(self, spark: SparkSession, path: str) -> DataFrame:
+        return self._parts[path]
+
+    def _union(self, paths: list[str]) -> DataFrame:
+        out = self._parts[paths[0]]
+        for p in paths[1:]:
+            out = out.unionByName(self._parts[p])
+        return out
+
+    def write_round(
+        self,
+        spark: SparkSession,
+        deltas: dict[str, DataFrame],
+        fulls: dict[str, DataFrame],
+        prior: dict[str, DataFrame] | None = None,
+        warm_first: str | tuple[str, ...] | None = None,
+        compact: bool = False,
+    ) -> tuple[str, dict, dict[str, DataFrame]]:
+        """``deltas`` append one part to the parent's parts (with
+        ``compact=True``, the parent's parts and the delta are
+        checkpointed as ONE part); ``fulls`` are checkpointed whole.
+        The store holds every part itself, so ``prior`` is unused."""
+        snap_id = f"snap-{len(self._snaps):05d}"
+        parent = self.latest()
+        parent_tables = parent["tables"] if parent else {}
+
+        def write_one(item):
+            name, df = item
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            paths, rows = (
+                _parent_part(parent_tables, name) if name in deltas else ([], 0)
+            )
+            if compact and paths:
+                df = self._union(paths).unionByName(df)
+                paths = []
+            label = f"{snap_id}/{name}"
+            self._parts[label] = df.localCheckpoint(eager=True)
+            n = int(obs.get["n"])
+            meta = {"paths": paths + [label], "rows": rows + n}
+            if name in deltas:
+                meta["delta_rows"] = n
+            return name, meta, self._union(meta["paths"])
+
+        table_meta, loaded, self.walls = _materialize(
+            write_one, {**deltas, **fulls}, warm_first
+        )
+        return snap_id, table_meta, loaded
+
+    def finish_commit(
+        self, snap_id: str, table_meta: dict, round_no: int, lineage: dict
+    ) -> str:
+        """Publish the round and drop the parts no table refers to any
+        more, so Spark can release their blocks."""
+        self._snaps.append(
+            _manifest(self.latest(), snap_id, table_meta, round_no, lineage)
+        )
+        live = {p for meta in table_meta.values() for p in meta["paths"]}
+        self._parts = {p: df for p, df in self._parts.items() if p in live}
+        return snap_id

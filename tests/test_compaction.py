@@ -44,3 +44,13 @@ def test_compaction_and_catalog_resume_across_boundary(spark, tmp_path):
     assert set(r[0] for r in resumed.seen.collect()) == set(
         r[0] for r in reference.seen.collect()
     )
+    # both stores close a round through one sequence: the per-round
+    # lineage (timings and the compaction cadence aside) is equal, and
+    # every round records the same driver-phase keys
+    lineage = ("frontier_in", "rejected", "fetched", "results",
+               "seen_total", "frontier_next", "remaining_evals",
+               "remaining_hits", "frontier_offsets", "fetch_counters")
+    assert len(resumed.metrics) == len(reference.metrics) == 5
+    for got, want in zip(resumed.metrics, reference.metrics):
+        assert {k: got[k] for k in lineage} == {k: want[k] for k in lineage}
+        assert set(got["driver_phases"]) == set(want["driver_phases"])

@@ -99,20 +99,39 @@ class HungWeb(SlowWeb):
         return _make_hung_factory()
 
 
+class UnhungWeb(HungWeb):
+    """HungWeb's seeds with the hang removed: /hang/ answers at once."""
+
+    def resolver_factory(self):
+        return _make_slow_factory()
+
+
 def test_watchdog_interrupts_a_hung_resolver(spark):
     """C6 is a true interrupt, not post-hoc classification: a resolver
     that sleeps 30s under a 100ms budget must neither stall the task
-    nor poison the fast rows' results."""
+    nor poison the fast rows' results.
+
+    The wall bound is relative: a 1-round crawl of the same seeds
+    without the hang is the baseline (it carries the host's fixed cost
+    of a round; the faster of two runs, so a cold session's one-off
+    code generation does not count), and the hung crawl may exceed it
+    by at most a third of the hang."""
     import time as _time
 
-    web = HungWeb()
-    engine = CrawlEngine(spark, web, num_buckets=4, request_budget_ms=100)
-    t0 = _time.time()
-    state = engine.crawl(web.seeds_df(spark), max_rounds=1)
-    rows = {r["id"]: (r["docOrDatasetUrl"], r["couldRetry"])
-            for r in state.results.collect()}
-    wall = _time.time() - t0
-    assert wall < 20, f"task stalled on the hung resolver ({wall:.1f}s)"
+    def timed_crawl(web):
+        engine = CrawlEngine(spark, web, num_buckets=4, request_budget_ms=100)
+        t0 = _time.time()
+        state = engine.crawl(web.seeds_df(spark), max_rounds=1)
+        rows = {r["id"]: (r["docOrDatasetUrl"], r["couldRetry"])
+                for r in state.results.collect()}
+        return rows, _time.time() - t0
+
+    baseline = min(timed_crawl(UnhungWeb())[1] for _ in range(2))
+    rows, wall = timed_crawl(HungWeb())
+    assert wall < baseline + 10, (
+        f"task stalled on the hung resolver ({wall:.1f}s vs "
+        f"{baseline:.1f}s without the hang)"
+    )
     assert rows["hung::000"] == ("unreachable", "true")
     assert rows["fast::000"][0] != "unreachable"
 

@@ -1,0 +1,25 @@
+"""Every program module compiles with warnings turned into errors: an
+invalid escape such as '\\s' in a non-raw literal is a SyntaxWarning
+today and a SyntaxError in a later Python, and in the frozen oracle SQL
+it would silently change the string the oracle runs."""
+
+from __future__ import annotations
+
+import warnings
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+SOURCES = [ROOT / "__spark_entry__.py", ROOT / "bench.py"] + sorted(
+    (ROOT / "publicationsretriever_spark").rglob("*.py")
+)
+
+
+@pytest.mark.parametrize(
+    "path", SOURCES, ids=[str(p.relative_to(ROOT)) for p in SOURCES]
+)
+def test_compiles_without_warnings(path):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(path.read_text(), str(path), "exec")

@@ -337,18 +337,11 @@ def main() -> None:
     def _phase_sum(p: dict | None) -> float | None:
         if not p:
             return None
-        tot = p.get("construct", 0.0)
-        if "warmup_pool" in p:
-            # the results/domain_counts/path_counts cuts overlap in a
-            # pool — their per-member walls would double-count; the
-            # pool wall is the driver-time actually spent
-            keys = ("warmup_pool", "pooled_ckpt", "compact", "sketch")
-        else:
-            keys = ("results_ckpt", "ckpt_domain_counts",
-                    "ckpt_path_counts", "pooled_ckpt", "compact", "sketch")
-        for k in keys:
-            tot += p.get(k) or 0.0
-        return round(tot, 3)
+        # the close's tables (and the metrics job) overlap in pools —
+        # their per-member walls would double-count; the pool walls
+        # are the driver time actually spent
+        keys = ("construct", "warmup_pool", "pooled_ckpt", "sketch")
+        return round(sum(p[k] for k in keys), 3)
 
     k_lo, k_hi = LEVELS["N"] * EXEC_CORES, LEVELS["4N"] * EXEC_CORES
     fixed_solved = []
