@@ -37,17 +37,18 @@ def _load(spark: SparkSession, sf_dir: str, *names: str) -> None:
     is derived from input size and the session's parallelism, never a
     constant: tiny tables (region/nation) keep one partition, and on
     a real deployment where the input is already many files/row
-    groups (est_splits >= target) this is a no-op."""
-    import os
-
+    groups (est_splits >= target) this is a no-op. The size comes
+    from the Hadoop FileSystem the scan itself reads through, so a
+    ``file://`` or remote URI sizes like a plain path and a directory
+    of parts sizes as the sum of its files."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
     para = spark.sparkContext.defaultParallelism
     for n in names:
         path = f"{sf_dir}/{n}.parquet"
         df = spark.read.parquet(path)
-        try:
-            sz = os.path.getsize(path)
-        except OSError:
-            sz = 0
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        sz = hpath.getFileSystem(hconf).getContentSummary(hpath).getLength()
         est_splits = max(1, sz // (128 << 20))
         target = min(para, max(1, sz // (32 << 10)))
         if target > est_splits:

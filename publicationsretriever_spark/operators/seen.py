@@ -334,16 +334,19 @@ def mark_seen(
     out_col: str = "_seen",
     sketch_state: tuple[DataFrame, int, int, int] | None = None,
 ) -> DataFrame:
-    """One-shuffle variant of :func:`filter_unseen` that KEEPS both
-    sides: adds ``out_col`` (True = key present in ``seen``). The crawl
-    engine needs both partitions of the frontier (unseen -> fetch,
-    seen -> duplicate log, LoaderAndChecker.java:627-633), and a single
-    left join with a marker costs one shuffle where an anti-join plus a
-    semi-join would cost two over the same data.
+    """Mark every frontier row with whether its key is in ``seen``:
+    adds ``out_col`` (True = key present in ``seen``) and KEEPS both
+    sides. The crawl engine needs both partitions of the frontier
+    (unseen -> fetch, seen -> duplicate log,
+    LoaderAndChecker.java:627-633), and a single left join with a
+    marker costs one shuffle where an anti-join plus a semi-join would
+    cost two over the same data; a caller that wants only the unseen
+    rows filters on ``~out_col``.
 
-    Same bloom fast path as ``filter_unseen``: rows the broadcast sketch
-    proves unseen skip the exact join entirely (they can never be
-    duplicates — bloom has no false negatives).
+    Bloom fast path: rows the broadcast sketch proves unseen skip the
+    exact join entirely (they can never be duplicates — bloom has no
+    false negatives); only "maybe seen" rows shuffle into the exact
+    marker join.
 
     Size dispatch (the engine's default path at every scale):
     ``seen_count < bloom_threshold`` -> plain exact join;
@@ -382,33 +385,3 @@ def mark_seen(
     )
     maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     return definitely_new.unionByName(exact(maybe))
-
-
-def filter_unseen(
-    frontier: DataFrame,
-    seen: DataFrame,
-    key_col: str = "url_hash",
-    seen_count: int | None = None,
-    bloom_threshold: int = 2_000_000,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Bloom-prefiltered exact anti-join that returns only the unseen
-    rows. The crawl engine runs :func:`mark_seen` instead; this one
-    serves the load-scaling workers (``tools/scaling_worker.py``,
-    ``tools/cluster_scaling_worker.py``).
-
-    Below ``bloom_threshold`` seen-keys the sketch isn't worth its build
-    pass and we do the plain anti-join. Above it: rows that the sketch
-    proves unseen skip the join entirely (union back at the end); only
-    "maybe seen" rows shuffle into the exact anti-join.
-    """
-    if seen_count is None:
-        seen_count = seen.count()
-    if seen_count < bloom_threshold:
-        return anti_join_seen(frontier, seen, key_col)
-    sketch = build_bloom(seen, key_col, capacity=seen_count, fpp=fpp)
-    probed = probe_bloom(frontier, key_col, sketch)
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = anti_join_seen(maybe, seen, key_col)
-    return definitely_new.unionByName(confirmed_new)

@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 from publicationsretriever_spark.operators.besturl import pick_best_url_per_id
 from publicationsretriever_spark.operators.seen import (
     BloomSketch,
-    anti_join_seen,
     build_bloom,
-    filter_unseen,
     probe_bloom,
 )
 
@@ -70,21 +68,6 @@ def test_bloom_merge_is_union():
     b.add(kb)
     merged = a.merge(b)
     assert merged.contains(ka).all() and merged.contains(kb).all()
-
-
-def test_filter_unseen_equivalence(spark):
-    """Sketch-prefiltered path must equal the exact anti-join (J2)."""
-    frontier = spark.range(0, 10_000).select(
-        F.col("id").alias("url_hash"), (F.col("id") % 7).alias("payload")
-    )
-    seen = spark.range(0, 10_000, 3).select(F.col("id").alias("url_hash"))
-    exact = set(r[0] for r in anti_join_seen(frontier, seen).collect())
-    combined = set(
-        r[0]
-        for r in filter_unseen(frontier, seen, bloom_threshold=0).collect()
-    )
-    assert combined == exact
-    assert len(exact) == 10_000 - len(range(0, 10_000, 3))
 
 
 def test_mark_seen_equivalence(spark):

@@ -20,6 +20,10 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
+
+from bench_cluster_scaling import replace_section  # noqa: E402
+
 MARK = "## ANN recall"
 
 
@@ -167,16 +171,7 @@ def main() -> None:
         lines.append(
             f"| {name} | {r['recall_at_k']} | {r['min_query_recall']} |"
         )
-    section = "\n".join(lines) + "\n"
-    md_path = bench / "BASELINE.md"
-    md = md_path.read_text()
-    if MARK in md:
-        head, _, tail = md.partition(MARK)
-        rest = tail.split("\n## ", 1)
-        md = head + section + ("\n## " + rest[1] if len(rest) > 1 else "")
-    else:
-        md = md.rstrip() + "\n\n" + section
-    md_path.write_text(md)
+    replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps(result, indent=2))
 
 

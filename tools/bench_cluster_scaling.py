@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -160,8 +161,10 @@ def stop_cluster() -> None:
             pass
 
 
-def run_level(n_exec: int, n_urls: int, n_hosts: int, pages_max: int,
-              env: dict | None = None) -> dict:
+def submit(n_exec: int, worker: str, args: list, env: dict | None = None) -> dict:
+    """spark-submit tools/<worker> with ``args`` to the standalone
+    master at ``n_exec`` executors (package via --py-files) and return
+    the json of its last `RESULT` line."""
     out = sh(
         [
             f"{SPARK_HOME}/bin/spark-submit",
@@ -175,13 +178,36 @@ def run_level(n_exec: int, n_urls: int, n_hosts: int, pages_max: int,
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.local.dir=/dev/shm/spark-tmp",
             "--py-files", str(REPO / "build/publicationsretriever_spark.zip"),
-            str(REPO / "tools/cluster_scaling_worker.py"),
-            str(n_exec), str(n_urls), str(n_hosts), str(pages_max),
+            str(REPO / "tools" / worker),
+            *(str(a) for a in args),
         ],
         env=env,
     )
     line = [l for l in out.splitlines() if l.startswith("RESULT ")][-1]
     return json.loads(line[len("RESULT "):])
+
+
+def run_level(n_exec: int, n_urls: int, n_hosts: int, pages_max: int,
+              env: dict | None = None) -> dict:
+    return submit(
+        n_exec, "cluster_scaling_worker.py",
+        [n_exec, n_urls, n_hosts, pages_max], env=env,
+    )
+
+
+def replace_section(md_path: Path, mark: str, section: str) -> None:
+    """Replace the ``mark`` heading's section of ``md_path`` — the text
+    from the heading up to the next ``## `` heading — with ``section``,
+    or append ``section`` when no line is that heading."""
+    md = md_path.read_text()
+    section = section.rstrip("\n") + "\n"
+    head = re.search(f"^{re.escape(mark)}$", md, re.M)
+    if head is None:
+        md = md.rstrip() + "\n\n" + section
+    else:
+        nxt = md.find("\n## ", head.end())
+        md = md[:head.start()] + section + (md[nxt:] if nxt != -1 else "")
+    md_path.write_text(md)
 
 
 def main() -> None:
@@ -487,7 +513,7 @@ baseline is throughput-bound, not idle-dominated.
 
 **Job 1 — frontier load stage** ({lo['n_urls']:,} synthesized URLs
 through filter battery -> canonicalize (Arrow UDF) -> hash/bucket ->
-in-round dedup -> seen anti-join -> best-url-per-id ->
+in-round dedup -> seen probe -> best-url-per-id ->
 politeness/quota windows):
 
 | cluster size | wall (s) | checked URLs/sec |

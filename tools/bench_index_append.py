@@ -21,7 +21,9 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
+from bench_cluster_scaling import replace_section  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 MARK = "## ANN index append cost"
@@ -134,18 +136,7 @@ def main() -> None:
                 f"{k['append_wall']} | {k['rebuild_wall']} | "
                 f"{k['append_vs_rebuild']} |"
             )
-    lines.append("")
-
-    baseline = bench / "BASELINE.md"
-    text = baseline.read_text()
-    if MARK in text:
-        head, _, rest = text.partition(MARK)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt + 1:] if nxt != -1 else ""
-        text = head + "\n".join(lines) + tail
-    else:
-        text = text.rstrip() + "\n\n" + "\n".join(lines) + "\n"
-    baseline.write_text(text)
+    replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps({
         s: {k: results[s][k]["append_vs_rebuild"]
             for k in ("ivf", "ivfpq")}

@@ -1,20 +1,35 @@
 """Two-cluster-size scaling for the BATCH training-pipeline operators
 (the crawl path's evidence lives in BENCH/scaling.json; this covers
-the dataset side: minhash/ngram dedup, span dedup, gate battery,
-prefix-sum sharding).
+the dataset side). One suite of operators per run:
+
+  ops   minhash/ngram dedup, span dedup, gate battery, prefix-sum
+        sharding                      -> "## Batch-ops scaling",
+                                         BENCH/ops_scaling.json
+  ops5  duplicated-span removal, benchmark decontamination, n-gram LM
+        scoring, token-mass mixing    -> "## Round-5 ops scaling",
+                                         BENCH/ops5_scaling.json
+  ops6  incremental band-index dedup, aspect bucket batching,
+        WebDataset shard planning, epoch shuffle, recrawl scheduling
+                                      -> "## Round-5 later-ops scaling",
+                                         BENCH/ops6_scaling.json
+  ops7  Z-order layout + manifest, cross-modal retrieval recall@k,
+        conditional-GET revalidation merge
+                                      -> "## Round-5 closing-ops scaling",
+                                         BENCH/ops7_scaling.json
+
+Each suite writes its own json and replaces only its own section of
+BENCH/BASELINE.md, so one suite's rerun never overwrites another's
+committed evidence.
 
 Same protocol as tools/bench_cluster_scaling.py: a standalone master +
-worker on localhost, the IDENTICAL job (tools/ops_scaling_worker.py,
-package via --py-files) submitted at N and 4N single-core executors,
-interleaved N/4N pairs with best-of per level (this host's per-core
-speed drifts ~40%/hour — only interleaved comparisons are valid).
-Identical task set at both levels (fixed shuffle partitions,
+worker on localhost, the IDENTICAL job (tools/ops_scaling_worker.py
+<suite>, package via --py-files) submitted at N and 4N single-core
+executors, interleaved N/4N pairs with best-of per level (this host's
+per-core speed drifts ~40%/hour — only interleaved comparisons are
+valid). Identical task set at both levels (fixed shuffle partitions,
 size-driven AQE coalescing), so only concurrency differs.
 
-Writes BENCH/ops_scaling.json and the "## Batch-ops scaling" section
-of BENCH/BASELINE.md.
-
-Usage: python tools/bench_ops_scaling.py [n_docs] [repeats]
+Usage: python tools/bench_ops_scaling.py <suite> [n_docs] [repeats]
 """
 
 from __future__ import annotations
@@ -28,50 +43,78 @@ sys.path.insert(0, str(REPO / "tools"))
 
 from bench_cluster_scaling import (  # noqa: E402
     LEVELS,
-    MASTER,
-    SPARK_HOME,
     hardware_ceiling,
-    sh,
+    replace_section,
     start_cluster,
     stop_cluster,
+    submit,
 )
 
-MARK = "## Batch-ops scaling"
+_PROTOCOL = (
+    "on the same standalone cluster protocol at {lo} vs {hi} "
+    "single-core executors ({n_docs} synthesized docs, interleaved "
+    "pairs best-of per level). Results identical across levels "
+    "(checked: {checked})."
+)
 
-
-def run_level(n_exec: int, n_docs: int) -> dict:
-    out = sh(
-        [
-            f"{SPARK_HOME}/bin/spark-submit",
-            "--master", MASTER,
-            "--conf", f"spark.cores.max={n_exec}",
-            "--conf", "spark.executor.cores=1",
-            "--conf", "spark.executor.memory=6g",
-            "--conf", "spark.executor.extraJavaOptions=-XX:ActiveProcessorCount=1",
-            "--conf", "spark.ui.enabled=false",
-            "--conf", "spark.local.dir=/dev/shm/spark-tmp",
-            "--py-files", str(REPO / "build/publicationsretriever_spark.zip"),
-            str(REPO / "tools/ops_scaling_worker.py"),
-            str(n_exec), str(n_docs),
-        ]
-    )
-    line = [l for l in out.splitlines() if l.startswith("RESULT ")][-1]
-    return json.loads(line[len("RESULT "):])
+#: suite -> (BASELINE.md heading, BENCH json name, section blurb)
+SUITES = {
+    "ops": (
+        "## Batch-ops scaling",
+        "ops_scaling.json",
+        "The dataset-side counterpart of the crawl scaling evidence: the "
+        "heavy training-pipeline operators submitted to the same "
+        "standalone cluster at {lo} vs {hi} single-core executors "
+        "(identical task set, {n_docs} synthesized docs, interleaved "
+        "pairs best-of per level). Results are identical across levels "
+        "(checked: {checked}).",
+    ),
+    "ops5": (
+        "## Round-5 ops scaling",
+        "ops5_scaling.json",
+        "Scaling evidence for the ROUND-5 batch operators (span "
+        "removal, decontamination, LM scoring, mixing) " + _PROTOCOL,
+    ),
+    "ops6": (
+        "## Round-5 later-ops scaling",
+        "ops6_scaling.json",
+        "Scaling evidence for the ROUND-5 later operators (incremental "
+        "band-index dedup, aspect bucketing, WebDataset shard plan, "
+        "epoch shuffle, recrawl scheduling) " + _PROTOCOL,
+    ),
+    "ops7": (
+        "## Round-5 closing-ops scaling",
+        "ops7_scaling.json",
+        "Scaling evidence for the ROUND-5 closing operators (Z-order "
+        "layout + manifest, retrieval recall@k, revalidation merge) "
+        + _PROTOCOL,
+    ),
+}
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 64000
-    repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 2
+    if len(sys.argv) < 2 or sys.argv[1] not in SUITES:
+        sys.exit(f"usage: bench_ops_scaling.py {{{'|'.join(SUITES)}}} "
+                 "[n_docs] [repeats]")
+    suite = sys.argv[1]
+    mark, json_name, blurb = SUITES[suite]
+    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 64000
+    repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     lo, hi = LEVELS["N"], LEVELS["4N"]
     factor = hi / lo
+
+    def run_level(n_exec: int) -> dict:
+        return submit(
+            n_exec, "ops_scaling_worker.py", [suite, n_exec, n_docs]
+        )
 
     hw = hardware_ceiling()
     start_cluster()
     runs: list[tuple[int, dict]] = []
     try:
         for _ in range(repeats):  # interleaved lo/hi pairs
-            runs.append((lo, run_level(lo, n_docs)))
-            runs.append((hi, run_level(hi, n_docs)))
+            runs.append((lo, run_level(lo)))
+            runs.append((hi, run_level(hi)))
     finally:
         stop_cluster()
 
@@ -115,17 +158,13 @@ def main() -> None:
         ],
     }
     bench = REPO / "BENCH"
-    (bench / "ops_scaling.json").write_text(json.dumps(result, indent=2))
+    (bench / json_name).write_text(json.dumps(result, indent=2))
 
-    lines = [MARK, ""]
-    lines.append(
-        "The dataset-side counterpart of the crawl scaling evidence: the "
-        "heavy training-pipeline operators submitted to the same "
-        f"standalone cluster at {lo} vs {hi} single-core executors "
-        f"(identical task set, {n_docs} synthesized docs, interleaved "
-        "pairs best-of per level). Results are identical across levels "
-        f"(checked: {result['counts_equal_across_levels']})."
-    )
+    lines = [mark, ""]
+    lines.append(blurb.format(
+        lo=lo, hi=hi, n_docs=n_docs,
+        checked=result["counts_equal_across_levels"],
+    ))
     lines.append("")
     lines.append("| op | wall N (s) | wall 4N (s) | raw eff | normalized |")
     lines.append("|---|---|---|---|---|")
@@ -139,16 +178,7 @@ def main() -> None:
         f"**{result['scaling_efficiency_total_raw']}** | "
         f"**{result['scaling_efficiency_total_normalized']}** |"
     )
-    section = "\n".join(lines) + "\n"
-    md_path = bench / "BASELINE.md"
-    md = md_path.read_text()
-    if MARK in md:
-        head, _, tail = md.partition(MARK)
-        rest = tail.split("\n## ", 1)
-        md = head + section + ("\n## " + rest[1] if len(rest) > 1 else "")
-    else:
-        md = md.rstrip() + "\n\n" + section
-    md_path.write_text(md)
+    replace_section(bench / "BASELINE.md", mark, "\n".join(lines))
     print(json.dumps({k: v for k, v in result.items() if k != "all_runs"}, indent=2))
 
 

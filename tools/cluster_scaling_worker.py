@@ -12,7 +12,7 @@ Two measured jobs, identical input at every cluster size:
 1. LOAD STAGE at scale — `n_urls` synthesized URLs (JVM-side from
    spark.range: zipfian hosts, battery-reject mix) through the full
    frontier preparation: filter battery -> clean/canonicalize (Arrow
-   UDF) -> hash/bucket -> in-round dedup -> seen anti-join ->
+   UDF) -> hash/bucket -> in-round dedup -> seen probe (mark_seen) ->
    best-url-per-id -> politeness/quota windows. Metric: checked URLs/s.
 2. FULL CRAWL on the hermetic synthetic web — 2 rounds incl. fetch
    mapInPandas + the real HTML page stage. Metric: fetched URLs/sec +
@@ -105,36 +105,57 @@ def synth_urls(spark, n: int, parts: int, hot_host_pct: int = 0):
     )
 
 
-def run_load_stage(spark, n_urls: int, parts: int) -> dict:
-    from pyspark.sql import Window
+def _load_inputs(spark, n_urls: int, parts: int):
+    """The load job's engine and its seen table: ``n_urls // 2`` keys
+    hashed from urls the synthesized frontier never contains."""
     from pyspark.sql import functions as F
 
-    from publicationsretriever_spark.functions import urls as U
-    from publicationsretriever_spark.operators.besturl import pick_best_url_per_id
-    from publicationsretriever_spark.operators.seen import filter_unseen
     from publicationsretriever_spark.plans.rounds import CrawlEngine
     from publicationsretriever_spark.sources.synthetic_web import SyntheticWeb
 
     web = SyntheticWeb(seed=1, n_hosts=2, pages_per_host_max=2)
     engine = CrawlEngine(spark, web, num_buckets=parts)
-    seeds = synth_urls(spark, n_urls, parts)
     seen = spark.range(0, n_urls // 2, 1, parts).select(
         F.xxhash64(F.concat(F.lit("https://hostx.example.org/a/"), F.col("id"))).alias("url_hash")
     )
+    return engine, seen
 
-    def job():
-        staged = engine.prepare_frontier(
-            seeds.withColumn("depth", F.lit(0)).withColumn("kind", F.lit("seed")),
-            round_no=0,
-        )
-        ok = staged.filter(F.col("reject_reason").isNull())
-        w = Window.partitionBy("url_hash").orderBy("order_in_id", "id")
-        ok = ok.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-        unseen = filter_unseen(ok, seen, "url_hash", seen_count=n_urls // 2)
-        best = pick_best_url_per_id(unseen).filter(F.col("is_best"))
-        wq = Window.partitionBy("top3").orderBy("priority", "url_hash")
-        sched = best.withColumn("_slot", F.row_number().over(wq))
-        return sched.select(F.count(F.lit(1))).collect()[0][0]
+
+def load_job(engine, seeds, seen, seen_count: int) -> int:
+    """The measured load job over ``seeds``; returns the scheduled row
+    count. The seen probe is the crawl's own operator (``mark_seen``,
+    keeping the rows it marks unseen)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from publicationsretriever_spark.operators.besturl import pick_best_url_per_id
+    from publicationsretriever_spark.operators.seen import mark_seen
+
+    staged = engine.prepare_frontier(
+        seeds.withColumn("depth", F.lit(0)).withColumn("kind", F.lit("seed")),
+        round_no=0,
+    )
+    ok = staged.filter(F.col("reject_reason").isNull())
+    w = Window.partitionBy("url_hash").orderBy("order_in_id", "id")
+    ok = ok.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+    unseen = (
+        mark_seen(ok, seen, "url_hash", seen_count=seen_count)
+        .filter(~F.col("_seen"))
+        .drop("_seen")
+    )
+    best = pick_best_url_per_id(unseen).filter(F.col("is_best"))
+    wq = Window.partitionBy("top3").orderBy("priority", "url_hash")
+    sched = best.withColumn("_slot", F.row_number().over(wq))
+    return sched.select(F.count(F.lit(1))).collect()[0][0]
+
+
+def run_load_stage(spark, n_urls: int, parts: int) -> dict:
+    from pyspark.sql import functions as F
+
+    from publicationsretriever_spark.functions import urls as U
+
+    engine, seen = _load_inputs(spark, n_urls, parts)
+    seeds = synth_urls(spark, n_urls, parts)
 
     # warm-up pays codegen AND Python-worker startup on every executor
     # (the canonicalize UDF must actually EXECUTE: .count() alone would
@@ -151,7 +172,7 @@ def run_load_stage(spark, n_urls: int, parts: int) -> dict:
     walls = []
     for _ in range(2):
         t0 = time.time()
-        n_sched = job()
+        n_sched = load_job(engine, seeds, seen, n_urls // 2)
         walls.append(time.time() - t0)
     wall = min(walls)
     return {
@@ -168,33 +189,10 @@ def run_skew_stress(spark, n_urls: int, parts: int) -> dict:
     urls live on one host vs the uniform-ish baseline. Reports the
     wall ratio — the cost of the politeness design point that one
     host's schedulable rows rank inside one task."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from publicationsretriever_spark.operators.besturl import pick_best_url_per_id
-    from publicationsretriever_spark.operators.seen import filter_unseen
-    from publicationsretriever_spark.plans.rounds import CrawlEngine
-    from publicationsretriever_spark.sources.synthetic_web import SyntheticWeb
-
-    web = SyntheticWeb(seed=1, n_hosts=2, pages_per_host_max=2)
-    engine = CrawlEngine(spark, web, num_buckets=parts)
-    seen = spark.range(0, n_urls // 2, 1, parts).select(
-        F.xxhash64(F.concat(F.lit("https://hostx.example.org/a/"), F.col("id"))).alias("url_hash")
-    )
+    engine, seen = _load_inputs(spark, n_urls, parts)
 
     def job(seeds):
-        staged = engine.prepare_frontier(
-            seeds.withColumn("depth", F.lit(0)).withColumn("kind", F.lit("seed")),
-            round_no=0,
-        )
-        ok = staged.filter(F.col("reject_reason").isNull())
-        w = Window.partitionBy("url_hash").orderBy("order_in_id", "id")
-        ok = ok.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-        unseen = filter_unseen(ok, seen, "url_hash", seen_count=n_urls // 2)
-        best = pick_best_url_per_id(unseen).filter(F.col("is_best"))
-        wq = Window.partitionBy("top3").orderBy("priority", "url_hash")
-        sched = best.withColumn("_slot", F.row_number().over(wq))
-        return sched.select(F.count(F.lit(1))).collect()[0][0]
+        return load_job(engine, seeds, seen, n_urls // 2)
 
     # INTERLEAVED arms (VERDICT r4 item 2): the first cut ran uniform
     # fully, then hot30 minutes later — on a shared host with ~40%/hour

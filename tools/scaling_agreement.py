@@ -17,9 +17,14 @@ Usage: python tools/scaling_agreement.py
 from __future__ import annotations
 
 import json
+import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO / "tools"))
+
+from bench_cluster_scaling import replace_section  # noqa: E402
+
 MARK = "## Topology agreement"
 
 
@@ -188,18 +193,7 @@ def main() -> None:
             "the 100 TB operating point), fetched-URLs/sec efficiency: "
             + "; ".join(parts) + "."
         )
-    section = "\n".join(lines) + "\n"
-
-    md_path = bench / "BASELINE.md"
-    md = md_path.read_text()
-    if MARK in md:
-        head, _, tail = md.partition(MARK)
-        # the section runs to the next H2 or EOF
-        rest = tail.split("\n## ", 1)
-        md = head + section + ("\n## " + rest[1] if len(rest) > 1 else "")
-    else:
-        md = md.rstrip() + "\n\n" + section
-    md_path.write_text(md)
+    replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps(rows, indent=2))
 
 
