@@ -2,23 +2,32 @@
 approximate cosine top-k (brute force, sign-LSH, IVF, PQ, IVF-PQ, SQ8,
 binary, Matryoshka), the alignment gate, SemDeDup and retrieval evals.
 
-Two forms of the same arithmetic. The REFERENCE form is JVM
-expressions — :func:`dot`/:func:`l2_norm`/:func:`cosine`,
-:func:`ivf_assign`, :func:`_probe_topk` and the PQ encode — which the
-equivalence tests compare against and the resident IVF-PQ index
-serves. The SCAN form trains the bounded quantizers on the driver and
-scores the corpus in one NumPy ``mapInPandas`` stage per operator.
-Both must match Spark (and the DuckDB oracle) bit for bit, so every
-driver loop and scorer takes its rounding, ordering and fold from the
-kernel :mod:`.exact`; the @6dp round of a returned score stays
-JVM-side (``F.round``).
+Two forms of the same arithmetic. The SCAN form serves: the bounded
+quantizers train on the driver and each operator scores the corpus in
+one NumPy ``mapInPandas`` stage; the one-shot IVF-family ops and the
+resident :class:`IvfIndex`/:class:`IvfPqIndex` build, append and probe
+through the same batch steps. The REFERENCE form is JVM expressions —
+:func:`ivf_assign`, :func:`pq_encode` -> :func:`pq_reconstruct` and
+:func:`_probe_topk` are test references only; :func:`dot`/
+:func:`l2_norm`/:func:`cosine` also score the ops that stay
+expressions (sign-LSH, near-dup pairs, semdedup). Both forms must
+match Spark (and the DuckDB oracle) bit for bit, so every driver loop
+and scorer takes its rounding, ordering and fold from the kernel
+:mod:`.exact`; the @6dp round of a returned score stays JVM-side
+(``F.round``).
+
+Zero-norm vectors in the IVF family: a corpus vector scores null and
+ranks after every scored row (as in :func:`brute_force_topk`); a query
+or a training-sample vector has no cosine to a cell and raises
+``ValueError`` naming its id.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from publicationsretriever_spark.operators.exact import (
@@ -200,9 +209,7 @@ def _np_cross_scores(
     between operators. Queries must be the bounded eval/mining sample
     (the operators' existing contract). ``extra_per_query`` emits one
     extra per-query double column (e.g. the true-match score) so
-    consumers need no extra join. Null vectors are not supported on
-    this path (callers fall back to the expression path when dim is
-    unknown)."""
+    consumers need no extra join. Null vectors are not supported."""
     qids = [int(q) for q, _ in q_rows]
     qvecs = [[float(x) for x in v] for _, v in q_rows]
     extras = (
@@ -288,32 +295,18 @@ def brute_force_topk(
     unrolled expression fold — see _np_cross_scores; the @6dp round
     stays JVM-side); the per-query rank runs through partial_topk so
     the global window's input is bounded. Ties broken by id for
-    determinism. Falls back to the expression path when the vector
-    width is unknown (empty corpus)."""
+    determinism. A zero-norm vector scores null and ranks last."""
     dim = _dim_of(vectors, vec_col)
     if dim is None:
-        q = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("_qv")
-        ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-        v = vectors.withColumn("_n", l2_norm(F.col(vec_col), dim))
-        scored = v.crossJoin(F.broadcast(q)).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                dot(F.col(vec_col), F.col("_qv"), dim)
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    else:
-        q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-        scored = _np_cross_scores(
-            vectors, q_rows, id_col, vec_col, query_id_col, "_s", dim
-        ).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(F.col("_s"), 6).alias("cos_sim"),
-        )
+        return _no_candidates(vectors, query_id_col, id_col, "cos_sim")
+    q_rows = _collect_query_rows(queries, query_id_col, vec_col)
+    scored = _np_cross_scores(
+        vectors, q_rows, id_col, vec_col, query_id_col, "_s", dim
+    ).select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(F.col("_s"), 6).alias("cos_sim"),
+    )
     return partial_topk(
         scored,
         query_id_col,
@@ -504,8 +497,9 @@ def _py_probe_cells(
 ) -> dict:
     """Per-query probed cells, computed ON THE DRIVER: the @6dp-rounded
     query-to-centroid cosine ranking (desc sim, asc cell — exactly the
-    window _probe_topk ran as a Spark stage). Bounded work: |queries| x
-    n_cells driver-side folds."""
+    window _probe_topk runs as a Spark stage). Bounded work: |queries| x
+    n_cells driver-side folds. A zero-norm query has no cosine to any
+    cell, so it is refused by id before the scan runs."""
     import functools
 
     def _cmp(x, y):
@@ -515,6 +509,11 @@ def _py_probe_cells(
 
     out = {}
     for qid, qv in q_rows:
+        if fold_dot(qv, qv) == 0.0:
+            raise ValueError(
+                f"query {qid} has a zero-norm vector: no cosine ranks "
+                "the cells it should probe"
+            )
         sims = [
             (round_half_up(fold_cos(qv, cv)), c) for c, cv in cent_rows
         ]
@@ -523,24 +522,103 @@ def _py_probe_cells(
     return out
 
 
-def _py_assign_cells(rows: list, cent_rows: list) -> list:
-    """Driver-side exact nearest-cell assignment for a bounded sample:
-    @6dp-rounded cosine argmax, ties to the lowest cell — the same
-    rule ivf_assign applies distributed. Returns [(id, vec, cell)]."""
-    out = []
-    for rid, v in rows:
-        best_c, best_s = None, None
-        for c, cv in cent_rows:  # ascending cell + strict '>' = ties low
-            s = round_half_up(fold_cos(v, cv))
-            if best_s is None or double_compare(s, best_s) > 0:
-                best_c, best_s = c, s
-        out.append((rid, v, best_c))
-    return out
+def _quantizer_mats(cent_rows: list, pq: dict | None, dim: int) -> tuple:
+    """Task-side matrices of the frozen quantizers: (centroids, their
+    fold norms, cell ids, per-subspace codeword matrices in code order
+    or None, residual). ``pq`` = {"m", "residual", "cb_rows": [(sub_id,
+    code_id, cw)]} for an IVF-PQ payload."""
+    CENT = vec_matrix([v for _, v in cent_rows], dim)
+    cells = np.array([int(c) for c, _ in cent_rows], dtype=np.int64)
+    if pq is None:
+        return CENT, fold_norm(CENT), cells, None, False
+    m = pq["m"]
+    by_sub: dict[int, list] = {}
+    for sj, cid, cw in pq["cb_rows"]:
+        by_sub.setdefault(int(sj), []).append((int(cid), cw))
+    cb_mats = [
+        vec_matrix([w for _, w in sorted(by_sub.get(j, []))], dim // m)
+        for j in range(m)
+    ]
+    return CENT, fold_norm(CENT), cells, cb_mats, pq["residual"]
+
+
+def _nearest_cell(C, cn, CENT, cent_n):
+    """Nearest-cell step of a batch: @6dp-rounded cosine argmax with
+    ties to the lowest cell (exact.rounded_argbest — raw fast path,
+    exact decimal re-rank inside the 1e-6 margin). One cell needs no
+    scoring. A zero-norm row scores NaN against every cell and lands
+    in the lowest one."""
+    if CENT.shape[0] == 1:
+        return np.zeros(C.shape[0], dtype=np.int64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = fold_cross(C, CENT) / (cn[:, None] * cent_n[None, :])
+    return rounded_argbest(sims, maximize=True)
+
+
+def _pq_payload(C, cent_pick, cb_mats, residual):
+    """PQ payload step of a batch: per subspace the nearest codeword
+    (@6dp-rounded squared-L2 argmin, ties to the lowest code); flat:
+    the codeword concat, residual (IVFADC): centroid + recon(x -
+    centroid), with ``cent_pick`` each row's assigned centroid."""
+    base = C - cent_pick if residual else C
+    recon = np.empty_like(base)
+    width = base.shape[1] // len(cb_mats)
+    for j, cb in enumerate(cb_mats):
+        sl = slice(j * width, (j + 1) * width)
+        recon[:, sl] = cb[
+            rounded_argbest(fold_cross_d2(base[:, sl], cb), maximize=False)
+        ]
+    return cent_pick + recon if residual else recon
+
+
+def _encode_batch(C, mats):
+    """Raw batch -> (cell ids, stored payload, payload fold norm): the
+    nearest-cell step, then the PQ payload when the index has
+    codebooks (IVF stores the vector itself)."""
+    CENT, cent_n, cells, cb_mats, residual = mats
+    cn = fold_norm(C)
+    pick = _nearest_cell(C, cn, CENT, cent_n)
+    if cb_mats is None:
+        return cells[pick], C, cn
+    payload = _pq_payload(C, CENT[pick], cb_mats, residual)
+    return cells[pick], payload, fold_norm(payload)
+
+
+def _score_probed(payload, pn, row_cell, ids, Q, qn, qids, probe, cols):
+    """Scoring step of a batch: each query against the rows of its
+    probed cells (``probe`` None: every row) with the kernel fold,
+    associated dot / (pn * qn). A zero-norm payload scores NaN, which
+    the Arrow boundary writes as null (ranked after every scored row).
+    Returns the (query_id, id, raw score) frame, or None."""
+    import pandas as pd
+
+    out_q, out_i, out_s = [], [], []
+    for j, qid in enumerate(qids):
+        if probe is None:
+            P, pnm, idm = payload, pn, ids
+        else:
+            mask = np.isin(row_cell, probe[qid])
+            if not mask.any():
+                continue
+            P, pnm, idm = payload[mask], pn[mask], ids[mask]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            s = fold_cross(P, Q[j : j + 1])[:, 0] / (pnm * qn[j])
+        out_q.append(np.full(len(idm), qid, dtype=np.int64))
+        out_i.append(idm)
+        out_s.append(s)
+    if not out_q:
+        return None
+    return pd.DataFrame(
+        {
+            cols[0]: np.concatenate(out_q),
+            cols[1]: np.concatenate(out_i),
+            cols[2]: np.concatenate(out_s),
+        }
+    )
 
 
 def _np_ivf_probe_scan(
-    vectors: DataFrame,
-    cent_rows: list,
+    rows: DataFrame,
     q_rows: list,
     probe_cells: dict | None,
     id_col: str,
@@ -548,129 +626,94 @@ def _np_ivf_probe_scan(
     query_id_col: str,
     score_name: str,
     dim: int,
+    cent_rows: list | None = None,
     pq: dict | None = None,
 ) -> DataFrame:
-    """The one-shot IVF / IVF-PQ / PQ search as ONE mapInPandas corpus
-    scan (guide §4.2 / §8: decide with bounded driver-side tables, move
-    the heavy rows once). Replaces the assign-aggregate-join +
-    probe-join + scoring pipeline — whose unrolled expression trees
-    cost the driver seconds of per-action codegen text generation —
-    with a single opaque stage of NumPy batch math.
+    """The IVF / IVF-PQ / PQ search as ONE mapInPandas scan (guide §4.2
+    / §8: decide with bounded driver-side tables, move the heavy rows
+    once) — a single opaque stage of NumPy batch math in place of the
+    assign-aggregate-join + probe-join + scoring expression pipeline,
+    whose unrolled trees cost the driver seconds of per-action codegen
+    text generation. The probe cells are chosen on the driver
+    (_py_probe_cells; None = score all rows for all queries, the
+    flat-PQ exhaustive scan); the scan emits (query_id, id, raw score)
+    and the @6dp round stays JVM-side on the returned column.
 
-    Per batch: (1) nearest-cell assignment by @6dp-rounded cosine
-    argmax with ties to the lowest cell (exact.rounded_argbest: raw
-    fast path, exact decimal re-rank inside the 1e-6 margin).
-    (2) optionally PQ-encode the row (per-subspace squared-L2 argmin,
-    same rule on the rounded d2, ties to the lowest code) and
-    reconstruct the stored payload (flat: codeword concat;
-    residual/IVFADC: centroid + recon(residual)). (3) score the payload
-    against every query that probes the row's cell (``probe_cells``;
-    None = score all rows for all queries, the flat-PQ exhaustive scan)
-    with the bit-identical per-dimension fold, and emit (query_id, id,
-    raw score). The @6dp round of the score stays JVM-side on the
-    returned column.
+    Two input shapes, one scoring step (_score_probed):
+    - with the quantizer (``cent_rows``, optional ``pq``, see
+      _quantizer_mats): ``rows`` are raw (id, vec) rows, assigned and
+      encoded inside the batch (_encode_batch) — the one-shot
+      ivf_topk / pq_topk / ivfpq_topk;
+    - without: ``rows`` are stored inverted-list rows (cell_id, id,
+      payload ``vec_col``, _n), filtered here to the probed cells —
+      the resident IvfIndex / IvfPqIndex.
 
     The query set and trained tables are bounded by contract and ride
-    in the task closure; at 10^10 rows the scan still reads each
-    corpus row once and emits only probed candidates. The distributed
-    join/aggregate formulation in ivf_assign/_probe_topk is the
-    reference the equivalence tests compare this scan against."""
+    in the task closure. The expression pipeline (ivf_assign, pq_encode
+    -> pq_reconstruct, _probe_topk) is the reference the equivalence
+    tests compare both shapes against."""
     qids = [int(q) for q, _ in q_rows]
     qvecs = [[float(x) for x in v] for _, v in q_rows]
-    cells = [int(c) for c, _ in cent_rows]
-    cvecs = [[float(x) for x in v] for _, v in cent_rows]
     probe = (
-        {int(q): set(cs) for q, cs in probe_cells.items()}
+        {int(q): sorted(cs) for q, cs in probe_cells.items()}
         if probe_cells is not None
         else None
     )
-    pq_cfg = None
-    if pq is not None:
-        pq_cfg = {
-            "m": int(pq["m"]),
-            "width": int(pq["width"]),
-            "residual": bool(pq.get("residual", False)),
-            # cb[j] = (codes list, codeword matrix rows in code order)
-            "cb": pq["cb_rows"],
-        }
-    schema = f"{query_id_col} long, {id_col} long, {score_name} double"
+    cols = (query_id_col, id_col, score_name)
+    if cent_rows is None:
+        probed = sorted({c for cs in probe.values() for c in cs})
+        rows = rows.filter(F.col("cell_id").isin(probed)).select(
+            "cell_id", id_col, vec_col, "_n"
+        )
+    else:
+        rows = rows.select(id_col, vec_col)
 
     def scorer(batches):
-        import numpy as np
-        import pandas as pd
-
-        n_q = len(qids)
-        if n_q == 0:
+        if not qids:
             return
         Q = vec_matrix(qvecs, dim)
         qn = fold_norm(Q)
-        CENT = vec_matrix(cvecs, dim)
-        cell_arr = np.array(cells, dtype=np.int64)
-        cent_n = fold_norm(CENT)
-        if pq_cfg is not None:
-            m, width = pq_cfg["m"], pq_cfg["width"]
-            cb_mats = []  # per subspace: (n_codes, width), code order
-            by_sub: dict[int, list] = {}
-            for sj, cid, cw in pq_cfg["cb"]:
-                by_sub.setdefault(int(sj), []).append((int(cid), cw))
-            for j in range(m):
-                ent = sorted(by_sub.get(j, []))
-                cb_mats.append(vec_matrix([w for _, w in ent], width))
-
+        mats = (
+            _quantizer_mats(cent_rows, pq, dim) if cent_rows else None
+        )
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             C = vec_matrix(pdf[vec_col], dim)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            n_c = C.shape[0]
-            # (1) nearest-cell assignment (skipped for the flat-PQ
-            # exhaustive scan, which passes one dummy cell)
-            if probe is None and len(cells) == 1:
-                pick = np.zeros(n_c, dtype=np.int64)
+            if mats is None:
+                row_cell = pdf["cell_id"].to_numpy(dtype=np.int64)
+                payload, pn = C, pdf["_n"].to_numpy(dtype=np.float64)
             else:
-                sims = fold_cross(C, CENT) / (
-                    fold_norm(C)[:, None] * cent_n[None, :]
-                )
-                pick = rounded_argbest(sims, maximize=True)
-            row_cell = cell_arr[pick]
-            # (2) payload
-            payload = C
-            if pq_cfg is not None:
-                base = C - CENT[pick] if pq_cfg["residual"] else C
-                recon = np.empty_like(base)
-                for j in range(m):
-                    sl = slice(j * width, (j + 1) * width)
-                    cpick = rounded_argbest(
-                        fold_cross_d2(base[:, sl], cb_mats[j]),
-                        maximize=False,
-                    )
-                    recon[:, sl] = cb_mats[j][cpick]
-                payload = CENT[pick] + recon if pq_cfg["residual"] else recon
-            pn = fold_norm(payload)
-            # (3) score probed rows per query
-            out_q, out_i, out_s = [], [], []
-            for j in range(n_q):
-                if probe is not None:
-                    mask = np.isin(row_cell, list(probe.get(qids[j])))
-                    if not mask.any():
-                        continue
-                    P, pnm, idm = payload[mask], pn[mask], ids[mask]
-                else:
-                    P, pnm, idm = payload, pn, ids
-                s = fold_cross(P, Q[j : j + 1])[:, 0] / (pnm * qn[j])
-                out_q.append(np.full(len(idm), qids[j], dtype=np.int64))
-                out_i.append(idm)
-                out_s.append(s)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.concatenate(out_q),
-                        id_col: np.concatenate(out_i),
-                        score_name: np.concatenate(out_s),
-                    }
-                )
+                row_cell, payload, pn = _encode_batch(C, mats)
+            out = _score_probed(
+                payload, pn, row_cell,
+                pdf[id_col].to_numpy(dtype=np.int64),
+                Q, qn, qids, probe, cols,
+            )
+            if out is not None:
+                yield out
 
-    return vectors.select(id_col, vec_col).mapInPandas(scorer, schema)
+    schema = f"{query_id_col} long, {id_col} long, {score_name} double"
+    return rows.mapInPandas(scorer, schema)
+
+
+def _round_topk(
+    scored: DataFrame, query_id_col: str, id_col: str, score_name: str,
+    k: int,
+) -> DataFrame:
+    """The @6dp round of a scan's raw ``_sraw`` score (JVM-side
+    F.round) and the bounded per-query top-k, ties broken by id."""
+    scored = scored.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(F.col("_sraw"), 6).alias(score_name),
+    )
+    return partial_topk(
+        scored,
+        query_id_col,
+        [F.col(score_name).desc(), F.col(id_col).asc()],
+        k,
+    ).select(query_id_col, "rank", id_col, score_name)
 
 
 def _np_keyed_scores(
@@ -864,40 +907,48 @@ def _np_ivf_assign_scan(
     id_col: str,
     vec_col: str,
     dim: int | None,
+    pq: dict | None = None,
 ) -> DataFrame:
-    """Inverted-list build as one NumPy scan: (id, vec, cell_id, _n)
-    with the rounded-argmax assignment (exact.rounded_argbest, ties to
-    the lowest cell) and the bit-identical fold norm. The one
-    assignment path of build_ivf_index and IvfIndex.append; ivf_assign
-    (cross-join + map-side argmax aggregate + id join-back) is its
-    test reference. The vectors ride through Arrow losslessly in their
-    input type."""
-    cells = [int(c) for c, _ in cent_rows]
-    cvecs = [[float(x) for x in v] for _, v in cent_rows]
-    vec_type = vectors.schema[vec_col].dataType.simpleString()
+    """Inverted-list build as one NumPy scan — the one encode path of
+    build_ivf_index, build_ivfpq_index and both indexes' ``append``:
+    per batch the nearest-cell step and, with ``pq`` (see
+    _quantizer_mats), the PQ payload step of the probe scan
+    (_encode_batch). IVF emits (id, vec, cell_id, _n) with the vectors
+    riding through Arrow losslessly in their input type; IVF-PQ emits
+    (id, recon, cell_id, _n) with the reconstruction as array<double>.
+    ``_n`` is the payload's fold norm. ivf_assign (cross-join +
+    map-side argmax aggregate + id join-back) and pq_encode ->
+    pq_reconstruct are its test references."""
+    if pq is None:
+        pay_col = vec_col
+        pay_type = vectors.schema[vec_col].dataType.simpleString()
+    else:
+        pay_col, pay_type = "recon", "array<double>"
     schema = (
-        f"{id_col} long, {vec_col} {vec_type}, cell_id long, _n double"
+        f"{id_col} long, {pay_col} {pay_type}, cell_id long, _n double"
     )
 
     def scorer(batches):
-        import numpy as np
         import pandas as pd
 
-        CENT = vec_matrix(cvecs, dim)
-        cell_arr = np.array(cells, dtype=np.int64)
-        cent_n = fold_norm(CENT)
+        if dim is None:  # empty corpus: nothing trained, no rows
+            return
+        mats = _quantizer_mats(cent_rows, pq, dim)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = vec_matrix(pdf[vec_col], dim)
-            cn = fold_norm(C)
-            sims = fold_cross(C, CENT) / (cn[:, None] * cent_n[None, :])
+            cells, payload, pn = _encode_batch(
+                vec_matrix(pdf[vec_col], dim), mats
+            )
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
-                    vec_col: pdf[vec_col].to_numpy(),
-                    "cell_id": cell_arr[rounded_argbest(sims, maximize=True)],
-                    "_n": cn,
+                    pay_col: (
+                        pdf[vec_col].to_numpy() if pq is None
+                        else list(payload)
+                    ),
+                    "cell_id": cells,
+                    "_n": pn,
                 }
             )
 
@@ -1009,7 +1060,8 @@ def ivf_centroids(
     Spark's double order with ties to the lowest cell, per-dimension
     double mean, empty cells keep their previous centroid.
     ``refine_iters=0`` is the same literal after zero Lloyd steps; an
-    empty corpus gives an empty table (``_dim`` None).
+    empty corpus gives an empty table (``_dim`` None), and a zero-norm
+    init or refined sample vector raises ValueError naming its id.
     """
     if sample_order == "id" or refine_iters <= 0:
         # init cells are the lowest-id prefix of the id-ordered
@@ -1047,6 +1099,14 @@ def ivf_centroids(
             )
             .collect()
         )
+    # cosine to a zero-norm centroid or sample vector is undefined:
+    # refuse it by id before the Lloyd loop or any scan divides by it
+    for r in init_rows + (sample_rows if refine_iters > 0 else []):
+        if fold_dot(r["_v"], r["_v"]) == 0.0:
+            raise ValueError(
+                f"vector {r['_id']} in the IVF training sample has a "
+                "zero-norm vector: no cosine assigns it to a cell"
+            )
     cent = {
         int(r["_id"]): [float(x) for x in r["_v"]] for r in init_rows
     }
@@ -1102,7 +1162,7 @@ def ivf_assign(
     only nprobe/n_cells of the data. Norms are computed once per side
     before the cross join and the dot is unrolled (same fold order —
     bit-identical _sim). The expression reference of the NumPy build
-    scan (_np_ivf_assign_scan), and the IVF-PQ build's assignment."""
+    scan (_np_ivf_assign_scan); test use only."""
     if dim is None:
         dim = _dim_of(vectors, vec_col)
     cent = centroids.withColumn("_cn", l2_norm(F.col("_cv"), dim))
@@ -1140,19 +1200,29 @@ def ivf_assign(
 class IvfIndex:
     """Resident IVF index: quantizer training + inverted-list build are
     paid ONCE (build_ivf_index), then every ``topk`` call is just the
-    probe join. The r4 A/B measured Lloyd refinement at ~50% of a
+    probe. The r4 A/B measured Lloyd refinement at ~50% of a
     one-shot ivf_topk wall (refine_iters=1 3.03s vs =0 2.03s best-of-3
     back-to-back at sf0.1) — acceptable for a single query, wasteful
     when the index serves many; this class is the serve-many shape. At
     100 TB ``inverted`` is written partitioned by cell_id so each probe
     partition-prunes to nprobe/n_cells of the data; here it is cached
-    (serialized) and reused across calls."""
+    (serialized) and reused across calls.
+
+    Build, append and probe run the one-shot ops' NumPy steps: the
+    inverted list (id, payload, cell_id, _n) comes from
+    _np_ivf_assign_scan, and ``topk`` picks the probe cells on the
+    driver (_py_probe_cells), filters the list to them and scores the
+    stored rows with _np_ivf_probe_scan. IvfPqIndex differs only in
+    the payload (``payload_col``) and the score's name."""
+
+    score_name = "cos_sim"
 
     def __init__(self, centroids: DataFrame, inverted: DataFrame,
                  vec_col: str, id_col: str, dim: int | None = None):
         self.centroids = centroids
         self.inverted = inverted
         self.vec_col = vec_col
+        self.payload_col = vec_col
         self.id_col = id_col
         self.dim = dim
 
@@ -1163,22 +1233,44 @@ class IvfIndex:
         k: int = 5,
         nprobe: int = 4,
     ) -> DataFrame:
-        return _probe_topk(
-            self.inverted, self.centroids, queries,
-            payload_col=self.vec_col, score_name="cos_sim",
-            id_col=self.id_col, vec_col=self.vec_col,
-            query_id_col=query_id_col, k=k, nprobe=nprobe,
-            dim=self.dim,
+        return self._serve(queries, self.vec_col, query_id_col, k, nprobe)
+
+    def _cent_rows(self) -> list:
+        # centroids trained elsewhere: one bounded collect
+        return getattr(self.centroids, "_cent_rows", None) or [
+            (r["cell_id"], r["_cv"])
+            for r in self.centroids.orderBy("cell_id").collect()
+        ]
+
+    def _pq(self) -> dict | None:
+        """The PQ encode parameters of the payload (None: raw vector)."""
+        return None
+
+    def _serve(self, queries, vec_col, query_id_col, k, nprobe):
+        cent_rows = self._cent_rows()
+        if not cent_rows:  # built on an empty corpus
+            return _no_candidates(
+                self.inverted, query_id_col, self.id_col, self.score_name
+            )
+        q_rows = _collect_query_rows(queries, query_id_col, vec_col)
+        scored = _np_ivf_probe_scan(
+            self.inverted, q_rows,
+            _py_probe_cells(q_rows, cent_rows, nprobe), self.id_col,
+            self.payload_col, query_id_col, "_sraw",
+            self.dim or len(cent_rows[0][1]),
+        )
+        return _round_topk(
+            scored, query_id_col, self.id_col, self.score_name, k
         )
 
     def append(self, new_vectors: DataFrame) -> "IvfIndex":
         """Fold a new batch into the index WITHOUT retraining: assign
-        against the FROZEN quantizer (the FAISS add() contract — a
-        retrain is a rebuild, not an append; centroids drift only on
-        explicit rebuild), compute norms once, and stack the batch as
-        a persisted DELTA under a lazy union — the catalog's
-        append-only delta-table shape. ONLY the batch is assigned,
-        persisted and counted; the existing list is neither
+        (and, for IvfPqIndex, encode) against the FROZEN quantizer (the
+        FAISS add() contract — a retrain is a rebuild, not an append;
+        centroids drift only on explicit rebuild), compute norms once,
+        and stack the batch as a persisted DELTA under a lazy union —
+        the catalog's append-only delta-table shape. ONLY the batch is
+        assigned, persisted and counted; the existing list is neither
         recomputed nor copied, so a daily-ingest append costs
         O(batch), not O(corpus) (the first cut re-persisted the
         union and its count() walked the whole corpus per append —
@@ -1187,25 +1279,20 @@ class IvfIndex:
         deltas; compaction IS a rebuild. The trade (documented, same
         as FAISS): cells go stale if the data distribution drifts
         far from the training sample — rebuild on a drift signal,
-        don't retrain per batch. Assignment is the build's NumPy scan
-        (_np_ivf_assign_scan), so build and append share one path."""
-        from pyspark import StorageLevel
-
-        # centroids trained elsewhere: one bounded collect
-        cent_rows = getattr(self.centroids, "_cent_rows", None) or [
-            (r["cell_id"], r["_cv"])
-            for r in self.centroids.orderBy("cell_id").collect()
-        ]
+        don't retrain per batch. The batch runs the build's encode
+        scan (_np_ivf_assign_scan), so build and append share one
+        path."""
+        pq = self._pq()
+        cent_rows = self._cent_rows()
         if not cent_rows:
             raise ValueError(
                 "index has no cells (built on an empty corpus); "
                 "rebuild it to add vectors"
             )
-        dim = self.dim or len(cent_rows[0][1])
-        add = _np_ivf_assign_scan(
-            new_vectors, cent_rows, self.id_col, self.vec_col, dim
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        add.count()  # batch-sized job: the whole append cost
+        add = _persisted_list(
+            new_vectors, cent_rows, self.id_col, self.vec_col,
+            self.dim or len(cent_rows[0][1]), pq, materialize=True,
+        )  # batch-sized job: the whole append cost
         if not hasattr(self, "_base"):
             self._base = self.inverted  # the persisted build output
         self._deltas = getattr(self, "_deltas", []) + [add]
@@ -1216,6 +1303,20 @@ class IvfIndex:
         for d in getattr(self, "_deltas", []):
             d.unpersist()
         getattr(self, "_base", self.inverted).unpersist()
+
+
+def _persisted_list(vectors, cent_rows, id_col, vec_col, dim, pq=None,
+                    materialize=False) -> DataFrame:
+    """The encode scan's inverted list persisted SERIALIZED for reuse
+    across ``topk`` calls; ``materialize`` forces it eagerly."""
+    from pyspark import StorageLevel
+
+    inv = _np_ivf_assign_scan(
+        vectors, cent_rows, id_col, vec_col, dim, pq
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    if materialize:
+        inv.count()
+    return inv
 
 
 def build_ivf_index(
@@ -1233,26 +1334,20 @@ def build_ivf_index(
     list is persisted SERIALIZED so repeated ``topk`` calls reuse it;
     ``materialize=True`` forces it eagerly (otherwise the first topk
     pays the build lazily)."""
-    from pyspark import StorageLevel
-
     # ivf_centroids trains on the driver and returns a LITERAL centroid
-    # table, so its two consumers (inverted-list build + query probe)
-    # broadcast a value, not a plan subtree. The build is one NumPy
-    # scan (assignment + norm once per vector BEFORE the probe join, no
-    # cross-join/aggregate/join-back); dim rides along from the
-    # training collect — no separate limit-1 probe job.
+    # table; the build is one NumPy scan (assignment + norm once per
+    # vector, no cross-join/aggregate/join-back), and dim rides along
+    # from the training collect — no separate limit-1 probe job.
     cent = ivf_centroids(
         vectors, vec_col, id_col, n_cells,
         refine_iters=refine_iters, sample_n=sample_n,
         sample_order=sample_order,
     )
-    dim = cent._dim
-    inv = _np_ivf_assign_scan(
-        vectors, cent._cent_rows, id_col, vec_col, dim
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if materialize:
-        inv.count()
-    return IvfIndex(cent, inv, vec_col, id_col, dim=dim)
+    inv = _persisted_list(
+        vectors, cent._cent_rows, id_col, vec_col, cent._dim,
+        materialize=materialize,
+    )
+    return IvfIndex(cent, inv, vec_col, id_col, dim=cent._dim)
 
 
 def ivf_topk(
@@ -1283,9 +1378,12 @@ def ivf_topk(
     + inverted-list build run per call here; a resident deployment
     keeps the IvfIndex and amortizes them (the Lloyd A/B's ~50%
     one-shot overhead drops to ~0 across repeated queries). The
-    one-shot runs as a single NumPy probe scan (_np_ivf_probe_scan —
-    probe cells chosen on the driver, bit-identical scores, JVM @6dp
-    round); the resident IvfIndex probes through _probe_topk."""
+    one-shot runs as a single NumPy probe scan over the raw vectors
+    (_np_ivf_probe_scan — probe cells chosen on the driver,
+    bit-identical scores, JVM @6dp round); the resident IvfIndex
+    scores its stored rows with the same steps. A zero-norm corpus
+    vector scores null and ranks last; a zero-norm query raises
+    ValueError."""
     cent = ivf_centroids(
         vectors, vec_col, id_col, n_cells,
         refine_iters=refine_iters, sample_n=sample_n,
@@ -1295,21 +1393,11 @@ def ivf_topk(
     if dim is None:
         return _no_candidates(vectors, query_id_col, id_col, "cos_sim")
     q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-    probe = _py_probe_cells(q_rows, cent_rows, nprobe)
     scored = _np_ivf_probe_scan(
-        vectors, cent_rows, q_rows, probe, id_col, vec_col,
-        query_id_col, "_sraw", dim,
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(F.col("_sraw"), 6).alias("cos_sim"),
+        vectors, q_rows, _py_probe_cells(q_rows, cent_rows, nprobe),
+        id_col, vec_col, query_id_col, "_sraw", dim, cent_rows,
     )
-    return partial_topk(
-        scored,
-        query_id_col,
-        [F.col("cos_sim").desc(), F.col(id_col).asc()],
-        k,
-    ).select(query_id_col, "rank", id_col, "cos_sim")
+    return _round_topk(scored, query_id_col, id_col, "cos_sim", k)
 
 
 def pq_codebooks(
@@ -1346,8 +1434,9 @@ def pq_codebooks(
     """
     # ONE TakeOrdered job serves the codeword init, the Lloyd sample
     # AND the dim probe (both are lowest-id prefixes); the IVF-PQ
-    # build passes the prefix it already collected for the coarse
-    # quantizer so the flat path trains both from a single job
+    # training passes the prefix it already collected for the coarse
+    # quantizer (residualized for the residual form) so both train
+    # from a single job
     rows = _prefix_rows
     if rows is None:
         rows = (
@@ -1356,15 +1445,7 @@ def pq_codebooks(
             .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
             .collect()
         )
-    def _idv(r):
-        # collected Rows carry _id/_v; driver-trained callers (the
-        # residual sample) pass plain (id, vec) tuples
-        try:
-            return r["_id"], r["_v"]
-        except (TypeError, KeyError, IndexError, ValueError):
-            return r[0], r[1]
-
-    rows = [_idv(r) for r in rows]
+    rows = [(r["_id"], r["_v"]) for r in rows]
     # an empty corpus trains an empty codebook (``_dim`` None)
     dim = len(rows[0][1] or []) if rows else None
     if dim is not None and (dim == 0 or dim % m != 0):
@@ -1412,7 +1493,7 @@ def pq_codebooks(
         rows,
         [("sub_id", "int"), ("code_id", "long"), ("cw", "array<double>")],
     )
-    # carried so pq_reconstruct_fused skips its re-collect and
+    # carried so the encode and probe scans skip a re-collect and
     # downstream consumers skip their _dim_of probe
     out._cb_rows = rows
     out._dim = dim
@@ -1512,78 +1593,6 @@ def pq_reconstruct(
     )
 
 
-def pq_reconstruct_fused(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    width: int | None = None,
-) -> DataFrame:
-    """pq_encode + pq_reconstruct in ONE shuffle: the per-(vector,
-    subspace) argmin becomes m FILTERed min_by aggregates in a single
-    groupBy(id), and the reconstruction is the concat of the m picks in
-    subspace order. Row-identical to the two-step path (same @6dp
-    argmin, same fold order) but the corpus is shuffled once, not twice
-    — at 10^10 vectors that halves the encode job's exchange volume.
-    Requires ``m`` (the aggregate list is built per subspace)."""
-    cb = codebooks.select(
-        "sub_id", "code_id", "cw", F.size("cw").alias("_w")
-    )
-    d2 = _pq_subspace_d2(vec_col, width)
-    scored = vectors.crossJoin(F.broadcast(cb)).select(
-        F.col(id_col), F.col("sub_id"), F.col("code_id"),
-        d2.alias("_d2"),
-    )
-    # min_by skips rows where the VALUE expression is null, so gating
-    # both operands on sub_id turns each aggregate into "argmin within
-    # subspace j" — all m of them combine map-side in the one hash
-    # agg. Only the code IDS flow through the aggregate (longs keep
-    # the fast row-based hash map; codeword arrays forced the object-
-    # agg path); the codewords are re-attached from the collected
-    # bounded codebook (m x n_codes rows — a literal by construction)
-    # as a literal CASE lookup, so the reconstruction is a pure
-    # projection with bit-identical values.
-    picks = [
-        F.min_by(
-            F.when(F.col("sub_id") == j, F.col("code_id")),
-            F.when(
-                F.col("sub_id") == j,
-                F.struct(F.col("_d2"), F.col("code_id")),
-            ),
-        ).alias(f"_c{j}")
-        for j in range(m)
-    ]
-    cb_rows = getattr(codebooks, "_cb_rows", None)
-    if cb_rows is None:  # trained elsewhere: one bounded collect
-        cb_rows = [
-            (r["sub_id"], r["code_id"], r["cw"])
-            for r in codebooks.select("sub_id", "code_id", "cw").collect()
-        ]
-    cw_lit = {
-        (int(sj), int(cid)): [float(x) for x in cw]
-        for sj, cid, cw in cb_rows
-    }
-
-    def _lookup(j: int) -> Column:
-        expr = None
-        for (sj, cid), cw in sorted(cw_lit.items()):
-            if sj != j:
-                continue
-            arr = F.array(*[F.lit(v) for v in cw])
-            expr = (
-                F.when(F.col(f"_c{j}") == cid, arr)
-                if expr is None
-                else expr.when(F.col(f"_c{j}") == cid, arr)
-            )
-        return expr
-
-    return scored.groupBy(id_col).agg(*picks).select(
-        id_col,
-        F.concat(*[_lookup(j) for j in range(m)]).alias("recon"),
-    )
-
-
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -1625,27 +1634,14 @@ def pq_topk(
     # compressed exhaustive scan with no join and no shuffle before
     # the bounded top-k
     q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-    # probe=None but a full scan still needs cell assignment inputs;
-    # pass a single dummy cell so the assignment stage is trivial and
-    # unused (flat PQ has no coarse quantizer)
+    # probe=None scores every row; flat PQ has no coarse quantizer, so
+    # one dummy cell makes the nearest-cell step trivial and unused
     scored = _np_ivf_probe_scan(
-        vectors,
-        [(0, [0.0] * dim)],
-        q_rows, None, id_col, vec_col, query_id_col, "_sraw",
-        dim,
-        pq={"m": m, "width": dim // m, "cb_rows": cbs._cb_rows,
-            "residual": False},
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(F.col("_sraw"), 6).alias("adc_sim"),
+        vectors, q_rows, None, id_col, vec_col, query_id_col, "_sraw",
+        dim, [(0, [0.0] * dim)],
+        {"m": m, "residual": False, "cb_rows": cbs._cb_rows},
     )
-    return partial_topk(
-        scored,
-        query_id_col,
-        [F.col("adc_sim").desc(), F.col(id_col).asc()],
-        k,
-    ).select(query_id_col, "rank", id_col, "adc_sim")
+    return _round_topk(scored, query_id_col, id_col, "adc_sim", k)
 
 
 def _probe_topk(
@@ -1661,14 +1657,14 @@ def _probe_topk(
     nprobe: int,
     dim: int | None = None,
 ) -> DataFrame:
-    """The ONE probe/scan/rank pipeline behind IvfIndex.topk and
-    IvfPqIndex.topk (they differ only in the scored payload column
-    and the score's name): queries score all centroids (broadcast),
-    keep their nprobe best cells, the inverted list joins the probe
-    on cell_id (partition-pruning shape at scale), rows score by
-    cosine against the precomputed norm, per-query top-k with @6dp
-    rounding and id tie-breaks. A tie-break or rounding fix here
-    reaches both index families at once."""
+    """The expression reference of the IVF-family probe (test use
+    only): queries score all centroids (broadcast), keep their nprobe
+    best cells, the inverted list joins the probe on cell_id, rows
+    score by cosine against the precomputed norm, per-query top-k with
+    @6dp rounding and id tie-breaks. ``payload_col`` and
+    ``score_name`` select the IVF (raw vector, ``cos_sim``) or IVF-PQ
+    (``recon``, ``adc_sim``) form. The NumPy probe scan in both input
+    shapes must match it row for row."""
     if dim is None:
         dim = _dim_of(queries, vec_col)
     qscored = queries.select(
@@ -1710,29 +1706,30 @@ def _probe_topk(
     ).select(query_id_col, "rank", id_col, score_name)
 
 
-class IvfPqIndex:
+class IvfPqIndex(IvfIndex):
     """Resident IVF-PQ index: IVF's partition pruning (each query
     scores only its nprobe probed cells) combined with PQ's compressed
     scan (the inverted list stores the quantized reconstruction, not
     the raw vector — at 100 TB the list is written partitioned by
     cell_id with m code ids per row, so a probe reads
     nprobe/n_cells of the rows AND m bytes per row). Scores are
-    asymmetric cosine (``adc_sim``), same contract as pq_topk."""
+    asymmetric cosine (``adc_sim``), same contract as pq_topk. Serving,
+    append and unpersist are IvfIndex's; only the payload (``recon``)
+    and the score's name differ."""
+
+    score_name = "adc_sim"
 
     def __init__(self, centroids: DataFrame, inverted: DataFrame,
                  id_col: str, codebooks=None, m: int = 0,
                  vec_col: str = "embedding", residual: bool = False,
                  dim: int | None = None):
-        self.centroids = centroids
-        self.dim = dim
-        self.inverted = inverted  # (cell_id, id, recon, _n)
-        self.id_col = id_col
+        super().__init__(centroids, inverted, vec_col, id_col, dim)
+        self.payload_col = "recon"  # inverted: (id, recon, cell_id, _n)
         # frozen encode parameters, kept so append() can quantize new
         # batches without retraining (None on hand-built indexes —
         # append then raises)
         self.codebooks = codebooks
         self.m = m
-        self.vec_col = vec_col
         self.residual = residual
 
     def topk(
@@ -1743,119 +1740,57 @@ class IvfPqIndex:
         k: int = 5,
         nprobe: int = 4,
     ) -> DataFrame:
-        return _probe_topk(
-            self.inverted, self.centroids, queries,
-            payload_col="recon", score_name="adc_sim",
-            id_col=self.id_col, vec_col=vec_col,
-            query_id_col=query_id_col, k=k, nprobe=nprobe,
-            dim=self.dim,
-        )
+        return self._serve(queries, vec_col, query_id_col, k, nprobe)
 
-    def append(self, new_vectors: DataFrame) -> "IvfPqIndex":
-        """Fold a new batch in WITHOUT retraining: assign against the
-        frozen coarse quantizer, encode through the FROZEN codebooks
-        (flat: recon(x); residual/IVFADC: centroid + recon(x -
-        centroid)), and stack the encoded batch as a persisted DELTA
-        under a lazy union (see IvfIndex.append — the re-persisted
-        union of the first cut walked the whole corpus per append).
-        Batch-sized work only; the quantizer/codebooks drift trade is
-        the same — rebuild on drift, don't retrain per batch."""
-        from pyspark import StorageLevel
-
+    def _pq(self) -> dict:
+        """Frozen codebooks (flat: recon(x); residual/IVFADC:
+        centroid + recon(x - centroid))."""
         if self.codebooks is None:
             raise ValueError(
                 "index was built without encode parameters; rebuild "
                 "via build_ivfpq_index to enable append"
             )
-        vec_col, id_col = self.vec_col, self.id_col
-        dim = self.dim or _dim_of(new_vectors, vec_col)
-        assigned = ivf_assign(
-            new_vectors, self.centroids, vec_col, id_col, dim
-        )
-        if self.residual:
-            assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        add = _ivfpq_encode(
-            new_vectors, assigned, self.centroids, self.codebooks,
-            self.m, vec_col, id_col, residual=self.residual, dim=dim,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        add.count()  # batch-sized job: the whole append cost
-        if self.residual:
-            assigned.unpersist()
-        if not hasattr(self, "_base"):
-            self._base = self.inverted
-        self._deltas = getattr(self, "_deltas", []) + [add]
-        self.inverted = self.inverted.unionByName(add)
-        return self
-
-    def unpersist(self) -> None:
-        for d in getattr(self, "_deltas", []):
-            d.unpersist()
-        getattr(self, "_base", self.inverted).unpersist()
+        cb_rows = getattr(self.codebooks, "_cb_rows", None) or [
+            (r["sub_id"], r["code_id"], r["cw"])
+            for r in self.codebooks.collect()
+        ]
+        return {"m": self.m, "residual": self.residual, "cb_rows": cb_rows}
 
 
-def _zip_arith(a: Column, b: Column, op: str, dim: int | None) -> Column:
-    """Element-wise a-b / a+b as an array; unrolled into a static
-    F.array when ``dim`` is known (same per-element expressions as the
-    zip_with lambdas — bit-identical values, codegen instead of
-    interpreted HOF)."""
-    if dim is None:
-        if op == "-":
-            return F.zip_with(a, b, lambda x, y: x.cast("double") - y)
-        return F.zip_with(a, b, lambda x, y: x + y)
-    if op == "-":
-        return F.array(
-            *[
-                F.get(a, i).cast("double") - F.get(b, i)
-                for i in range(dim)
-            ]
-        )
-    return F.array(*[F.get(a, i) + F.get(b, i) for i in range(dim)])
-
-
-def _ivfpq_residual(assigned, cent, vec_col, id_col, dim=None):
-    """r = x - centroid(x) per assigned row — the IVFADC residual."""
-    return assigned.join(F.broadcast(cent), "cell_id").select(
-        F.col(id_col),
-        _zip_arith(F.col(vec_col), F.col("_cv"), "-", dim).alias(
-            vec_col
-        ),
+def _train_ivfpq(vectors, vec_col, id_col, n_cells, coarse_iters, m,
+                 n_codes, pq_iters, sample_n, residual):
+    """The coarse quantizer and the flat or residual PQ codebooks of
+    build_ivfpq_index and ivfpq_topk, both driver-side Lloyd from ONE
+    TakeOrdered collect of the lowest-id prefix (which also supplies
+    the vector dim). Residual codebooks train on r = x - centroid(x)
+    of the prefix rows, assigned with the scans' nearest-cell step."""
+    prefix_rows = (
+        vectors.orderBy(F.col(id_col).asc())
+        .limit(max(n_cells, n_codes, sample_n))
+        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .collect()
     )
-
-
-def _ivfpq_encode(vectors, assigned, cent, cbs, m, vec_col, id_col,
-                  residual, dim=None):
-    """Encode rows through FROZEN codebooks to the inverted-list
-    payload (cell_id, id, recon, _n). The ONE code path shared by
-    build_ivfpq_index and IvfPqIndex.append — a recipe change here
-    (cast order, join shape) reaches both, so append-encoded deltas
-    can never silently diverge from build-encoded rows in the same
-    list (the append==rebuild equivalence tests pin this)."""
-    width = dim // m if dim else None
-    if residual:
-        rrec = pq_reconstruct_fused(
-            _ivfpq_residual(assigned, cent, vec_col, id_col, dim),
-            cbs, m, vec_col, id_col, width=width,
-        )
-        return (
-            assigned.select(id_col, "cell_id")
-            .join(rrec, id_col)
-            .join(F.broadcast(cent), "cell_id")
-            .select(
-                "cell_id", id_col,
-                _zip_arith(
-                    F.col("_cv"), F.col("recon"), "+", dim
-                ).alias("recon"),
-            )
-            .withColumn("_n", l2_norm(F.col("recon"), dim))
-        )
-    recon = pq_reconstruct_fused(
-        vectors, cbs, m, vec_col, id_col, width=width
+    cent = ivf_centroids(
+        vectors, vec_col, id_col, n_cells,
+        refine_iters=coarse_iters, sample_n=sample_n,
+        _prefix_rows=prefix_rows,
     )
-    return (
-        assigned.select(id_col, "cell_id")
-        .join(recon, id_col)
-        .withColumn("_n", l2_norm(F.col("recon"), dim))
+    rows = prefix_rows
+    if residual and cent._dim is not None:
+        CENT, cent_n, _, _, _ = _quantizer_mats(
+            cent._cent_rows, None, cent._dim
+        )
+        X = vec_matrix([r["_v"] for r in prefix_rows], cent._dim)
+        pick = _nearest_cell(X, fold_norm(X), CENT, cent_n)
+        rows = [
+            Row(_id=r["_id"], _v=v)
+            for r, v in zip(prefix_rows, (X - CENT[pick]).tolist())
+        ]
+    cbs = pq_codebooks(
+        vectors, vec_col, id_col, m=m, n_codes=n_codes,
+        refine_iters=pq_iters, sample_n=sample_n, _prefix_rows=rows,
     )
+    return cent, cbs
 
 
 def build_ivfpq_index(
@@ -1873,9 +1808,10 @@ def build_ivfpq_index(
 ) -> IvfPqIndex:
     """Train the IVF coarse quantizer and the PQ codebooks (both
     driver-side Lloyd over the same bounded deterministic sample
-    recipe), then build the compressed inverted list in one pass: cell
-    assignment uses the RAW vector (full precision where it matters —
-    routing), the stored payload is the PQ reconstruction + its norm.
+    recipe, _train_ivfpq), then build the compressed inverted list in
+    one encode scan: cell assignment uses the RAW vector (full
+    precision where it matters — routing), the stored payload is the
+    PQ reconstruction + its norm.
 
     ``residual=False`` (the flat variant): codewords are trained on
     raw vector slices. ``residual=True`` is classic IVFADC (Jégou et
@@ -1888,65 +1824,21 @@ def build_ivfpq_index(
     order (see test_ivfpq_residual_beats_flat_on_clusters). The
     codebook stays a single broadcastable literal (residual training
     does NOT need per-cell codebooks) and every step remains
-    ANSI-SQL-expressible for the oracle: residual = zip_with(x, cv,
-    '-') after assignment, reconstruction = zip_with(cv, recon, '+').
-    The residual build pins the assignment (the residual pass and the
-    inverted-list build both consume it) and materializes eagerly so
-    the pin can be dropped before returning."""
-    from pyspark import StorageLevel
-
-    # ONE TakeOrdered prefix collect trains the coarse quantizer, the
-    # flat-path codebooks AND supplies the vector dim (all three are
-    # lowest-id-prefix consumers)
-    prefix_n = max(n_cells, n_codes, sample_n)
-    prefix_rows = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(prefix_n)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .collect()
+    ANSI-SQL-expressible for the oracle: residual = x - cv after
+    assignment, reconstruction = cv + recon."""
+    cent, cbs = _train_ivfpq(
+        vectors, vec_col, id_col, n_cells, nprobe_refine_iters, m,
+        n_codes, refine_iters, sample_n, residual,
     )
-    cent = ivf_centroids(
-        vectors, vec_col, id_col, n_cells,
-        refine_iters=nprobe_refine_iters, sample_n=sample_n,
-        _prefix_rows=prefix_rows,
+    idx = IvfPqIndex(
+        cent, None, id_col, codebooks=cbs, m=m, vec_col=vec_col,
+        residual=residual, dim=cent._dim,
     )
-    dim = getattr(cent, "_dim", None) or _dim_of(vectors, vec_col)
-    assigned = ivf_assign(vectors, cent, vec_col, id_col, dim)
-    if residual:
-        # no count() here: the codebooks' TakeOrdered is the first
-        # consumer and materializes the cache it touches; inv.count()
-        # below is the full materialization the pin-drop waits on
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        cbs = pq_codebooks(
-            _ivfpq_residual(assigned, cent, vec_col, id_col, dim),
-            vec_col, id_col, m=m, n_codes=n_codes,
-            refine_iters=refine_iters, sample_n=sample_n,
-        )
-        inv = _ivfpq_encode(
-            vectors, assigned, cent, cbs, m, vec_col, id_col,
-            residual=True, dim=dim,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        inv.count()  # eager: safe to drop the assignment pin below
-        assigned.unpersist()
-        return IvfPqIndex(
-            cent, inv, id_col, codebooks=cbs, m=m, vec_col=vec_col,
-            residual=True, dim=dim,
-        )
-    cbs = pq_codebooks(
-        vectors, vec_col, id_col, m=m, n_codes=n_codes,
-        refine_iters=refine_iters, sample_n=sample_n,
-        _prefix_rows=prefix_rows,
+    idx.inverted = _persisted_list(
+        vectors, cent._cent_rows, id_col, vec_col, cent._dim, idx._pq(),
+        materialize=materialize,
     )
-    inv = _ivfpq_encode(
-        vectors, assigned, cent, cbs, m, vec_col, id_col,
-        residual=False, dim=dim,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if materialize:
-        inv.count()
-    return IvfPqIndex(
-        cent, inv, id_col, codebooks=cbs, m=m, vec_col=vec_col,
-        residual=False, dim=dim,
-    )
+    return idx
 
 
 def ivfpq_topk(
@@ -1972,71 +1864,23 @@ def ivfpq_topk(
     row-identical to pq_topk (equivalence-tested); recall < 1 twice
     over otherwise (probe misses + quantization), traded via nprobe
     and m/n_codes. ``residual=True`` selects the IVFADC form (codes on
-    per-cell residuals — see build_ivfpq_index). Ties broken by id."""
-    # one-shot: train everything driver-side from ONE prefix collect
-    # (coarse quantizer; flat codebooks from the raw prefix; residual
-    # codebooks from the prefix rows assigned + residualized with the
-    # same exact rounded-argmax arithmetic the distributed form uses),
-    # then search as a single NumPy probe scan. The resident
-    # IvfPqIndex builds and probes with the expression pipeline.
-    prefix_n = max(n_cells, n_codes, sample_n)
-    prefix_rows = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(prefix_n)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .collect()
-    )
-    cent = ivf_centroids(
-        vectors, vec_col, id_col, n_cells,
-        refine_iters=refine_iters, sample_n=sample_n,
-        _prefix_rows=prefix_rows,
+    per-cell residuals — see build_ivfpq_index). Ties broken by id.
+    Trains like the resident build, then searches as a single NumPy
+    probe scan over the raw vectors."""
+    cent, cbs = _train_ivfpq(
+        vectors, vec_col, id_col, n_cells, refine_iters, m, n_codes,
+        refine_iters, sample_n, residual,
     )
     cent_rows, dim = cent._cent_rows, cent._dim
     if dim is None:
         return _no_candidates(vectors, query_id_col, id_col, "adc_sim")
-    if residual:
-        pfx = [
-            (int(r["_id"]), [float(x) for x in r["_v"]])
-            for r in prefix_rows
-        ]
-        cent_map = {c: cv for c, cv in cent_rows}
-        res_rows = [
-            (
-                rid,
-                [float(x) - cent_map[cell][i] for i, x in enumerate(v)],
-            )
-            for rid, v, cell in _py_assign_cells(pfx, cent_rows)
-        ]
-        cbs = pq_codebooks(
-            vectors, vec_col, id_col, m=m, n_codes=n_codes,
-            refine_iters=refine_iters, sample_n=sample_n,
-            _prefix_rows=res_rows,
-        )
-    else:
-        cbs = pq_codebooks(
-            vectors, vec_col, id_col, m=m, n_codes=n_codes,
-            refine_iters=refine_iters, sample_n=sample_n,
-            _prefix_rows=prefix_rows,
-        )
     q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-    probe = _py_probe_cells(q_rows, cent_rows, nprobe)
     scored = _np_ivf_probe_scan(
-        vectors, cent_rows, q_rows, probe, id_col, vec_col,
-        query_id_col, "_sraw", dim,
-        pq={"m": m, "width": dim // m,
-            "cb_rows": getattr(cbs, "_cb_rows"),
-            "residual": residual},
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(F.col("_sraw"), 6).alias("adc_sim"),
+        vectors, q_rows, _py_probe_cells(q_rows, cent_rows, nprobe),
+        id_col, vec_col, query_id_col, "_sraw", dim, cent_rows,
+        {"m": m, "residual": residual, "cb_rows": cbs._cb_rows},
     )
-    return partial_topk(
-        scored,
-        query_id_col,
-        [F.col("adc_sim").desc(), F.col(id_col).asc()],
-        k,
-    ).select(query_id_col, "rank", id_col, "adc_sim")
+    return _round_topk(scored, query_id_col, id_col, "adc_sim", k)
 
 
 def sq_stats(

@@ -1408,9 +1408,10 @@ class CrawlEngine:
         #     re-enter next round. (b) redirect/rewrite final urls whose
         #     hash differs from the fetched row's url_hash, minus
         #     everything already known. Disjoint union => the cumulative
-        #     seen stays a true set with NO per-round distinct; at scale
-        #     (b)'s anti-join rides the same bloom prefilter as the
-        #     frontier mark.
+        #     seen stays a true set with NO per-round distinct. (b) and
+        #     (c) below drop known hashes with the exact shuffle-hash
+        #     anti-join against the whole seen table (anti_join_seen),
+        #     not the frontier mark's bloom prefilter.
         new_staged_hashes = unseen.select("url_hash").join(
             spill.select("url_hash"), "url_hash", "left_anti"
         )
@@ -1447,9 +1448,9 @@ class CrawlEngine:
             .select(U.url_hash64(F.col("_fcanon")).alias("url_hash"))
             .distinct()
         )
-        final_new = final_cand.join(
-            state.seen.hint("shuffle_hash"), "url_hash", "left_anti"
-        ).join(new_staged_hashes, "url_hash", "left_anti")
+        final_new = SEEN.anti_join_seen(final_cand, state.seen).join(
+            new_staged_hashes, "url_hash", "left_anti"
+        )
         # (c) battery-REJECTED staged rows: the oracle adds every
         # staged row's canonical hash to seen, rejects included
         # (oracle.py: hash = url_hash if canon, before the reject
@@ -1460,7 +1461,7 @@ class CrawlEngine:
         # here over the (small) rejected slice only. Same discard
         # semantics as the oracle's set: spilled/pool hashes knock a
         # rejected contribution out for this round too.
-        rejected_hashes = (
+        rejected_cand = (
             staged.filter(F.col("reject_reason").isNotNull())
             .select(
                 U.canonicalize_udf(F.col("clean_url")).alias("_rc")
@@ -1468,7 +1469,9 @@ class CrawlEngine:
             .filter(F.col("_rc").isNotNull())
             .select(U.url_hash64(F.col("_rc")).alias("url_hash"))
             .distinct()
-            .join(state.seen.hint("shuffle_hash"), "url_hash", "left_anti")
+        )
+        rejected_hashes = (
+            SEEN.anti_join_seen(rejected_cand, state.seen)
             .join(new_staged_hashes, "url_hash", "left_anti")
             .join(final_new, "url_hash", "left_anti")
             .join(spill.select("url_hash"), "url_hash", "left_anti")

@@ -126,14 +126,52 @@ def test_brute_force_topk_matches_expression_formulation(spark, vecs):
     assert got == want
 
 
-def test_ivf_scan_path_matches_distributed_index_path(spark, vecs):
-    """The one-shot NumPy probe scan must produce row-identical output
-    to the distributed build/probe pipeline (same rounded argmax
-    assignment incl. ties, same probe cells, same scores). The
-    fixture contains exact duplicate vectors, so the margin<=1e-6
-    exact-decimal path is exercised."""
-    from pyspark.sql import functions as F
+def _expression_reference(corpus, queries, cent, cbs, residual, k,
+                          nprobe, dim):
+    """The expression form of the IVF family, built explicitly: the
+    inverted list from ivf_assign + l2_norm; with codebooks ``cbs`` the
+    PQ payload from pq_encode -> pq_reconstruct (over x - centroid for
+    the residual form, centroid added back); probe and rank with
+    _probe_topk."""
+    from publicationsretriever_spark.operators.similarity import (
+        _probe_topk,
+        ivf_assign,
+        pq_encode,
+        pq_reconstruct,
+    )
 
+    assigned = ivf_assign(corpus, cent, "embedding", "vec_id", dim)
+    if cbs is None:
+        inv = assigned.withColumn("_n", l2_norm(F.col("embedding"), dim))
+        payload, score = "embedding", "cos_sim"
+    else:
+        base = assigned
+        if residual:
+            base = assigned.join(F.broadcast(cent), "cell_id").select(
+                "vec_id",
+                F.zip_with(
+                    "embedding", "_cv", lambda x, y: x.cast("double") - y
+                ).alias("embedding"),
+            )
+        inv = assigned.select("vec_id", "cell_id").join(
+            pq_reconstruct(pq_encode(base, cbs)), "vec_id"
+        )
+        if residual:
+            inv = inv.join(F.broadcast(cent), "cell_id").withColumn(
+                "recon", F.zip_with("_cv", "recon", lambda x, y: x + y)
+            )
+        inv = inv.withColumn("_n", l2_norm(F.col("recon"), dim))
+        payload, score = "recon", "adc_sim"
+    return _probe_topk(
+        inv, cent, queries, payload, score, "vec_id", "embedding",
+        "query_id", k, nprobe, dim,
+    )
+
+
+def _one_shot_and_resident(corpus, queries, form, k, nprobe, n_cells,
+                           iters, sample_n, m, n_codes):
+    """(one-shot rows, resident rows, the resident index) of one IVF
+    form — "ivf", "pq" (flat IVF-PQ) or "residual" — trained alike."""
     from publicationsretriever_spark.operators.similarity import (
         build_ivf_index,
         build_ivfpq_index,
@@ -141,41 +179,102 @@ def test_ivf_scan_path_matches_distributed_index_path(spark, vecs):
         ivfpq_topk,
     )
 
+    if form == "ivf":
+        one = ivf_topk(
+            corpus, queries, k=k, n_cells=n_cells, nprobe=nprobe,
+            refine_iters=iters, sample_n=sample_n,
+        )
+        ix = build_ivf_index(
+            corpus, n_cells=n_cells, refine_iters=iters, sample_n=sample_n
+        )
+        res = ix.topk(queries, k=k, nprobe=nprobe)
+    else:
+        pq = dict(m=m, n_codes=n_codes, residual=form == "residual")
+        one = ivfpq_topk(
+            corpus, queries, k=k, n_cells=n_cells, nprobe=nprobe,
+            refine_iters=iters, sample_n=sample_n, **pq,
+        )
+        ix = build_ivfpq_index(
+            corpus, n_cells=n_cells, nprobe_refine_iters=iters,
+            refine_iters=iters, sample_n=sample_n, **pq,
+        )
+        res = ix.topk(queries, k=k, nprobe=nprobe)
+    return (
+        sorted(tuple(r) for r in one.collect()),
+        sorted(tuple(r) for r in res.collect()),
+        ix,
+    )
+
+
+def _assert_paths_match_reference(corpus, queries, dim, k, nprobe,
+                                  n_cells, iters, sample_n, m, n_codes):
+    """For IVF, flat IVF-PQ and residual IVF-PQ: the one-shot scan and
+    the resident index both equal the expression reference. The
+    reference trains its own quantizer and codebooks — residual ones
+    over the distributed x - centroid frame — so the shared training
+    is checked too. Returns the reference rows per form."""
+    from publicationsretriever_spark.operators.similarity import (
+        ivf_assign,
+        ivf_centroids,
+        pq_codebooks,
+    )
+
+    cent = ivf_centroids(
+        corpus, n_cells=n_cells, refine_iters=iters, sample_n=sample_n
+    )
+    residuals = (
+        ivf_assign(corpus, cent, "embedding", "vec_id", dim)
+        .join(F.broadcast(cent), "cell_id")
+        .select(
+            "vec_id",
+            F.zip_with(
+                "embedding", "_cv", lambda x, y: x.cast("double") - y
+            ).alias("embedding"),
+        )
+    )
+    refs = {}
+    for form, train_on in (
+        ("ivf", None), ("pq", corpus), ("residual", residuals)
+    ):
+        cbs = None
+        if train_on is not None:
+            cbs = pq_codebooks(
+                train_on, m=m, n_codes=n_codes, refine_iters=iters,
+                sample_n=sample_n,
+            )
+        want = sorted(
+            tuple(r)
+            for r in _expression_reference(
+                corpus, queries, cent, cbs, form == "residual", k,
+                nprobe, dim,
+            ).collect()
+        )
+        one, res, ix = _one_shot_and_resident(
+            corpus, queries, form, k, nprobe, n_cells, iters, sample_n,
+            m, n_codes,
+        )
+        ix.unpersist()
+        assert want, form
+        assert one == want, f"one-shot {form}"
+        assert res == want, f"resident {form}"
+        refs[form] = want
+    return refs
+
+
+def test_ivf_scan_path_matches_distributed_index_path(spark, vecs):
+    """The one-shot NumPy probe scan (raw rows) and the resident index
+    (stored rows) must both produce row-identical output to the
+    expression build/probe pipeline (same rounded argmax assignment
+    incl. ties, same PQ payload, same probe cells, same scores). The
+    fixture contains exact duplicate vectors, so the margin<=1e-6
+    exact-decimal path is exercised."""
     queries = vecs.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    got = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            vecs, queries, k=4, n_cells=4, nprobe=2, sample_n=16
-        ).collect()
+    _assert_paths_match_reference(
+        vecs, queries, 8, k=4, nprobe=2, n_cells=4, iters=1,
+        sample_n=16, m=2, n_codes=4,
     )
-    ix = build_ivf_index(vecs, n_cells=4, refine_iters=1, sample_n=16)
-    want = sorted(
-        tuple(r)
-        for r in ix.topk(queries, k=4, nprobe=2).collect()
-    )
-    ix.inverted.unpersist()
-    assert got == want
-
-    for residual in (False, True):
-        got = sorted(
-            tuple(r)
-            for r in ivfpq_topk(
-                vecs, queries, k=4, n_cells=4, nprobe=2, m=2,
-                n_codes=4, sample_n=16, residual=residual,
-            ).collect()
-        )
-        ix = build_ivfpq_index(
-            vecs, n_cells=4, m=2, n_codes=4, sample_n=16,
-            residual=residual, nprobe_refine_iters=1,
-        )
-        want = sorted(
-            tuple(r)
-            for r in ix.topk(queries, k=4, nprobe=2).collect()
-        )
-        ix.inverted.unpersist()
-        assert got == want, f"residual={residual}"
 
 
 def _signed_zero_corpus(spark):
@@ -227,39 +326,107 @@ def test_np_assign_scan_matches_distributed_assign(spark, vecs):
 
 def test_signed_zero_probe_matches_index_topk(spark):
     """The driver-side probe ranks the rounded-0.0 tie like the
-    distributed probe window: query [1, 0] probes cell 1, so the
-    one-shot scan returns the rows of a reference index (expression
-    assign + _probe_topk) probing one cell."""
-    from publicationsretriever_spark.operators.similarity import (
-        IvfIndex,
-        ivf_assign,
-        ivf_centroids,
-        ivf_topk,
-    )
-
+    distributed probe window: query [1, 0] probes cell 1, which holds
+    all three rows, so the one-shot scan and the resident index return
+    the rows of the expression reference (ivf_assign + _probe_topk)
+    probing one cell — for IVF, flat and residual IVF-PQ."""
     corpus = _signed_zero_corpus(spark)
     queries = corpus.filter(F.col("vec_id") == 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    got = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            corpus, queries, k=3, n_cells=2, nprobe=1, refine_iters=0
-        ).collect()
+    refs = _assert_paths_match_reference(
+        corpus, queries, 2, k=3, nprobe=1, n_cells=2, iters=0,
+        sample_n=256, m=2, n_codes=2,
     )
-    cent = ivf_centroids(corpus, n_cells=2)
-    ix = IvfIndex(
-        cent,
-        ivf_assign(corpus, cent, "embedding", "vec_id", 2).withColumn(
-            "_n", l2_norm(F.col("embedding"), 2)
-        ),
-        "embedding",
-        "vec_id",
-        dim=2,
+    assert len(refs["ivf"]) == 3
+
+
+def _zero_norm_corpus(spark):
+    """24 four-dim vectors; id 20 is the zero vector, outside the
+    16-row training prefix the tests train on."""
+    rows = [
+        (i, [((i * 7 + j * 13) % 19 - 9) / 7.0 for j in range(4)])
+        for i in range(24)
+    ]
+    rows[20] = (20, [0.0, 0.0, 0.0, 0.0])
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_zero_norm_corpus_vector_one_behaviour(spark):
+    """A zero-norm corpus vector outside the training prefix: on IVF it
+    scores null and ranks after every scored row, alike on ivf_topk,
+    IvfIndex.topk and brute_force_topk (all rows probed, so all three
+    are exact); on IVF-PQ (flat and residual) the resident rows equal
+    the one-shot rows."""
+    corpus = _zero_norm_corpus(spark)
+    queries = corpus.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    want = sorted(tuple(r) for r in ix.topk(queries, k=3, nprobe=1).collect())
-    assert len(want) == 3
-    assert got == want
+    one, res, ix = _one_shot_and_resident(
+        corpus, queries, "ivf", 24, 4, 4, 1, 16, 2, 4
+    )
+    ix.unpersist()
+    brute = sorted(
+        tuple(r) for r in brute_force_topk(corpus, queries, k=24).collect()
+    )
+    assert one == res == brute
+    assert len(one) == 3 * 24
+    for qid, rank, vid, sim in one:
+        assert (sim is None) == (vid == 20), (qid, rank, vid, sim)
+        assert vid != 20 or rank == 24, (qid, rank)
+    for form in ("pq", "residual"):
+        one, res, ix = _one_shot_and_resident(
+            corpus, queries, form, 5, 2, 4, 1, 16, 2, 4
+        )
+        ix.unpersist()
+        assert one and one == res, form
+
+
+def test_zero_norm_query_raises_named_error(spark, vecs):
+    """A zero-norm query has no cosine to any cell: ivf_topk and
+    IvfIndex.topk refuse it by id."""
+    from publicationsretriever_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_topk,
+    )
+
+    queries = spark.createDataFrame(
+        [(7, [1.0] * 8), (42, [0.0] * 8)],
+        "query_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="query 42 has a zero-norm"):
+        ivf_topk(vecs, queries, n_cells=4, sample_n=16)
+    ix = build_ivf_index(vecs, n_cells=4, sample_n=16)
+    with pytest.raises(ValueError, match="query 42 has a zero-norm"):
+        ix.topk(queries)
+    ix.unpersist()
+
+
+def test_zero_norm_training_vector_raises_named_error(spark):
+    """A zero vector inside the training prefix has no cosine to any
+    cell: the IVF ops refuse it by id instead of dividing by zero in
+    the Lloyd loop."""
+    from publicationsretriever_spark.operators.similarity import (
+        build_ivf_index,
+        build_ivfpq_index,
+        ivf_topk,
+        ivfpq_topk,
+    )
+
+    rows = [(i, [1.0 + i, 2.0, -1.0, 0.5]) for i in range(24)]
+    rows[5] = (5, [0.0, 0.0, 0.0, 0.0])
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = corpus.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
+    )
+    for op in (
+        lambda: ivf_topk(corpus, queries, n_cells=4, sample_n=16),
+        lambda: ivfpq_topk(corpus, queries, n_cells=4, m=2, n_codes=4),
+        lambda: build_ivf_index(corpus, n_cells=4, sample_n=16),
+        lambda: build_ivfpq_index(corpus, n_cells=4, m=2, n_codes=4),
+    ):
+        with pytest.raises(ValueError, match="vector 5 .*zero-norm"):
+            op()
 
 
 def _empty_corpus_ops():

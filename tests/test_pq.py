@@ -169,27 +169,6 @@ def test_topk_recall_vs_brute_force(spark):
     assert top1 == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
-def test_fused_reconstruct_equals_two_step(spark):
-    """pq_reconstruct_fused (one corpus shuffle) must be row-identical
-    to pq_encode -> pq_reconstruct (two shuffles) — same argmin, same
-    subspace concat order."""
-    from publicationsretriever_spark.operators.similarity import (
-        pq_reconstruct_fused,
-    )
-
-    vecs = _clustered_vectors(spark)
-    cbs = pq_codebooks(vecs, m=4, n_codes=4, refine_iters=1)
-    two = {
-        r["vec_id"]: list(r["recon"])
-        for r in pq_reconstruct(pq_encode(vecs, cbs)).collect()
-    }
-    one = {
-        r["vec_id"]: list(r["recon"])
-        for r in pq_reconstruct_fused(vecs, cbs, m=4).collect()
-    }
-    assert one == two
-
-
 def test_ivfpq_full_probe_equals_pq(spark):
     """With nprobe == n_cells the IVF pruning is a no-op, so ivfpq_topk
     must be row-identical to pq_topk (same codebooks, same @6dp

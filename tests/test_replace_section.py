@@ -57,3 +57,15 @@ def test_heading_must_be_a_whole_line(tmp_path):
 def test_rerun_is_idempotent(tmp_path):
     once = _splice(tmp_path, "## Middle", "## Middle\n\nnew middle\n")
     assert _splice(tmp_path, "## Middle", "## Middle\n\nnew middle\n", once) == once
+
+
+def test_hand_written_tail_survives_rerun(tmp_path):
+    # generated text ends with END_MARK; the analysis written below it
+    # is kept when the section is regenerated
+    end = _mod.END_MARK
+    tail = "\nReading: hand-written analysis.\n\n"
+    doc = FIRST + "\n## Middle\n\nold table\n\n" + end + "\n" + tail + LAST
+    new = "## Middle\n\nnew table\n\n" + end
+    out = _splice(tmp_path, "## Middle", new, doc)
+    assert out == FIRST + "\n" + new + "\n" + tail + LAST
+    assert _splice(tmp_path, "## Middle", new, out) == out

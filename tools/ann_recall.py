@@ -22,7 +22,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
-from bench_cluster_scaling import replace_section  # noqa: E402
+from bench_cluster_scaling import END_MARK, replace_section  # noqa: E402
 
 MARK = "## ANN recall"
 
@@ -171,6 +171,7 @@ def main() -> None:
         lines.append(
             f"| {name} | {r['recall_at_k']} | {r['min_query_recall']} |"
         )
+    lines += ["", END_MARK]
     replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps(result, indent=2))
 

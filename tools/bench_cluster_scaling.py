@@ -195,10 +195,16 @@ def run_level(n_exec: int, n_urls: int, n_hosts: int, pages_max: int,
     )
 
 
+#: the line each section writer ends its generated text with: a rerun
+#: replaces only up to it, so analysis written below it survives
+END_MARK = "<!-- end of generated section -->"
+
+
 def replace_section(md_path: Path, mark: str, section: str) -> None:
-    """Replace the ``mark`` heading's section of ``md_path`` — the text
-    from the heading up to the next ``## `` heading — with ``section``,
-    or append ``section`` when no line is that heading."""
+    """Replace the ``mark`` heading's section of ``md_path`` with
+    ``section``, or append ``section`` when no line is that heading.
+    The replaced text runs from the heading through its END_MARK line
+    when the section has one, else up to the next ``## `` heading."""
     md = md_path.read_text()
     section = section.rstrip("\n") + "\n"
     head = re.search(f"^{re.escape(mark)}$", md, re.M)
@@ -206,7 +212,11 @@ def replace_section(md_path: Path, mark: str, section: str) -> None:
         md = md.rstrip() + "\n\n" + section
     else:
         nxt = md.find("\n## ", head.end())
-        md = md[:head.start()] + section + (md[nxt:] if nxt != -1 else "")
+        end = len(md) if nxt == -1 else nxt
+        stop = re.compile(f"^{re.escape(END_MARK)}\n?", re.M).search(
+            md, head.end(), end
+        )
+        md = md[:head.start()] + section + md[stop.end() if stop else end:]
     md_path.write_text(md)
 
 

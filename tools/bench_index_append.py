@@ -23,7 +23,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
-from bench_cluster_scaling import replace_section  # noqa: E402
+from bench_cluster_scaling import END_MARK, replace_section  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 MARK = "## ANN index append cost"
@@ -136,6 +136,7 @@ def main() -> None:
                 f"{k['append_wall']} | {k['rebuild_wall']} | "
                 f"{k['append_vs_rebuild']} |"
             )
+    lines += ["", END_MARK]
     replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps({
         s: {k: results[s][k]["append_vs_rebuild"]

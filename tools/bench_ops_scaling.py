@@ -42,6 +42,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
 from bench_cluster_scaling import (  # noqa: E402
+    END_MARK,
     LEVELS,
     hardware_ceiling,
     replace_section,
@@ -178,6 +179,7 @@ def main() -> None:
         f"**{result['scaling_efficiency_total_raw']}** | "
         f"**{result['scaling_efficiency_total_normalized']}** |"
     )
+    lines += ["", END_MARK]
     replace_section(bench / "BASELINE.md", mark, "\n".join(lines))
     print(json.dumps({k: v for k, v in result.items() if k != "all_runs"}, indent=2))
 

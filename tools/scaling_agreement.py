@@ -23,7 +23,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from bench_cluster_scaling import replace_section  # noqa: E402
+from bench_cluster_scaling import END_MARK, replace_section  # noqa: E402
 
 MARK = "## Topology agreement"
 
@@ -193,6 +193,7 @@ def main() -> None:
             "the 100 TB operating point), fetched-URLs/sec efficiency: "
             + "; ".join(parts) + "."
         )
+    lines += ["", END_MARK]
     replace_section(bench / "BASELINE.md", MARK, "\n".join(lines))
     print(json.dumps(rows, indent=2))
 
