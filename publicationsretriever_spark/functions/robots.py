@@ -4,7 +4,8 @@ robots-rules table.
 The crawl engine's robots gate consumes a structured
 ``(domain, disallow array<string>)`` frame (plans/rounds.py robots
 broadcast; the synthetic web hands it over pre-parsed). Production
-fetches raw ``/robots.txt`` bodies — this module is the adapter.
+fetches raw ``/robots.txt`` bodies — this module is the adapter, and
+``longest_rule_match`` is the gate's RFC 9309 rule matcher.
 
 Group semantics per RFC 9309 §2.2: a group is one or more consecutive
 ``User-agent`` lines followed by rules; a ``User-agent`` line after a
@@ -26,7 +27,7 @@ once per host per crawl-delay window, never per URL.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -132,4 +133,37 @@ def robots_rules_df(
         F.col("r.allow").alias("allow"),
         F.col("r.crawl_delay").alias("crawl_delay"),
         F.col("r.sitemaps").alias("sitemaps"),
+    )
+
+
+def longest_rule_match(rules: Column, path: Column) -> Column:
+    """Octet length of the longest rule in ``rules`` matching ``path``
+    (an attribute: it is read once per rule), 0 when none does — the
+    RFC 9309 §2.2.2 longest-match ranking. §2.2.3: '*' (any chars) and
+    a TRAILING '$' (end anchor) MUST be supported — rules carrying
+    either take the regex branch (escape regex specials, '*' -> '.*',
+    '$' kept as the anchor); plain rules stay on the cheap startswith
+    path. Specificity counts the RULE's own octets either way."""
+
+    def matches(p: Column) -> Column:
+        anchored = p.endswith("$")
+        base = F.when(
+            anchored, F.substring(p, 1, F.length(p) - 1)
+        ).otherwise(p)
+        esc = F.regexp_replace(
+            base, r"([.^$+?(){}\[\]\\|])", r"\\$1"
+        )
+        pat = F.concat(
+            F.lit("^"),
+            F.replace(esc, F.lit("*"), F.lit(".*")),
+            F.when(anchored, F.lit("$")).otherwise(F.lit("")),
+        )
+        return F.when(
+            p.contains("*") | p.endswith("$"), F.regexp_like(path, pat),
+        ).otherwise(path.startswith(p))
+
+    return F.aggregate(
+        F.filter(rules, matches),
+        F.lit(0),
+        lambda acc, p: F.greatest(acc, F.length(p)),
     )

@@ -2606,41 +2606,27 @@ def hard_negatives(
     never occupies a negative slot. @6dp cosine, id-asc tie-break —
     engine-deterministic ranks. Output columns are renamed
     (query_id, rank, neg_id, cos_sim) because query and corpus
-    usually share the pair-id namespace."""
+    usually share the pair-id namespace; an empty corpus gives that
+    frame typed and empty."""
     dim = _dim_of(corpus, vec_col)
     if dim is None:
-        q = queries.select(
-            F.col(query_id_col).alias("_hq"), F.col(vec_col).alias("_qv")
-        ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-        scored = (
-            corpus.withColumn("_n", l2_norm(F.col(vec_col), dim))
-            .crossJoin(F.broadcast(q))
-            .filter(F.col(id_col) != F.col("_hq"))
-            .select(
-                F.col("_hq").alias("query_id"),
-                F.col(id_col).alias("neg_id"),
-                F.round(
-                    dot(F.col(vec_col), F.col("_qv"), dim)
-                    / (F.col("_n") * F.col("_qn")),
-                    6,
-                ).alias("cos_sim"),
-            )
+        return _no_candidates(corpus, "query_id", id_col, "cos_sim").toDF(
+            "query_id", "rank", "neg_id", "cos_sim"
         )
-    else:
-        # one NumPy scan (bit-identical raw scores, JVM round); the
-        # self-pair filter drops the same rows it did pre-scoring
-        q_rows = _collect_query_rows(queries, query_id_col, vec_col)
-        scored = (
-            _np_cross_scores(
-                corpus, q_rows, id_col, vec_col, "_hq", "_s", dim
-            )
-            .filter(F.col(id_col) != F.col("_hq"))
-            .select(
-                F.col("_hq").alias("query_id"),
-                F.col(id_col).alias("neg_id"),
-                F.round(F.col("_s"), 6).alias("cos_sim"),
-            )
+    # one NumPy scan (bit-identical raw scores, JVM round); the
+    # self-pair filter drops the same rows it did pre-scoring
+    q_rows = _collect_query_rows(queries, query_id_col, vec_col)
+    scored = (
+        _np_cross_scores(
+            corpus, q_rows, id_col, vec_col, "_hq", "_s", dim
         )
+        .filter(F.col(id_col) != F.col("_hq"))
+        .select(
+            F.col("_hq").alias("query_id"),
+            F.col(id_col).alias("neg_id"),
+            F.round(F.col("_s"), 6).alias("cos_sim"),
+        )
+    )
     return partial_topk(
         scored,
         "query_id",

@@ -1,14 +1,25 @@
 """The frontier-round crawl engine (SURVEY.md §3.1 Spark lifecycle).
 
-One ROUND = one Spark job over the current frontier slice:
+One ROUND = one plan over the current frontier slice, committed as
+one snapshot. ``CrawlEngine.run_round`` builds it as stage methods
+over one round context (``_Round``), in pipeline order:
 
-  frontier -> filter battery -> clean/canonicalize/hash ->
-  in-round dedup + seen mark (J2) -> best-url-per-id (J4, seeds) ->
-  re-cross broadcast join (J3) -> special rewrite (P9) ->
-  blacklist / 403-path (F16, A3) / robots gates -> host quota (N5) ->
-  fetch mapInPandas (N1-N13, token-bucket politeness, redirect hops) ->
-  classify (N9) -> split(results | pages) -> link gate (F15) + caps ->
-  new frontier rows -> DELTA state commit = one snapshot.
+  _stage_and_mark      filter battery, canonicalize, hash, seen mark (J2)
+  _pick_best           best-url-per-id + fallback pool (J4, round 0)
+  _schedule            re-cross (J3), special rewrite (P9), blacklist /
+                       403-path (F16, A3) / robots gates, P11, quota (N5)
+  _fetch_and_classify  fetch mapInPandas (N1-N13, politeness) + N9
+  _pages_and_links     page split, link gate (F15) + caps, MLA (J6/J7)
+  _fallback_wave       J4 fallback wave, results delta, next frontier
+  _seen_delta          the exact, disjoint seen delta
+  _dimension_tables    counters, flags, models, blocked domains
+  _metrics_plan        the one metrics plan (``_finalize`` ingests it)
+
+A round is many Spark jobs: the seven eager cuts (``staged``,
+``marked``, ``ranked`` in round 0 only, ``sched``, ``fetch``,
+``pages``, ``links``) run while the plan is built, then the store's
+close writes the deltas and tables beside the fused metrics job — 118
+jobs, 117 stages and 185 tasks in the ``crawl`` benchmark's timed round.
 
 This replaces the reference's per-record virtual-thread pipeline
 (LoaderAndChecker.loadAndCheckIdUrlPairs, util/url/LoaderAndChecker.java:156-300
@@ -58,6 +69,7 @@ from __future__ import annotations
 import time as _time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, fields
+from functools import partial, reduce
 from typing import Callable, Iterator
 
 import pandas as pd
@@ -69,6 +81,7 @@ from ..functions import filters as FL
 from ..functions import htmlparse as H
 from ..functions import mime as M
 from ..functions import retry as R
+from ..functions import robots as RB
 from ..functions import urls as U
 from ..operators import blocking as B
 from ..operators.besturl import ladder_order, pick_best_url_per_id
@@ -192,17 +205,54 @@ class RoundOutput:
     next_frontier: DataFrame
     metrics_df: DataFrame          # (_t, host_bucket, n, x) tagged aggregates
     finalize: Callable[[list, dict], None]
-    #: cumulative seconds spent in eager _cut materializations while the
-    #: round plan was built — run_round wall minus this is pure driver-
-    #: side construction (py4j + analysis), the Amdahl fixed cost
-    cut_secs: float = 0.0
-    #: per-cut wall seconds keyed by stage name ({'staged': s, ...}) —
-    #: the split of cut_secs the scaling bench uses to separate the
-    #: scalable fetch/page work from fixed small-job barriers
-    cut_breakdown: dict | None = None
-    #: partition count of each mid-round cut ({'staged': n, ...}) —
-    #: parallelism-collapse detector for the scaling ledger
-    cut_parts: dict | None = None
+    #: the round's eager cuts, name -> (wall seconds, partition count)
+    #: ({'staged': (s, n), ...}). run_round wall minus the summed
+    #: seconds is pure driver-side construction (py4j + analysis), the
+    #: Amdahl fixed cost; per cut, the seconds separate the scalable
+    #: fetch/page work from fixed small-job barriers and the partition
+    #: count is the scaling ledger's parallelism-collapse detector
+    cuts: dict[str, tuple[float, int]] = field(default_factory=dict)
+
+
+@dataclass
+class _Round:
+    """One round's context, shared by its stage methods: the state it
+    reads, the round number, the A8 prediction decision, the result
+    frames the stages emit (unioned in emission order into the results
+    delta), the caches ``_finalize`` releases, and the cut ledger."""
+
+    state: CrawlState
+    no: int
+    mla_predict_on: bool
+    results: list[DataFrame] = field(default_factory=list)
+    caches: list[DataFrame] = field(default_factory=list)
+    cuts: dict[str, tuple[float, int]] = field(default_factory=dict)
+
+    def cut(self, df: DataFrame, name: str) -> DataFrame:
+        """Every fan-out point is EAGERLY materialized (localCheckpoint):
+        the round's result-delta is a union of many branches whose
+        stages run CONCURRENTLY inside one job — with lazy .cache() the
+        parallel stages race to compute the same cold partitions (Spark
+        does not lock per-partition cache computation) and the round's
+        Python work (canonicalize/fetch/extract) runs 2-4x. Eager
+        checkpoints compute each stage exactly once AND truncate the
+        logical plan, collapsing downstream analysis cost. Serialized
+        storage: the html-carrying frames stored as deserialized JVM
+        strings GC-thrash small executors (measured 40-70% GC time);
+        serialized blocks live off the hot heap."""
+        assert name not in self.cuts, f"cut {name!r} named twice"
+        # pyspark's MEMORY_AND_DISK is the SERIALIZED level (the
+        # deserialized variant is MEMORY_AND_DISK_DESER, the JVM
+        # localCheckpoint default)
+        t = _time.time()
+        out = df.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+        secs = _time.time() - t
+        # partition count of the materialized cut (no job): a cut with
+        # < cores partitions caps every consumer stage
+        self.cuts[name] = (secs, out.rdd.getNumPartitions())
+        return out
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
@@ -227,19 +277,64 @@ _STATE_TABLES = {f.name for f in fields(CrawlState)} - {
 }
 
 
+def _as_col(v):
+    """A result-row argument: a str is a literal, a Column passes."""
+    return F.lit(v) if isinstance(v, str) else v
+
+
+def _is_doc():
+    return F.col("category").isin("document", "dataset")
+
+
+def _skipped_error():
+    """The error text of a J4 pool url whose id resolved elsewhere
+    (handleLogOfRemainingUrls, LoaderAndChecker.java:685-698)."""
+    return F.concat(
+        F.lit("Skipped in LoaderAndChecker, as a better url was "
+              "selected for id: "),
+        F.col("id"),
+    )
+
+
+def _counts(df: DataFrame, domain_col, **cols) -> DataFrame:
+    """Row-level counter contributions of one source, every counter not
+    named in ``cols`` zero. NO per-source groupBy: merge_domain_counts'
+    single merge groupBy aggregates — Spark's map-side partial agg
+    combines there anyway, so a pre-aggregation per source just adds a
+    shuffle each (5 per round, measured ~10s of the round's fixed
+    cost)."""
+    return df.select(
+        domain_col.alias("domain"),
+        *[cols.get(c, F.lit(0).cast("long")).cast("long").alias(c) for c in (
+            "n5xx", "n_timeout", "n_notype", "n_notdocnorpage",
+            "n_nodocurls", "n_nolinks", "good",
+        )],
+    )
+
+
 def _timed_collect(df: DataFrame) -> tuple[list, float]:
     t = _time.time()
     rows = df.collect()
     return rows, round(_time.time() - t, 3)
 
 
-def _count_row(df: DataFrame, tag: str) -> DataFrame:
-    """One (tag, null, count, 0) row — unions into the fused metrics job."""
+def _count_row(df: DataFrame, tag: str, n=None) -> DataFrame:
+    """One (tag, null, n, 0) row — unions into the fused metrics job;
+    ``n`` is the row count unless given."""
     return df.groupBy().agg(
         F.lit(tag).alias("_t"),
         F.lit(None).cast("int").alias("host_bucket"),
-        F.count(F.lit(1)).alias("n"),
+        (F.count(F.lit(1)) if n is None else n).alias("n"),
         F.lit(0).cast("long").alias("x"),
+    ).select("_t", "host_bucket", "n", "x")
+
+
+def _bucket_rows(df: DataFrame, tag: str, flagged) -> DataFrame:
+    """One (tag, host_bucket, rows, flagged rows) row per host bucket."""
+    return df.groupBy("host_bucket").agg(
+        F.lit(tag).alias("_t"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(flagged.cast("long")).alias("x"),
     ).select("_t", "host_bucket", "n", "x")
 
 
@@ -338,17 +433,13 @@ class CrawlEngine:
             F.col("allow") if "allow" in rob.columns
             else F.lit(None).cast("array<string>")
         ).alias("allow")
-        if "crawl_delay" in rob.columns:
-            rob = rob.select(
-                "domain", "disallow", allow_col,
-                F.col("crawl_delay").cast("double").alias("_cdel_s"),
-            )
-        else:
-            rob = rob.select(
-                "domain", "disallow", allow_col,
-                F.lit(None).cast("double").alias("_cdel_s"),
-            )
-        self._robots_df = rob.cache()
+        cdel_col = (
+            F.col("crawl_delay") if "crawl_delay" in rob.columns
+            else F.lit(None)
+        ).cast("double").alias("_cdel_s")
+        self._robots_df = rob.select(
+            "domain", "disallow", allow_col, cdel_col
+        ).cache()
         self._payload_meta = web.payloads_df(spark).select(
             "image_id", F.col("phash").alias("_phash"),
             F.length("bytes").alias("_fsize"),
@@ -379,12 +470,7 @@ class CrawlEngine:
                 # python-worker shutdown.
                 import threading as _th
 
-                TIMEOUT_RESP = {
-                    "status": -1, "location": None,
-                    "content_type": None, "content_disposition": None,
-                    "content_length": 0, "body_kind": "error",
-                    "image_id": None, "html_links": [],
-                }
+                TIMEOUT_RESP = {**NOT_FOUND, "status": -1}
 
                 # resolver-side cancel hook (LiveHttpResolver registers
                 # its in-flight response per worker thread): closing the
@@ -616,76 +702,86 @@ class CrawlEngine:
         return df
 
     @staticmethod
-    def _result_row(round_no: int, *, pageUrl, doc, valid, accessible, direct,
-                    retry, mime, fileHash, fileSize, filePath, error,
-                    source=None, checked="true"):
-        src = source if source is not None else F.col("url")
+    def _result_row(round_no: int, *, checked="true",
+                    pageUrl="null", doc="null", valid="null",
+                    accessible="null", direct="null", retry="null",
+                    mime="null", fileHash="null", fileSize="null",
+                    filePath="null", error="null"):
+        """One RESULT_SCHEMA projection; every column defaults to the
+        reference's ``"null"`` string (a str is a literal)."""
+        c = _as_col
         return [
-            F.col("id"), src.alias("sourceUrl"), pageUrl.alias("pageUrl"),
-            doc.alias("docOrDatasetUrl"),
+            F.col("id"), F.col("url").alias("sourceUrl"),
+            c(pageUrl).alias("pageUrl"),
+            c(doc).alias("docOrDatasetUrl"),
             F.lit(checked).alias("wasUrlChecked"),
-            valid.alias("wasUrlValid"),
-            accessible.alias("wasDocumentOrDatasetAccessible"),
-            direct.alias("wasDirectLink"),
-            retry.alias("couldRetry"),
-            fileHash.alias("fileHash"), fileSize.alias("fileSize"),
-            mime.alias("mimeType"), filePath.alias("filePath"),
-            error.alias("error"),
-            F.lit(round_no).alias("round"),
+            c(valid).alias("wasUrlValid"),
+            c(accessible).alias("wasDocumentOrDatasetAccessible"),
+            c(direct).alias("wasDirectLink"), c(retry).alias("couldRetry"),
+            c(fileHash).alias("fileHash"), c(fileSize).alias("fileSize"),
+            c(mime).alias("mimeType"), c(filePath).alias("filePath"),
+            c(error).alias("error"), F.lit(round_no).alias("round"),
         ]
+
+    def _unchecked_rows(self, df: DataFrame, error, round_no: int) -> DataFrame:
+        """The wasUrlChecked=false row of each url in ``df``: a J4 pool
+        url, or an attempt row the round budget left pending."""
+        return df.select(*self._result_row(
+            round_no, checked="false", doc="unreachable", retry="true",
+            error=error,
+        ))
 
     def run_round(
         self, state: CrawlState, frontier: DataFrame, round_no: int
     ) -> RoundOutput:
-        """Build one round's full plan; nothing executes until the crawl
-        loop materializes the deltas."""
-        spark = self.spark
-        lit = F.lit
-        _round_caches: list[DataFrame] = []
+        """Build one round's full plan (stages: module docstring); only
+        the eager cuts run here, the rest when the crawl loop commits."""
         # A8 gate: one deterministic decision per round from the
         # counters accumulated through the PRIOR round (the reference
         # consults the same state machine per page under a lock)
-        mla_predict_on = self.use_mla and self.mla_gate.should_run_prediction()
+        rc = _Round(
+            state, round_no,
+            self.use_mla and self.mla_gate.should_run_prediction(),
+        )
+        staged, unseen = self._stage_and_mark(rc, frontier)
+        picked, pool, pool_hashes = self._pick_best(rc, unseen)
+        sched, spill, fetch_in = self._schedule(rc, picked)
+        classified = self._fetch_and_classify(rc, fetch_in)
+        live, links, page_tagged, dynamic_blocked, mla_checked = (
+            self._pages_and_links(rc, classified)
+        )
+        results_delta, next_frontier, pool_next = self._fallback_wave(
+            rc, staged, picked, sched, spill, classified, page_tagged,
+            links, pool,
+        )
+        seen_delta = self._seen_delta(
+            rc, staged, unseen, spill, pool_hashes, classified
+        )
+        fulls, learned_pm = self._dimension_tables(
+            rc, classified, sched, page_tagged, dynamic_blocked
+        )
+        metrics_df = self._metrics_plan(
+            rc, staged, classified, links, live, learned_pm, mla_checked
+        )
+        return RoundOutput(
+            deltas={
+                "results": results_delta,
+                "seen": seen_delta,
+                **self._fetch_deltas(rc, classified),
+            },
+            # blocked_paths is NOT materialized: it is a filter over the
+            # checkpointed path_counts, re-derived each round for free
+            fulls={**fulls, "fallback_pool": pool_next},
+            next_frontier=next_frontier,
+            metrics_df=metrics_df,
+            finalize=partial(self._finalize, rc),
+            cuts=rc.cuts,
+        )
 
-        # Every fan-out point is EAGERLY materialized (localCheckpoint):
-        # the round's result-delta is a union of many branches whose
-        # stages run CONCURRENTLY inside one job — with lazy .cache()
-        # the parallel stages race to compute the same cold partitions
-        # (Spark does not lock per-partition cache computation) and the
-        # round's Python work (canonicalize/fetch/extract) runs 2-4x.
-        # Eager checkpoints compute each stage exactly once AND truncate
-        # the logical plan, collapsing downstream analysis cost.
-        # serialized storage: the html-carrying frames stored as
-        # deserialized JVM strings GC-thrash small executors (measured
-        # 40-70%% GC time); serialized blocks live off the hot heap
-        _cut_secs = [0.0]  # cumulative eager-materialization time:
-        # run_round wall minus this = pure driver-side plan
-        # CONSTRUCTION (py4j + Catalyst analysis), the per-round fixed
-        # cost that does not shrink with executors (the crawl loop
-        # records the split in each round's driver_phases)
-
-        _cut_names: dict[str, float] = {}
-
-        _cut_parts: dict[str, int] = {}
-
-        def _cut(df: DataFrame, name: str = "?") -> DataFrame:
-            # pyspark's MEMORY_AND_DISK is the SERIALIZED level (the
-            # deserialized variant is MEMORY_AND_DISK_DESER, the JVM
-            # localCheckpoint default)
-            _t = _time.time()
-            out = df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-            _dt = _time.time() - _t
-            _cut_secs[0] += _dt
-            _cut_names[name] = round(_cut_names.get(name, 0.0) + _dt, 3)
-            # partition count of the materialized cut (no job): the
-            # scaling ledger uses it to spot parallelism collapse —
-            # a cut with < cores partitions caps every consumer stage
-            _cut_parts[name] = out.rdd.getNumPartitions()
-            return out
-
-        # ---- stage + in-round dedup + seen mark -------------------------
+    def _stage_and_mark(self, rc: _Round, frontier: DataFrame):
+        """Stage + in-round dedup + seen mark (cuts ``staged``,
+        ``marked``). Returns (staged, unseen)."""
+        state = rc.state
         # REBALANCE before the expensive per-row work: from round 1 on
         # the frontier's partitioning mirrors the page stage's host
         # partitioning (links explode per page, hot hosts concentrate),
@@ -695,29 +791,26 @@ class CrawlEngine:
         # round-robin exchange is cheap (shuffle write is a plain copy,
         # no per-row compute) and runs INSIDE the staged job, so the
         # battery executes on evenly-sized partitions.
-        staged = _cut(
+        staged = rc.cut(
             self.prepare_frontier(
-                frontier.repartition(self.num_buckets), round_no
+                frontier.repartition(self.num_buckets), rc.no
             ),
             "staged",
         )
-
-        reject_results = staged.filter(F.col("reject_reason").isNotNull()).select(
-            *self._result_row(
-                round_no,
-                pageUrl=lit("null"), doc=lit("unreachable"),
-                valid=lit("null"), accessible=lit("false"),
-                direct=lit("false"), retry=lit("false"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"),
-                error=F.concat(lit("Discarded: "), F.col("reject_reason")),
+        rc.results.append(
+            staged.filter(F.col("reject_reason").isNotNull()).select(
+                *self._result_row(
+                    rc.no, doc="unreachable", accessible="false",
+                    direct="false", retry="false",
+                    error=F.concat(F.lit("Discarded: "), F.col("reject_reason")),
+                )
             )
         )
 
         ok = staged.filter(F.col("reject_reason").isNull())
         w = Window.partitionBy("url_hash").orderBy("order_in_id", "id")
         seen_count = state.metrics[-1]["seen_total"] if state.metrics else 0
-        marked = _cut(mark_seen(
+        marked = rc.cut(mark_seen(
             ok.withColumn("_rn", F.row_number().over(w)),
             state.seen, "url_hash", seen_count=seen_count,
             bloom_threshold=self.bloom_threshold,
@@ -730,55 +823,59 @@ class CrawlEngine:
             ),
         ), "marked")
 
-        dup_results = marked.filter((F.col("_rn") > 1) | F.col("_seen")).select(
-            *self._result_row(
-                round_no,
-                pageUrl=lit("null"), doc=lit("duplicate"),
-                valid=lit("null"), accessible=lit("null"),
-                direct=lit("null"), retry=lit("true"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"), error=lit("duplicate url"),
+        rc.results.append(
+            marked.filter((F.col("_rn") > 1) | F.col("_seen")).select(
+                *self._result_row(
+                    rc.no, doc="duplicate", retry="true",
+                    error="duplicate url",
+                )
             )
         )
         unseen = marked.filter((F.col("_rn") == 1) & ~F.col("_seen")).drop(
             "_rn", "_seen"
         )
+        return staged, unseen
 
-        # ---- J4: best-url-per-id (seed rounds group by id) ---------------
-        # Non-best urls are NOT dropped: they form the id's FALLBACK
-        # POOL (checkRemainingUrls, LoaderAndChecker.java:534-561) —
-        # tried one per round when the id's attempt has a connect-level
-        # failure — and urls never checked get a "Skipped in
-        # LoaderAndChecker" output row (handleLogOfRemainingUrls,
-        # :685-698), restoring the one-output-row-per-input-record
-        # contract (README.md:19-33). Round-granular cleanups vs the
-        # reference (documented): pool urls are tried in the candidate-
-        # ladder order (the reference iterates set-insertion order) and
-        # one wave per ROUND (the reference loops synchronously).
-        if round_no == 0:
-            ranked = _cut(pick_best_url_per_id(unseen), "ranked")
-            picked = ranked.filter(F.col("is_best")).drop("is_best")
-            # pool wave order = THE ladder order (besturl.ladder_order
-            # — one definition shared with pick_best_url_per_id)
-            wp = Window.partitionBy("id").orderBy(
-                *ladder_order(F.col("priority"), F.col("order_in_id"))
-            )
-            non_best = ranked.filter(~F.col("is_best"))
-            pool = non_best.withColumn("rank", F.row_number().over(wp)).select(
-                "id", "rank", F.col("order_in_id").cast("long").alias("order_in_id"),
-                "url",
-            )
-            pool_hashes = non_best.select("url_hash")
-        else:
-            picked = unseen.withColumn("priority", F.lit(0))
-            pool = (state.fallback_pool if state.fallback_pool is not None
-                    else _empty(spark, FALLBACK_POOL_SCHEMA))
-            pool_hashes = None
+    def _pick_best(self, rc: _Round, unseen: DataFrame):
+        """J4: best-url-per-id, seed round only (cut ``ranked``).
+        Returns (picked, pool, pool_hashes or None).
 
-        # ---- the SCHEDULE plan: recross + rewrite + gates + quota fused
-        # into one cached DataFrame (one window shuffle; every split —
-        # recross hits, path-blocked, robots-blocked, spill, fetch input —
-        # is a filter over the same cache) ---------------------------------
+        Non-best urls are NOT dropped: they form the id's FALLBACK
+        POOL (checkRemainingUrls, LoaderAndChecker.java:534-561) —
+        tried one per round when the id's attempt has a connect-level
+        failure — and urls never checked get a "Skipped in
+        LoaderAndChecker" output row (handleLogOfRemainingUrls,
+        :685-698), restoring the one-output-row-per-input-record
+        contract (README.md:19-33). Round-granular cleanups vs the
+        reference (documented): pool urls are tried in the candidate-
+        ladder order (the reference iterates set-insertion order) and
+        one wave per ROUND (the reference loops synchronously)."""
+        if rc.no != 0:
+            return (
+                unseen.withColumn("priority", F.lit(0)),
+                rc.state.fallback_pool,
+                None,
+            )
+        ranked = rc.cut(pick_best_url_per_id(unseen), "ranked")
+        picked = ranked.filter(F.col("is_best")).drop("is_best")
+        # pool wave order = THE ladder order (besturl.ladder_order
+        # — one definition shared with pick_best_url_per_id)
+        wp = Window.partitionBy("id").orderBy(
+            *ladder_order(F.col("priority"), F.col("order_in_id"))
+        )
+        non_best = ranked.filter(~F.col("is_best"))
+        pool = non_best.withColumn("rank", F.row_number().over(wp)).select(
+            "id", "rank", F.col("order_in_id").cast("long").alias("order_in_id"),
+            "url",
+        )
+        return picked, pool, non_best.select("url_hash")
+
+    def _schedule(self, rc: _Round, picked: DataFrame):
+        """The SCHEDULE plan: recross + rewrite + gates + quota fused
+        into one cut (``sched``; one window shuffle — every split:
+        recross hits, path-blocked, robots-blocked, spill, fetch input —
+        is a filter over it). Returns (sched, spill, fetch_in)."""
+        state = rc.state
         # J3: re-cross against prior results (broadcast — results' doc
         # urls). Deterministic owner per doc-url: min id wins (the
         # reference's owner is whichever thread won the race — we define
@@ -819,9 +916,7 @@ class CrawlEngine:
         sched = sched.filter(F.col("_blk").isNull() | F.col("_orig_id").isNotNull())
 
         # A3/F16: 403-blacklisted (domain, path-prefix) pairs
-        bpaths = (state.blocked_paths if state.blocked_paths is not None
-                  else _empty(spark, "domain string, path string"))
-        bp = bpaths.withColumnRenamed("path", "_bp_path").withColumn(
+        bp = state.blocked_paths.withColumnRenamed("path", "_bp_path").withColumn(
             "_pblk", F.lit(True)
         )
         sched = sched.join(
@@ -844,40 +939,9 @@ class CrawlEngine:
         sched = sched.join(
             F.broadcast(robots), sched["top3"] == robots["domain"], "left"
         ).drop(robots["domain"])
-
         # path projected into an attribute: an inline expression read
-        # inside the filter/aggregate lambdas re-runs per prefix.
-        # RFC 9309 §2.2.3: '*' (any chars) and a TRAILING '$' (end
-        # anchor) MUST be supported — rules carrying either take the
-        # regex branch (escape regex specials, '*' -> '.*', '$' kept
-        # as the anchor); plain rules stay on the cheap startswith
-        # path. Rule specificity (the longest-match ranking) counts
-        # the RULE's own octets either way.
-        def _rule_matches(p):
-            anchored = p.endswith("$")
-            base = F.when(
-                anchored, F.substring(p, 1, F.length(p) - 1)
-            ).otherwise(p)
-            esc = F.regexp_replace(
-                base, r"([.^$+?(){}\[\]\\|])", r"\\$1"
-            )
-            pat = F.concat(
-                F.lit("^"),
-                F.replace(esc, F.lit("*"), F.lit(".*")),
-                F.when(anchored, F.lit("$")).otherwise(F.lit("")),
-            )
-            return F.when(
-                p.contains("*") | p.endswith("$"),
-                F.regexp_like(F.col("_upath"), pat),
-            ).otherwise(F.col("_upath").startswith(p))
-
-        def _longest_match(arr):
-            return F.aggregate(
-                F.filter(arr, _rule_matches),
-                F.lit(0),
-                lambda acc, p: F.greatest(acc, F.length(p)),
-            )
-
+        # inside the matcher's lambdas re-runs per prefix
+        upath = F.col("_upath")
         sched = sched.withColumn(
             "_upath",
             F.regexp_replace(F.col("fetch_url"), "^https?://[^/]*", ""),
@@ -885,10 +949,10 @@ class CrawlEngine:
             "_rob",
             F.when(
                 F.col("disallow").isNotNull(),
-                _longest_match(F.col("disallow"))
+                RB.longest_rule_match(F.col("disallow"), upath)
                 > F.when(
                     F.col("allow").isNotNull(),
-                    _longest_match(F.col("allow")),
+                    RB.longest_rule_match(F.col("allow"), upath),
                 ).otherwise(F.lit(0)),
             ).otherwise(F.lit(False)),
         ).drop("disallow", "allow", "_upath")
@@ -897,8 +961,7 @@ class CrawlEngine:
         # (HttpConnUtils.java:326-334) — applied AFTER the gate ladder
         # (the reference rewrites inside openHttpConnection, after the
         # blacklist/403-path checks) and before the quota window.
-        flags = (state.domain_flags if state.domain_flags is not None
-                 else _empty(spark, DOMAIN_FLAGS_SCHEMA))
+        flags = state.domain_flags
         sched = sched.join(
             F.broadcast(flags), sched["top3"] == flags["domain"], "left"
         ).drop(flags["domain"])
@@ -933,44 +996,33 @@ class CrawlEngine:
         # diverged in round 0 whenever one host mixed priorities past
         # its quota (conformance-tested with mixed seeds).
         wq = Window.partitionBy("top3", "_fetchable").orderBy("url_hash")
-        sched = _cut(sched.withColumn("_hq", F.row_number().over(wq)), "sched")
+        sched = rc.cut(sched.withColumn("_hq", F.row_number().over(wq)), "sched")
 
-        recross_results = sched.filter(F.col("_orig_id").isNotNull()).select(
+        rc.results.append(sched.filter(F.col("_orig_id").isNotNull()).select(
             *self._result_row(
-                round_no,
+                rc.no,
                 pageUrl=F.col("url"), doc=F.col("canon_url"),
-                valid=lit("true"), accessible=lit("true"),
-                direct=lit("true"), retry=lit("true"),
-                mime=F.coalesce(F.col("_orig_mime"), lit("null")),
-                fileHash=lit("null"), fileSize=lit("null"),
-                filePath=F.concat(lit("already retrieved by "), F.col("_orig_id")),
-                error=lit("null"),
+                valid="true", accessible="true", direct="true", retry="true",
+                mime=F.coalesce(F.col("_orig_mime"), F.lit("null")),
+                filePath=F.concat(F.lit("already retrieved by "), F.col("_orig_id")),
             )
-        )
-        pathblock_results = sched.filter(
+        ))
+        rc.results.append(sched.filter(
             F.col("_orig_id").isNull() & F.col("_pblk").isNotNull()
         ).select(
             *self._result_row(
-                round_no,
-                pageUrl=lit("null"), doc=lit("unreachable"),
-                valid=lit("true"), accessible=lit("false"),
-                direct=lit("false"), retry=lit("true"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"), error=lit("path 403-blacklisted"),
+                rc.no, doc="unreachable", valid="true", accessible="false",
+                direct="false", retry="true", error="path 403-blacklisted",
             )
-        )
-        robots_results = sched.filter(
+        ))
+        rc.results.append(sched.filter(
             F.col("_orig_id").isNull() & F.col("_pblk").isNull() & F.col("_rob")
         ).select(
             *self._result_row(
-                round_no,
-                pageUrl=lit("null"), doc=lit("unreachable"),
-                valid=lit("true"), accessible=lit("false"),
-                direct=lit("false"), retry=lit("false"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"), error=lit("robots disallowed"),
+                rc.no, doc="unreachable", valid="true", accessible="false",
+                direct="false", retry="false", error="robots disallowed",
             )
-        )
+        ))
         spill = sched.filter(F.col("_fetchable") & (F.col("_hq") > self.host_quota))
 
         fetch_in = (
@@ -989,8 +1041,10 @@ class CrawlEngine:
             # batches — matching the sequential oracle
             .sortWithinPartitions("host", "url_hash")
         )
+        return sched, spill, fetch_in
 
-        # ---- fetch + N10 guards + N9 classification (one cache) ----------
+    def _fetch_and_classify(self, rc: _Round, fetch_in: DataFrame) -> DataFrame:
+        """Fetch + N10 guards + N9 classification (cut ``fetch``)."""
         MAX_HTML = 5 * 1024 * 1024
         MAX_FULLTEXT = 512 * 1024 * 1024
         fetched = fetch_in.mapInPandas(self._fetch_udf(), schema=FETCH_OUT_SCHEMA)
@@ -1025,18 +1079,18 @@ class CrawlEngine:
             .when(M.is_html_mime(F.col("content_type")), "page")
             .otherwise("other"),
         ).join(F.broadcast(self._payload_meta), "image_id", "left")
-        classified = _cut(classified, "fetch")
+        classified = rc.cut(classified, "fetch")
 
         # doc/error/other fetch outcomes in ONE pass (a single select with
         # when-chains instead of three branch plans)
-        is_doc = F.col("category").isin("document", "dataset")
+        is_doc = _is_doc()
         is_err = F.col("category") == "error"
         err_struct = R.was_valid_and_could_retry(F.col("error_class"), F.col("final_url"))
-        fetch_results = classified.filter(
+        rc.results.append(classified.filter(
             F.col("category").isin("document", "dataset", "error", "other")
         ).select(
             *self._result_row(
-                round_no,
+                rc.no,
                 pageUrl=F.col("url"),
                 doc=F.when(is_doc, F.col("final_url")).otherwise("unreachable"),
                 valid=F.when(is_err, err_struct["wasUrlValid"]).otherwise("true"),
@@ -1052,19 +1106,23 @@ class CrawlEngine:
                     "true",
                 ).otherwise("false"),
                 retry=F.when(is_doc, "true").when(is_err, err_struct["couldRetry"]).otherwise("false"),
-                fileHash=F.when(is_doc, F.coalesce(F.col("_phash").cast("string"), lit("null"))).otherwise("null"),
-                fileSize=F.when(is_doc, F.coalesce(F.col("_fsize").cast("string"), lit("null"))).otherwise("null"),
-                mime=F.when(is_doc, F.coalesce(F.col("mime_res.plain_mime"), F.col("content_type"), lit("null")))
+                fileHash=F.when(is_doc, F.coalesce(F.col("_phash").cast("string"), F.lit("null"))).otherwise("null"),
+                fileSize=F.when(is_doc, F.coalesce(F.col("_fsize").cast("string"), F.lit("null"))).otherwise("null"),
+                mime=F.when(is_doc, F.coalesce(F.col("mime_res.plain_mime"), F.col("content_type"), F.lit("null")))
                 .when(is_err, "null")
-                .otherwise(F.coalesce(F.col("content_type"), lit("null"))),
-                filePath=F.when(is_doc, F.coalesce(F.col("image_id"), lit("null"))).otherwise("null"),
+                .otherwise(F.coalesce(F.col("content_type"), F.lit("null"))),
+                filePath=F.when(is_doc, F.coalesce(F.col("image_id"), F.lit("null"))).otherwise("null"),
                 error=F.when(is_err, err_struct["error_msg"])
                 .when(is_doc, "null")
                 .otherwise("not a document or page"),
             )
-        )
+        ))
+        return classified
 
-        # ---- pages -> G5 metadata scan + G3 extraction UDF + G9 ranking --
+    def _pages_and_links(self, rc: _Round, classified: DataFrame):
+        """Pages -> G5 metadata scan + G3 extraction UDF + G9 ranking
+        (cuts ``pages``, ``links``) -> page outcomes. Returns (live,
+        links, page_tagged, dynamic_blocked, mla_checked)."""
         pages = classified.filter(F.col("category") == "page").withColumn(
             "_meta_url",
             H.localhost_fix(
@@ -1078,7 +1136,7 @@ class CrawlEngine:
         # the html served its purpose (meta scan + extraction): drop it
         # before materializing — the pages checkpoint would otherwise
         # store every body a second time
-        pages = _cut(pages.drop("html_body", "mime_res"), "pages")
+        pages = rc.cut(pages.drop("html_body", "mime_res"), "pages")
 
         # dynamic-link pages block their domain (F13,
         # DynamicInternalLinksFoundException, PageCrawler.java:610-611)
@@ -1096,10 +1154,45 @@ class CrawlEngine:
         # live pages continue into link extraction; restricted-access
         # pages stop (MetadataHandler.java:77-120)
         live = pages.filter(~F.col("_restricted")).filter(~has_dynamic)
+        links, mla_checked = self._link_candidates(rc, live)
+        links = rc.cut(links, "links")
 
-        # candidates, ranked per G9: meta docUrl (rank 0) > docFound
-        # signal (rank 1) > structure-MLA hits (J7) > possible-doc links
-        # (<=5) > remaining (<=10)
+        # all page terminal outcomes in ONE pass over the cached pages:
+        # restricted (MetadataHandler stop), dynamic (domain trap), and
+        # "no accepted candidate links" -> one tagged select. "nolinks"
+        # (zero extracted) vs "nodocurl" (links but none accepted) feed
+        # the two PageCrawler counters (:314,369) but emit the same
+        # result row.
+        linked = links.select("page_url").distinct().withColumn("_has_link", F.lit(True))
+        page_tagged = pages.join(
+            linked, pages["url"] == linked["page_url"], "left"
+        ).drop("page_url")
+        page_outcome = (
+            F.when(F.col("_restricted"), "restricted")
+            .when(has_dynamic, "dynamic")
+            .when(F.col("_has_link").isNull() & (F.size("_links") == 0), "nolinks")
+            .when(F.col("_has_link").isNull(), "nodocurl")
+        )
+        page_tagged = page_tagged.withColumn("_po", page_outcome).filter(
+            F.col("_po").isNotNull()
+        )
+        rc.results.append(page_tagged.select(
+            *self._result_row(
+                rc.no,
+                pageUrl=F.col("final_url"), doc="unreachable", valid="true",
+                accessible="false", direct="false",
+                retry=F.when(F.col("_po") == "dynamic", "true").otherwise("false"),
+                error=F.when(F.col("_po") == "restricted", "restricted access (meta rights)")
+                .when(F.col("_po") == "dynamic", "dynamic internal links")
+                .otherwise("no docUrl found on page"),
+            )
+        ))
+        return live, links, page_tagged, dynamic_blocked, mla_checked
+
+    def _link_candidates(self, rc: _Round, live: DataFrame):
+        """Candidates, ranked per G9: meta docUrl (rank 0) > docFound
+        signal (rank 1) > structure-MLA hits (J7) > possible-doc links
+        (<=5) > remaining (<=10). Returns (links, mla_checked)."""
         null_s = F.lit(None).cast("string")
         meta_c = live.filter(F.col("_meta_url").isNotNull()).select(
             F.col("id"), F.col("url").alias("page_url"),
@@ -1143,55 +1236,9 @@ class CrawlEngine:
             "link_reject", self.battery.internal_link_reject_reason(F.lower(F.col("link")))
         ).filter(F.col("link_reject").isNull()).drop("link_reject")
 
-        # J6 path-MLA prediction (MachineLearning.predictInternalDocUrl
-        # :253-353, called at PageCrawler.java:174 after the metadata
-        # scan and BEFORE the gathering loops): predicted doc url =
-        # known doc_path + docid(page) [+known extension], accepted
-        # only when present among the page's accepted links. A page
-        # with a hit skips its docfound/structure/doclike/remaining
-        # candidates (the reference returns from visit() on success) —
-        # if the prediction fails to verify next round, those skipped
-        # candidates are NOT retried (round-granular deviation; the
-        # reference falls back within the same visit).
-        mla_hits = None
-        mla_checked_pages = None
-        if mla_predict_on:
-            pm = (state.path_model if state.path_model is not None
-                  else _empty(spark, PATH_MODEL_SCHEMA))
-            w_pm = Window.partitionBy("page_path")
-            # a page_path with >5 doc_paths is too noisy to predict
-            # from (MachineLearning.java:56-58,273-278)
-            usable = pm.withColumn(
-                "_npp", F.count(F.lit(1)).over(w_pm)
-            ).filter(F.col("_npp") <= 5).drop("_npp")
-            pred = (
-                live.select(
-                    F.col("url").alias("_mp_page"),
-                    U.path_of(F.col("final_url")).alias("_mp_pp"),
-                    F.regexp_replace(
-                        U.doc_id_of(F.col("final_url")), PLAIN_PAGE_EXT_RE, ""
-                    ).alias("_mp_docid"),
-                )
-                .filter(F.col("_mp_docid").isNotNull() & (F.col("_mp_docid") != ""))
-                .join(F.broadcast(usable), F.col("_mp_pp") == usable["page_path"])
-                .withColumn(
-                    "_mp_pred",
-                    F.concat(
-                        F.col("doc_path"), F.col("_mp_docid"),
-                        F.coalesce(F.col("doc_ext"), F.lit("")),
-                    ),
-                )
-            )
-            mla_checked_pages = pred.select("_mp_page").distinct()
-            preds = pred.select("_mp_page", "_mp_pred").distinct()
-            mla_hits = exploded.join(
-                F.broadcast(preds),
-                (exploded["page_url"] == preds["_mp_page"])
-                & (exploded["link"] == preds["_mp_pred"]),
-            ).select(
-                "id", "page_url", "page_final", F.lit(1).alias("pos"),
-                "link", "structure", F.lit("mla").alias("phase"),
-            )
+        mla_hits = mla_checked = None
+        if rc.mla_predict_on:
+            mla_hits, mla_checked = self._path_mla(rc, live, exploded)
             mla_pages = mla_hits.select("page_url").distinct()
             exploded = exploded.join(mla_pages, "page_url", "left_anti")
             doc_found = doc_found.join(mla_pages, "page_url", "left_anti")
@@ -1200,9 +1247,7 @@ class CrawlEngine:
         # :65-100, called at PageCrawler.java:417): a gathered link whose
         # DOM structure matches a stored structure for this page-path is
         # the page's doc link — fetched outside the 5/10 caps.
-        struct_model = (state.structure_model if state.structure_model is not None
-                        else _empty(spark, "page_path string, structure string"))
-        sm = struct_model.select(
+        sm = rc.state.structure_model.select(
             F.col("page_path").alias("_m_pp"), F.col("structure").alias("_m_st"),
         ).withColumn("_m_hit", F.lit(True))
         exploded = exploded.withColumn("_pp", U.path_of(F.col("page_final")))
@@ -1225,7 +1270,7 @@ class CrawlEngine:
         # :710-728): once the "remaining links" phase has been evaluated
         # >= 20 times with a doc hit-rate < 0.2%, it is disabled for all
         # subsequent rounds (round-granular; counters live in lineage).
-        prev_m = state.metrics[-1] if state.metrics else {}
+        prev_m = rc.state.metrics[-1] if rc.state.metrics else {}
         rem_evals = prev_m.get("remaining_evals", 0)
         rem_hits = prev_m.get("remaining_hits", 0)
         remaining_on = (
@@ -1256,7 +1301,70 @@ class CrawlEngine:
         )
         if mla_hits is not None:
             links = links.unionByName(mla_hits)
-        links = _cut(links, "links")
+        return links, mla_checked
+
+    def _path_mla(self, rc: _Round, live: DataFrame, exploded: DataFrame):
+        """J6 path-MLA prediction (MachineLearning.predictInternalDocUrl
+        :253-353, called at PageCrawler.java:174 after the metadata scan
+        and BEFORE the gathering loops): predicted doc url = known
+        doc_path + docid(page) [+known extension], accepted only when
+        present among the page's accepted links. A page with a hit
+        skips its docfound/structure/doclike/remaining candidates (the
+        reference returns from visit() on success) — if the prediction
+        fails to verify next round, those skipped candidates are NOT
+        retried (round-granular deviation; the reference falls back
+        within the same visit)."""
+        w_pm = Window.partitionBy("page_path")
+        # a page_path with >5 doc_paths is too noisy to predict
+        # from (MachineLearning.java:56-58,273-278)
+        usable = rc.state.path_model.withColumn(
+            "_npp", F.count(F.lit(1)).over(w_pm)
+        ).filter(F.col("_npp") <= 5).drop("_npp")
+        pred = (
+            live.select(
+                F.col("url").alias("_mp_page"),
+                U.path_of(F.col("final_url")).alias("_mp_pp"),
+                F.regexp_replace(
+                    U.doc_id_of(F.col("final_url")), PLAIN_PAGE_EXT_RE, ""
+                ).alias("_mp_docid"),
+            )
+            .filter(F.col("_mp_docid").isNotNull() & (F.col("_mp_docid") != ""))
+            .join(F.broadcast(usable), F.col("_mp_pp") == usable["page_path"])
+            .withColumn(
+                "_mp_pred",
+                F.concat(
+                    F.col("doc_path"), F.col("_mp_docid"),
+                    F.coalesce(F.col("doc_ext"), F.lit("")),
+                ),
+            )
+        )
+        preds = pred.select("_mp_page", "_mp_pred").distinct()
+        mla_hits = exploded.join(
+            F.broadcast(preds),
+            (exploded["page_url"] == preds["_mp_page"])
+            & (exploded["link"] == preds["_mp_pred"]),
+        ).select(
+            "id", "page_url", "page_final", F.lit(1).alias("pos"),
+            "link", "structure", F.lit("mla").alias("phase"),
+        )
+        return mla_hits, pred.select("_mp_page").distinct()
+
+    def _fallback_wave(self, rc: _Round, staged, picked, sched, spill,
+                       classified, page_tagged, links, pool):
+        """J4 fallback wave + skipped-row emission. Returns
+        (results_delta, next_frontier, pool_next).
+
+        An id's ATTEMPT row this round is its best url (round 0) or
+        its injected fallback/spill re-entry (kind seed|fallback).
+        RESOLVED = the attempt connected without a connect-level
+        failure: any fetch outcome except category 'error', EXCEPT a
+        dynamic-links page (the reference throws DomainBlockedException
+        there, PageCrawler.java:610-611) — plus re-cross hits
+        (connectAndCheckMimeType returns true on an already-found doc).
+        FAILED = attempted but neither resolved nor quota-spilled:
+        covers fetch errors, staging duplicates, silent domain blocks,
+        403-path and robots gates — each of which the reference's
+        checkRemainingUrls loop skips past to the next url."""
         next_frontier = links.select(
             F.col("id"),
             F.col("pos").cast("long").alias("order_in_id"),
@@ -1272,55 +1380,8 @@ class CrawlEngine:
                 "page_final", "structure", "link_phase",
             )
         )
-
-        # all page terminal outcomes in ONE pass over the cached pages:
-        # restricted (MetadataHandler stop), dynamic (domain trap), and
-        # "no accepted candidate links" -> one tagged select. "nolinks"
-        # (zero extracted) vs "nodocurl" (links but none accepted) feed
-        # the two PageCrawler counters (:314,369) but emit the same
-        # result row.
-        linked = links.select("page_url").distinct().withColumn("_has_link", F.lit(True))
-        page_tagged = pages.join(
-            linked, pages["url"] == linked["page_url"], "left"
-        ).drop("page_url")
-        page_outcome = (
-            F.when(F.col("_restricted"), "restricted")
-            .when(has_dynamic, "dynamic")
-            .when(F.col("_has_link").isNull() & (F.size("_links") == 0), "nolinks")
-            .when(F.col("_has_link").isNull(), "nodocurl")
-        )
-        page_tagged = page_tagged.withColumn("_po", page_outcome).filter(
-            F.col("_po").isNotNull()
-        )
-        page_results = page_tagged.select(
-            *self._result_row(
-                round_no,
-                pageUrl=F.col("final_url"), doc=lit("unreachable"),
-                valid=lit("true"), accessible=lit("false"),
-                direct=lit("false"),
-                retry=F.when(F.col("_po") == "dynamic", "true").otherwise("false"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"),
-                error=F.when(F.col("_po") == "restricted", "restricted access (meta rights)")
-                .when(F.col("_po") == "dynamic", "dynamic internal links")
-                .otherwise("no docUrl found on page"),
-            )
-        )
-
-        # ---- J4 fallback wave + skipped-row emission ---------------------
-        # An id's ATTEMPT row this round is its best url (round 0) or
-        # its injected fallback/spill re-entry (kind seed|fallback).
-        # RESOLVED = the attempt connected without a connect-level
-        # failure: any fetch outcome except category 'error', EXCEPT a
-        # dynamic-links page (the reference throws DomainBlockedException
-        # there, PageCrawler.java:610-611) — plus re-cross hits
-        # (connectAndCheckMimeType returns true on an already-found doc).
-        # FAILED = attempted but neither resolved nor quota-spilled:
-        # covers fetch errors, staging duplicates, silent domain blocks,
-        # 403-path and robots gates — each of which the reference's
-        # checkRemainingUrls loop skips past to the next url.
         is_attempt_kind = F.col("kind").isin("seed", "fallback")
-        if round_no == 0:
+        if rc.no == 0:
             attempt_ids = picked.select("id")
         else:
             attempt_ids = staged.filter(is_attempt_kind).select("id").distinct()
@@ -1344,23 +1405,9 @@ class CrawlEngine:
         )
         # resolved ids surrender their pool: every never-checked url
         # gets its "Skipped" row NOW (handleLogOfRemainingUrls)
-        skipped_pool = pool.join(resolved_ids, "id", "left_semi")
-        skipped_results = skipped_pool.select(
-            *self._result_row(
-                round_no,
-                pageUrl=lit("null"), doc=lit("unreachable"),
-                checked="false",
-                valid=lit("null"), accessible=lit("null"),
-                direct=lit("null"), retry=lit("true"),
-                mime=lit("null"), fileHash=lit("null"), fileSize=lit("null"),
-                filePath=lit("null"),
-                error=F.concat(
-                    lit("Skipped in LoaderAndChecker, as a better url was "
-                        "selected for id: "),
-                    F.col("id"),
-                ),
-            )
-        )
+        rc.results.append(self._unchecked_rows(
+            pool.join(resolved_ids, "id", "left_semi"), _skipped_error(), rc.no
+        ))
         # failed ids inject their next-ranked pool url into the next
         # round's frontier (one per round — the round-granular image of
         # the reference's sequential try-until-success loop)
@@ -1382,36 +1429,25 @@ class CrawlEngine:
             F.lit(None).cast("string").alias("structure"),
             F.lit(None).cast("string").alias("link_phase"),
         )
-        next_frontier = next_frontier.unionByName(inject_frontier)
+        # every stage's result rows, in emission order
+        results_delta = reduce(DataFrame.unionByName, rc.results)
+        return results_delta, next_frontier.unionByName(inject_frontier), pool_next
 
-        results_delta = (
-            reject_results.unionByName(dup_results)
-            .unionByName(recross_results)
-            .unionByName(pathblock_results)
-            .unionByName(robots_results)
-            .unionByName(fetch_results)
-            .unionByName(page_results)
-            .unionByName(skipped_results)
-        )
+    def _seen_delta(self, rc: _Round, staged, unseen, spill, pool_hashes,
+                    classified) -> DataFrame:
+        """Seen delta: EXACT-unique and disjoint from prior seen.
 
-        # ---- payload delta (J5 source table): new image ids only ---------
-        new_payloads = classified.filter(
-            is_doc & F.col("image_id").isNotNull()
-        ).select("image_id").distinct()
-        if state.payloads is not None:
-            new_payloads = new_payloads.join(state.payloads, "image_id", "left_anti")
-
-        # ---- seen delta: EXACT-unique and disjoint from prior seen -------
-        # (a) this round's unseen survivors: unique (_rn==1) and proven
-        #     absent from seen (the mark) — MINUS quota-spilled rows,
-        #     which are "not yet checked" and must be fetchable when they
-        #     re-enter next round. (b) redirect/rewrite final urls whose
-        #     hash differs from the fetched row's url_hash, minus
-        #     everything already known. Disjoint union => the cumulative
-        #     seen stays a true set with NO per-round distinct. (b) and
-        #     (c) below drop known hashes with the exact shuffle-hash
-        #     anti-join against the whole seen table (anti_join_seen),
-        #     not the frontier mark's bloom prefilter.
+        (a) this round's unseen survivors: unique (_rn==1) and proven
+        absent from seen (the mark) — MINUS quota-spilled rows, which
+        are "not yet checked" and must be fetchable when they re-enter
+        next round. (b) redirect/rewrite final urls whose hash differs
+        from the fetched row's url_hash, minus everything already
+        known. Disjoint union => the cumulative seen stays a true set
+        with NO per-round distinct. (b) and (c) below drop known hashes
+        with the exact shuffle-hash anti-join against the whole seen
+        table (anti_join_seen), not the frontier mark's bloom
+        prefilter."""
+        seen = rc.state.seen
         new_staged_hashes = unseen.select("url_hash").join(
             spill.select("url_hash"), "url_hash", "left_anti"
         )
@@ -1448,7 +1484,7 @@ class CrawlEngine:
             .select(U.url_hash64(F.col("_fcanon")).alias("url_hash"))
             .distinct()
         )
-        final_new = SEEN.anti_join_seen(final_cand, state.seen).join(
+        final_new = SEEN.anti_join_seen(final_cand, seen).join(
             new_staged_hashes, "url_hash", "left_anti"
         )
         # (c) battery-REJECTED staged rows: the oracle adds every
@@ -1471,7 +1507,7 @@ class CrawlEngine:
             .distinct()
         )
         rejected_hashes = (
-            SEEN.anti_join_seen(rejected_cand, state.seen)
+            SEEN.anti_join_seen(rejected_cand, seen)
             .join(new_staged_hashes, "url_hash", "left_anti")
             .join(final_new, "url_hash", "left_anti")
             .join(spill.select("url_hash"), "url_hash", "left_anti")
@@ -1480,30 +1516,19 @@ class CrawlEngine:
             rejected_hashes = rejected_hashes.join(
                 pool_hashes, "url_hash", "left_anti"
             )
-        seen_delta = new_staged_hashes.unionByName(final_new).unionByName(
+        return new_staged_hashes.unionByName(final_new).unionByName(
             rejected_hashes
         )
 
-        # ---- A2/A3/A4: counter deltas + rule evaluation -------------------
+    def _dimension_tables(self, rc: _Round, classified, sched, page_tagged,
+                          dynamic_blocked):
+        """The small tables rebuilt whole each round. Returns (fulls
+        but fallback_pool, learned_pm or None)."""
+        state = rc.state
+        is_doc = _is_doc()
+        # ---- A2/A3/A4: counter deltas + rule evaluation ---------------
         # one aggregation pass per source, unioned into the dimension
         # merge (operators/blocking.py has the citations)
-        zero = lambda: F.lit(0).cast("long")  # noqa: E731
-
-        def counts(df, domain_col, **cols):
-            named = {c: cols.get(c, zero()) for c in (
-                "n5xx", "n_timeout", "n_notype", "n_notdocnorpage",
-                "n_nodocurls", "n_nolinks", "good",
-            )}
-            # NO per-source groupBy: emit row-level contributions and
-            # let merge_domain_counts' single merge groupBy aggregate —
-            # Spark's map-side partial agg combines there anyway, so a
-            # pre-aggregation per source just adds a shuffle each (5 per
-            # round, measured ~10s of the round's fixed cost)
-            return df.select(
-                domain_col.alias("domain"),
-                *[v.cast("long").alias(k) for k, v in named.items()],
-            )
-
         is_5xx_countable = (
             F.col("error_class").rlike("^http_5..$")
             & (F.col("error_class") != "http_503")
@@ -1513,7 +1538,7 @@ class CrawlEngine:
             & F.col("content_type").isNull()
             & F.col("content_disposition").isNull()
         )
-        fetch_counts = counts(
+        fetch_counts = _counts(
             classified, F.col("host"),
             n5xx=F.when(is_5xx_countable, 1).otherwise(0),
             n_timeout=F.when(F.col("error_class") == "conn_timeout", 1).otherwise(0),
@@ -1525,7 +1550,7 @@ class CrawlEngine:
             good=F.when(is_doc, 1).otherwise(0),
         )
         # +1 good for the DOC-URL domain of every doc hit (UrlUtils.java:119)
-        doc_domain_counts = counts(
+        doc_domain_counts = _counts(
             classified.filter(is_doc),
             U.top3_domain(U.domain_of(F.col("final_url"))),
             good=F.lit(1),
@@ -1533,12 +1558,12 @@ class CrawlEngine:
         # re-crossed rows are output docUrl rows too (handleReCrossedTargetUrl
         # -> addOutputData): page domain + doc domain each +1
         recross_rows = sched.filter(F.col("_orig_id").isNotNull())
-        recross_page_counts = counts(recross_rows, F.col("top3"), good=F.lit(1))
-        recross_doc_counts = counts(
+        recross_page_counts = _counts(recross_rows, F.col("top3"), good=F.lit(1))
+        recross_doc_counts = _counts(
             recross_rows, U.top3_domain(U.domain_of(F.col("canon_url"))),
             good=F.lit(1),
         )
-        page_counts = counts(
+        page_counts = _counts(
             page_tagged.filter(F.col("_po").isin("nolinks", "nodocurl")),
             F.col("host"),
             n_nodocurls=F.when(F.col("_po") == "nodocurl", 1).otherwise(0),
@@ -1550,21 +1575,17 @@ class CrawlEngine:
             .unionByName(recross_doc_counts)
             .unionByName(page_counts)
         ).filter(F.col("domain").isNotNull())
-        prior_dom = (state.domain_counts if state.domain_counts is not None
-                     else _empty(spark, B.DOMAIN_COUNTS_SCHEMA))
-        domain_counts = B.merge_domain_counts(prior_dom, dom_delta).cache()
-        _round_caches.append(domain_counts)
+        domain_counts = B.merge_domain_counts(state.domain_counts, dom_delta).cache()
+        rc.caches.append(domain_counts)
 
         path_delta = classified.filter(F.col("error_class") == "http_403").groupBy(
             F.col("host").alias("domain"),
             B.dir_path(F.col("final_url")).alias("path"),
         ).agg(F.count(F.lit(1)).alias("n403"))
-        prior_paths = (state.path_counts if state.path_counts is not None
-                       else _empty(spark, B.PATH_COUNTS_SCHEMA))
         # dimension tables are tiny but their delta subplans fan out to
         # several materialization jobs — cache the merged result once
-        path_counts = B.merge_path_counts(prior_paths, path_delta).cache()
-        _round_caches.append(path_counts)
+        path_counts = B.merge_path_counts(state.path_counts, path_delta).cache()
+        rc.caches.append(path_counts)
         blocked_paths = B.eval_blocked_paths(path_counts)
 
         # P11 learning: protocol-only / slash-only hops mark the TARGET
@@ -1582,7 +1603,7 @@ class CrawlEngine:
             F.lit(False).alias("https_ok"), F.lit(True).alias("slash_ok"),
         )
         domain_flags = (
-            flags.unionByName(https_learned)
+            state.domain_flags.unionByName(https_learned)
             .unionByName(slash_learned)
             .filter(F.col("domain").isNotNull())
             .groupBy("domain")
@@ -1596,7 +1617,7 @@ class CrawlEngine:
         ).select(
             U.path_of(F.col("page_final")).alias("page_path"), "structure"
         ).filter(F.col("page_path").isNotNull())
-        structure_model = struct_model.unionByName(learned_struct).distinct()
+        structure_model = state.structure_model.unionByName(learned_struct).distinct()
 
         # J6 learning (gatherMLData, MachineLearning.java:121-168):
         # every verified doc that came via a page stores
@@ -1604,8 +1625,7 @@ class CrawlEngine:
         # Runs whenever use_mla (the reference gathers regardless of
         # the prediction gate); pairs are distinct-merged, extensions
         # keep max() per doc_path (deterministic last-write-wins).
-        prior_pm = (state.path_model if state.path_model is not None
-                    else _empty(spark, PATH_MODEL_SCHEMA))
+        prior_pm = state.path_model
         if self.use_mla:
             learned_pm = classified.filter(
                 is_doc & F.col("page_final").isNotNull()
@@ -1652,133 +1672,28 @@ class CrawlEngine:
             .unionByName(unknown_blocked)
             .distinct()
         )
+        return {
+            "blocked_domains": blocked,
+            "domain_counts": domain_counts,
+            "path_counts": path_counts,
+            "domain_flags": domain_flags,
+            "structure_model": structure_model,
+            "path_model": path_model,
+        }, learned_pm
 
-        # ---- the round's ONE metrics plan ---------------------------------
-        # Per-partition lineage (north rule): frontier offsets and
-        # fetch/error counters per host_bucket + delta cardinalities —
-        # all over warm caches, collected by the crawl loop in a single
-        # job after materialization.
-        staged_agg = staged.groupBy("host_bucket").agg(
-            F.lit("staged").alias("_t"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("reject_reason").isNotNull().cast("long")).alias("x"),
-        ).select("_t", "host_bucket", "n", "x")
-        fetch_agg = classified.groupBy("host_bucket").agg(
-            F.lit("fetch").alias("_t"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("error_class").isNotNull().cast("long")).alias("x"),
-        ).select("_t", "host_bucket", "n", "x")
-        # A7 counters on the reference's PER-PAGE basis
-        # (PageCrawler.java:715-717,761): timesCheckedRemainingLinks
-        # increments once per checkRemainingInternalLinks CALL (here: a
-        # page that emitted >=1 remaining-phase candidate this round),
-        # timesFound... once per page whose remaining link verified (the
-        # reference stops at the first hit, so max one per page —
-        # countDistinct over the parent page reproduces that). Evals are
-        # counted at link-GENERATION time (round R), hits at fetch time
-        # (round R+1) — the round-granular image of the reference's
-        # sequential increment-then-check.
-        rem_eval_agg = links.filter(F.col("phase") == "remaining").groupBy().agg(
-            F.lit("remaining_evals").alias("_t"),
-            F.lit(None).cast("int").alias("host_bucket"),
-            # page_url (the fetched row's source url) is unique per
-            # round — page_final could collapse two pages that redirect
-            # to one final url into a single eval
-            F.countDistinct("page_url").alias("n"),
-            F.lit(0).cast("long").alias("x"),
-        ).select("_t", "host_bucket", "n", "x")
-        rem_hit_agg = classified.filter(
-            (F.col("link_phase") == "remaining") & is_doc
-        ).groupBy().agg(
-            F.lit("remaining_hits").alias("_t"),
-            F.lit(None).cast("int").alias("host_bucket"),
-            F.countDistinct("page_final").alias("n"),
-            F.lit(0).cast("long").alias("x"),
-        ).select("_t", "host_bucket", "n", "x")
-        metrics_df = (
-            staged_agg.unionByName(fetch_agg)
-            .unionByName(rem_eval_agg)
-            .unionByName(rem_hit_agg)
-        )
-        if self.use_mla:
-            # A8 gate counter deltas, all over already-planned frames
-            metrics_df = (
-                metrics_df
-                .unionByName(_count_row(learned_pm, "mla_gathered"))
-                .unionByName(_count_row(live, "mla_pages"))
-                .unionByName(
-                    _count_row(
-                        mla_checked_pages
-                        if mla_checked_pages is not None
-                        else _empty(spark, "x string"),
-                        "mla_checked",
-                    )
-                )
-                .unionByName(
-                    classified.filter(
-                        (F.col("link_phase") == "mla") & is_doc
-                    ).groupBy().agg(
-                        F.lit("mla_found").alias("_t"),
-                        F.lit(None).cast("int").alias("host_bucket"),
-                        F.countDistinct("page_final").alias("n"),
-                        F.lit(0).cast("long").alias("x"),
-                    ).select("_t", "host_bucket", "n", "x")
-                )
-            )
-
-        def finalize(rows: list, delta_counts: dict[str, int]) -> None:
-            """Ingest the fused metrics job's rows (collected AFTER the
-            round's deltas materialized) and release the caches."""
-            staged_rows = [r for r in rows if r["_t"] == "staged"]
-            fetch_rows = [r for r in rows if r["_t"] == "fetch"]
-            rem_eval_rows = [r for r in rows if r["_t"] == "remaining_evals"]
-            rem_hit_rows = [r for r in rows if r["_t"] == "remaining_hits"]
-            prev = state.metrics[-1] if state.metrics else {}
-            prev_seen = prev.get("seen_total", 0)
-            state.metrics.append({
-                "round": round_no,
-                "frontier_in": sum(r["n"] for r in staged_rows),
-                "rejected": sum(r["x"] or 0 for r in staged_rows),
-                "fetched": sum(r["n"] for r in fetch_rows),
-                "results": delta_counts.get("results", 0),
-                "seen_total": prev_seen + delta_counts.get("seen", 0),
-                "frontier_next": delta_counts.get("frontier", 0),
-                "remaining_evals": prev.get("remaining_evals", 0)
-                + sum(r["n"] for r in rem_eval_rows),
-                "remaining_hits": prev.get("remaining_hits", 0)
-                + sum(r["n"] for r in rem_hit_rows),
-                "frontier_offsets": {
-                    str(r["host_bucket"]): r["n"] for r in staged_rows
-                },
-                "fetch_counters": {
-                    str(r["host_bucket"]): {"fetched": r["n"], "errors": r["x"]}
-                    for r in fetch_rows
-                },
-            })
-            if self.use_mla:
-                def _one(tag: str) -> int:
-                    return sum(r["n"] for r in rows if r["_t"] == tag)
-
-                self.mla_gate.observe_round(
-                    gathered=_one("mla_gathered"),
-                    pages_reached=_one("mla_pages"),
-                    checked=_one("mla_checked"),
-                    found=_one("mla_found"),
-                )
-                # gate state rides the lineage: resume restores it
-                state.metrics[-1]["mla_gate"] = self.mla_gate.to_lineage()
-                state.metrics[-1]["mla_predicted"] = mla_predict_on
-            for df in _round_caches:
-                df.unpersist()
-
-        deltas = {
-            "results": results_delta,
-            "seen": seen_delta,
-            "payloads": new_payloads,
-        }
+    def _fetch_deltas(self, rc: _Round, classified: DataFrame) -> dict:
+        """Payload delta, plus the order log / html sink when on."""
+        state = rc.state
+        # ---- payload delta (J5 source table): new image ids only ------
+        new_payloads = classified.filter(
+            _is_doc() & F.col("image_id").isNotNull()
+        ).select("image_id").distinct()
+        if state.payloads is not None:
+            new_payloads = new_payloads.join(state.payloads, "image_id", "left_anti")
+        deltas = {"payloads": new_payloads}
         if self.record_order:
             deltas["order_log"] = classified.select(
-                F.lit(round_no).alias("round"), F.col("host"),
+                F.lit(rc.no).alias("round"), F.col("host"),
                 F.col("url_hash"), F.col("planned_fetch_ms"),
             )
         if self.store_html:
@@ -1790,34 +1705,108 @@ class CrawlEngine:
                 F.col("url"), F.col("final_url"),
                 F.md5(F.col("html_body")).alias("html_hash"),
                 F.length(F.col("html_body")).alias("html_size"),
-                F.lit(round_no).alias("round"),
+                F.lit(rc.no).alias("round"),
             )
-        out = RoundOutput(
-            deltas=deltas,
-            # blocked_paths is NOT materialized: it is a filter over the
-            # checkpointed path_counts, re-derived each round for free
-            fulls={
-                "blocked_domains": blocked,
-                "domain_counts": domain_counts,
-                "path_counts": path_counts,
-                "domain_flags": domain_flags,
-                "structure_model": structure_model,
-                "path_model": path_model,
-                "fallback_pool": pool_next,
-            },
-            next_frontier=next_frontier,
-            metrics_df=metrics_df,
-            finalize=finalize,
+        return deltas
+
+    def _metrics_plan(self, rc: _Round, staged, classified, links, live,
+                      learned_pm, mla_checked) -> DataFrame:
+        """The round's ONE metrics plan. Per-partition lineage (north rule): frontier offsets and
+        fetch/error counters per host_bucket + delta cardinalities —
+        all over warm caches, collected by the crawl loop in a single
+        job after materialization."""
+        is_doc = _is_doc()
+        # A7 counters on the reference's PER-PAGE basis
+        # (PageCrawler.java:715-717,761): timesCheckedRemainingLinks
+        # increments once per checkRemainingInternalLinks CALL (here: a
+        # page that emitted >=1 remaining-phase candidate this round),
+        # timesFound... once per page whose remaining link verified (the
+        # reference stops at the first hit, so max one per page —
+        # countDistinct over the parent page reproduces that). Evals are
+        # counted at link-GENERATION time (round R), hits at fetch time
+        # (round R+1) — the round-granular image of the reference's
+        # sequential increment-then-check.
+        metrics_df = (
+            _bucket_rows(staged, "staged", F.col("reject_reason").isNotNull())
+            .unionByName(_bucket_rows(
+                classified, "fetch", F.col("error_class").isNotNull()
+            ))
+            .unionByName(_count_row(
+                links.filter(F.col("phase") == "remaining"), "remaining_evals",
+                # page_url (the fetched row's source url) is unique per
+                # round — page_final could collapse two pages that
+                # redirect to one final url into a single eval
+                F.countDistinct("page_url"),
+            ))
+            .unionByName(_count_row(
+                classified.filter((F.col("link_phase") == "remaining") & is_doc),
+                "remaining_hits", F.countDistinct("page_final"),
+            ))
         )
-        out.cut_secs = _cut_secs[0]
-        out.cut_breakdown = dict(_cut_names)
-        out.cut_parts = dict(_cut_parts)
-        return out
+        if not self.use_mla:
+            return metrics_df
+        # A8 gate counter deltas, all over already-planned frames; the
+        # mla_checked row exists only when prediction ran (finalize
+        # reads an absent tag as 0)
+        metrics_df = (
+            metrics_df
+            .unionByName(_count_row(learned_pm, "mla_gathered"))
+            .unionByName(_count_row(live, "mla_pages"))
+        )
+        if mla_checked is not None:
+            metrics_df = metrics_df.unionByName(
+                _count_row(mla_checked, "mla_checked")
+            )
+        return metrics_df.unionByName(_count_row(
+            classified.filter((F.col("link_phase") == "mla") & is_doc),
+            "mla_found", F.countDistinct("page_final"),
+        ))
+
+    def _finalize(self, rc: _Round, rows: list, delta_counts: dict[str, int]) -> None:
+        """Ingest the fused metrics job's rows (collected AFTER the
+        round's deltas materialized) and release the caches."""
+        state = rc.state
+        staged_rows = [r for r in rows if r["_t"] == "staged"]
+        fetch_rows = [r for r in rows if r["_t"] == "fetch"]
+        tally: dict[str, int] = {}
+        for r in rows:
+            tally[r["_t"]] = tally.get(r["_t"], 0) + r["n"]
+        prev = state.metrics[-1] if state.metrics else {}
+        prev_seen = prev.get("seen_total", 0)
+        state.metrics.append({
+            "round": rc.no,
+            "frontier_in": sum(r["n"] for r in staged_rows),
+            "rejected": sum(r["x"] or 0 for r in staged_rows),
+            "fetched": sum(r["n"] for r in fetch_rows),
+            "results": delta_counts.get("results", 0),
+            "seen_total": prev_seen + delta_counts.get("seen", 0),
+            "frontier_next": delta_counts.get("frontier", 0),
+            "remaining_evals": prev.get("remaining_evals", 0)
+            + tally.get("remaining_evals", 0),
+            "remaining_hits": prev.get("remaining_hits", 0)
+            + tally.get("remaining_hits", 0),
+            "frontier_offsets": {
+                str(r["host_bucket"]): r["n"] for r in staged_rows
+            },
+            "fetch_counters": {
+                str(r["host_bucket"]): {"fetched": r["n"], "errors": r["x"]}
+                for r in fetch_rows
+            },
+        })
+        if self.use_mla:
+            self.mla_gate.observe_round(
+                gathered=tally.get("mla_gathered", 0),
+                pages_reached=tally.get("mla_pages", 0),
+                checked=tally.get("mla_checked", 0),
+                found=tally.get("mla_found", 0),
+            )
+            # gate state rides the lineage: resume restores it
+            state.metrics[-1]["mla_gate"] = self.mla_gate.to_lineage()
+            state.metrics[-1]["mla_predicted"] = rc.mla_predict_on
+        for df in rc.caches:
+            df.unpersist()
 
     # ------------------------------------------------------------------
-
-    def _fresh_state(self) -> CrawlState:
-        return self._state_from({}, [])
 
     def _state_from(
         self, tables: dict[str, DataFrame], metrics: list[dict]
@@ -1922,7 +1911,7 @@ class CrawlEngine:
                 if state.metrics else None
             )
         else:
-            state = self._fresh_state()
+            state = self._state_from({}, [])
             frontier = (
                 seeds.withColumn("depth", F.lit(0))
                 .withColumn("kind", F.lit("seed"))
@@ -1997,12 +1986,11 @@ class CrawlEngine:
             # the scaling bench reads it to split the per-round wall
             # into fixed driver cost vs scalable work
             last["driver_phases"] = {
-                "construct": round(built - out.cut_secs, 3),
-                "cuts": {
-                    k: round(v, 3)
-                    for k, v in (out.cut_breakdown or {}).items()
-                },
-                "cut_parts": dict(out.cut_parts or {}),
+                "construct": round(
+                    built - sum(secs for secs, _ in out.cuts.values()), 3
+                ),
+                "cuts": {k: round(secs, 3) for k, (secs, _) in out.cuts.items()},
+                "cut_parts": {k: n for k, (_, n) in out.cuts.items()},
                 **store.walls,
                 "metrics": metrics_s,
                 "sketch": round(_time.time() - t0, 3),
@@ -2028,46 +2016,17 @@ class CrawlEngine:
         # only (round = -1 marks post-crawl emission); the persisted
         # state keeps the pool pending, so a resumed crawl with more
         # rounds continues the fallback waves exactly.
-        if state.fallback_pool is not None:
-            lit = F.lit
-            flush = state.fallback_pool.select(
-                *self._result_row(
-                    -1,
-                    pageUrl=lit("null"), doc=lit("unreachable"),
-                    checked="false",
-                    valid=lit("null"), accessible=lit("null"),
-                    direct=lit("null"), retry=lit("true"),
-                    mime=lit("null"), fileHash=lit("null"),
-                    fileSize=lit("null"), filePath=lit("null"),
-                    error=F.concat(
-                        lit("Skipped in LoaderAndChecker, as a better url "
-                            "was selected for id: "),
-                        F.col("id"),
-                    ),
-                )
-            )
-            state.results = state.results.unionByName(flush)
+        state.results = state.results.unionByName(
+            self._unchecked_rows(state.fallback_pool, _skipped_error(), -1)
+        )
         # attempt rows still pending in the never-executed next frontier
         # (a fallback injected on the last round, or a quota-spilled
         # seed) are input records the crawl ran out of rounds for —
         # they too owe an output row (no reference analog: the
         # reference always runs to completion; round-budgeted crawls
         # surface the budget in the error text instead)
-        if frontier is not None:
-            lit = F.lit
-            pending = frontier.filter(
-                F.col("kind").isin("seed", "fallback")
-            ).select(
-                *self._result_row(
-                    -1,
-                    pageUrl=lit("null"), doc=lit("unreachable"),
-                    checked="false",
-                    valid=lit("null"), accessible=lit("null"),
-                    direct=lit("null"), retry=lit("true"),
-                    mime=lit("null"), fileHash=lit("null"),
-                    fileSize=lit("null"), filePath=lit("null"),
-                    error=lit("Not checked: crawl round budget exhausted"),
-                )
-            )
-            state.results = state.results.unionByName(pending)
+        state.results = state.results.unionByName(self._unchecked_rows(
+            frontier.filter(F.col("kind").isin("seed", "fallback")),
+            "Not checked: crawl round budget exhausted", -1,
+        ))
         return state

@@ -118,24 +118,39 @@ def synth_pixels(image_id: str, w: int = 8, h: int = 8) -> np.ndarray:
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
+def _block_means(pixels: np.ndarray, n: int) -> np.ndarray:
+    """Luminance downsampled to n x n by block mean. An image narrower
+    or shorter than n would leave blocks empty (a NaN mean); each
+    empty block takes the edge pixel row/column instead, so every
+    size gets a defined grid. At n or more pixels per side no block
+    is empty and the guard changes nothing."""
+    lum = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+    h, w = lum.shape
+    ys = np.linspace(0, h, n + 1, dtype=int)
+    xs = np.linspace(0, w, n + 1, dtype=int)
+    grid = np.empty((n, n))
+    for i in range(n):
+        y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
+        for j in range(n):
+            x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
+            grid[i, j] = lum[min(y0, h - 1):min(y1, h), min(x0, w - 1):min(x1, w)].mean()
+    return grid
+
+
+def _signed64(bits: np.ndarray) -> int:
+    val = 0
+    for b in bits:
+        val = (val << 1) | int(b)
+    return val - (1 << 64) if val >= (1 << 63) else val  # signed int64
+
+
 def phash64(pixels: np.ndarray) -> int:
     """Tiny perceptual hash: 8x8 luminance mean-threshold bits (aHash).
     Plays the role of the reference's md5-of-bytes payload key
     (FileUtils.downloadFile, util/file/FileUtils.java:422-473) at the
     pixel level."""
-    lum = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    # downsample to 8x8 by block mean
-    h, w = lum.shape
-    ys = np.linspace(0, h, 9, dtype=int)
-    xs = np.linspace(0, w, 9, dtype=int)
-    blocks = np.array(
-        [[lum[ys[i]:ys[i+1], xs[j]:xs[j+1]].mean() for j in range(8)] for i in range(8)]
-    )
-    bits = (blocks > blocks.mean()).ravel()
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    return val - (1 << 64) if val >= (1 << 63) else val  # signed int64
+    blocks = _block_means(pixels, 8)
+    return _signed64((blocks > blocks.mean()).ravel())
 
 
 #: 32x32 orthonormal DCT-II basis, precomputed once per process (the
@@ -165,27 +180,14 @@ def dct_phash64(pixels: np.ndarray) -> int:
     and linear contrast scaling — the failure modes of aHash on
     re-encoded crawl payloads. Pure numpy (no PIL/scipy): the DCT is
     one precomputed 32x32 basis matmul per side."""
-    lum = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    h, w = lum.shape
-    ys = np.linspace(0, h, 33, dtype=int)
-    xs = np.linspace(0, w, 33, dtype=int)
-    # block mean with empty-block guard (h or w < 32 repeats edges)
-    grid = np.empty((32, 32))
-    for i in range(32):
-        y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
-        for j in range(32):
-            x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
-            grid[i, j] = lum[min(y0, h - 1):min(y1, h), min(x0, w - 1):min(x1, w)].mean()
+    grid = _block_means(pixels, 32)
     d = _dct32_basis()
     coef = d @ grid @ d.T
     low = coef[:8, :8].ravel()
     med = np.median(low[1:])  # exclude DC from the threshold too
     bits = low > med
     bits[0] = False  # DC slot pinned: brightness carries no bits
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    return val - (1 << 64) if val >= (1 << 63) else val  # signed int64
+    return _signed64(bits)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

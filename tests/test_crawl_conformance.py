@@ -239,6 +239,12 @@ def test_observation_delta_counts_and_phase_ledger(crawl_setup):
         # close-phase walls exist for the in-memory (non-catalog) path
         assert "pooled_ckpt" in phases and "sketch" in phases
         assert isinstance(phases.get("cut_parts"), dict)
+        # the eager cuts, each named once: rounds.cut_s sums "cuts", and
+        # the scaling ledgers record both keys for every round
+        cut_names = {"staged", "marked", "sched", "fetch", "pages", "links"}
+        if m["round"] == 0:
+            cut_names.add("ranked")
+        assert set(phases["cuts"]) == set(phases["cut_parts"]) == cut_names
 
 
 def test_mixed_priority_quota_rejected_seed_and_noncanonical_redirect(spark):

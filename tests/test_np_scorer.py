@@ -467,6 +467,12 @@ def _empty_corpus_ops():
             top + ["cos_sim"],
         ),
         "lsh_topk": (lambda v, q: S.lsh_topk(v, q, k=3), top + ["cos_sim"]),
+        "hard_negatives": (
+            lambda v, q: S.hard_negatives(
+                q, v, k=3, query_id_col="query_id", id_col="vec_id"
+            ),
+            ["query_id", "rank", "neg_id", "cos_sim"],
+        ),
         "semdedup_refine0": (
             lambda v, q: S.semdedup(v, n_cells=2, refine_iters=0),
             ["vec_id", "cell_id", "dup_of", "kept"],

@@ -1683,6 +1683,39 @@ def test_dct_phash_invariance_and_discrimination():
     assert isinstance(dct_phash64(synth_pixels("dct-c", 8, 8)), int)
 
 
+def test_phash_tiny_images_do_not_collide_and_larger_hashes_hold():
+    """Below 8 px per side the aHash's empty 8x8 blocks repeat the edge
+    pixels, so different tiny images no longer all hash to 0 (NaN
+    block means). From 8 px up the hashes keep their recorded values:
+    the synthetic web's 8x8 payload phash is the crawl's fileHash."""
+    import warnings
+
+    from publicationsretriever_spark.sources.imagecodec import (
+        dct_phash64,
+        make_payload_row,
+        phash64,
+        synth_pixels,
+    )
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # no "Mean of empty slice"
+        tiny = [
+            phash64(synth_pixels(f"tiny-{i}", w, h))
+            for w, h in ((4, 4), (5, 12), (9, 7))
+            for i in range(6)
+        ]
+    assert len(set(tiny)) == len(tiny)
+    assert make_payload_row("img-0-0")["phash"] == 4285768908415873579
+    assert make_payload_row("img-3-1")["phash"] == 5419768627904695674
+    for image_id, w, h, ahash, dct in (
+        ("img-0", 8, 8, -3211343450836152993, 2335043759234503768),
+        ("img-2", 13, 21, 6904042706035884895, 2657060535055598212),
+        ("img-3", 69, 9, 629324953144280539, 7502483796550161045),
+    ):
+        px = synth_pixels(image_id, w, h)
+        assert (phash64(px), dct_phash64(px)) == (ahash, dct)
+
+
 def test_decode_image_metrics_dct_kind(spark):
     from publicationsretriever_spark.operators.multimodal import (
         decode_image_metrics,
