@@ -555,17 +555,15 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 5-gram Jaccard pairs >= 0.8 (operators/dedup.
-    ngram_jaccard_pairs_grouped — row-identical to
-    ngram_jaccard_pairs, with the PPJoin contracted to one
-    representative per distinct text so duplicate families never go
-    quadratic in the prefix self-join)."""
+    ngram_jaccard_pairs: the prefix-filtered PPJoin over each
+    document's shingle set, verified exactly)."""
     from publicationsretriever_spark.operators.dedup import (
-        ngram_jaccard_pairs_grouped,
+        ngram_jaccard_pairs,
     )
 
     _load(spark, sf_dir, "documents")
     docs = spark.table("documents").select("doc_id", "text")
-    return ngram_jaccard_pairs_grouped(
+    return ngram_jaccard_pairs(
         docs, "text", "doc_id", k=5, threshold=0.8
     ).orderBy("id_a", "id_b")
 

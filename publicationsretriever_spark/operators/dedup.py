@@ -388,107 +388,6 @@ def ngram_jaccard_pairs(
     return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
 
 
-def ngram_jaccard_pairs_grouped(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    df_mode: str = "collect",
-) -> DataFrame:
-    """Row-identical to :func:`ngram_jaccard_pairs`, built by
-    contraction on EXACT TEXT + expansion — the move
-    :func:`hamming_neardup_pairs_grouped` applies to fingerprints,
-    here applied to the PPJoin: duplicate families make the
-    prefix-token self-join quadratic in the FAMILY size, but the
-    Jaccard verdict and value depend only on the per-doc shingle SET,
-    and identical texts have identical sets. So: (1) every pair
-    within an equal-text group with >= 1 shingle is a jaccard-1.0
-    pair (n_inter = n_a = n_b = the group's set size) — expanded
-    directly from the member list when 1.0 >= threshold; (2) a
-    cross-group pair exists iff the group REPRESENTATIVES form a
-    qualifying pair, with the same (n_inter, jaccard) and the n_a/n_b
-    sides following the member id order. The PPJoin runs over one
-    representative per distinct text; its canonical rarity order is
-    computed over the representatives, which is still a consistent
-    total order, and prefix filtering is exact under ANY such order
-    (the operator's own docstring) — the verified output is
-    unchanged. Group key = md5(text) (same accepted collision class
-    as the operator's xxhash64 shingles). Each unordered pair is
-    produced exactly once (within xor cross)."""
-    g = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_tx"),
-        F.md5(F.col(text_col)).alias("_tk"),
-    )
-    grp = g.groupBy("_tk").agg(
-        F.min("_id").alias("_rep"),
-        F.count(F.lit(1)).alias("_gn"),
-        F.first("_tx").alias("_tx"),  # texts identical within a group
-    ).localCheckpoint(eager=True)
-    reps = grp.select(
-        F.col("_rep").alias(id_col), F.col("_tx").alias(text_col)
-    )
-    rp = ngram_jaccard_pairs(
-        reps, text_col, id_col, k=k, threshold=threshold,
-        df_mode=df_mode,
-    )
-    # rep-keyed maps are contracted (one row per distinct text):
-    # broadcast them for the expansion joins; the member table is
-    # corpus-sized and never broadcast
-    r1 = grp.select(F.col("_rep").alias("id_a"), F.col("_tk").alias("_ka"))
-    r2 = grp.select(F.col("_rep").alias("id_b"), F.col("_tk").alias("_kb"))
-    rpk = (
-        rp.join(F.broadcast(r1), "id_a")
-        .join(F.broadcast(r2), "id_b")
-        .select("_ka", "_kb", "n_inter", "n_a", "n_b", "jaccard")
-    )
-    ga = g.select(F.col("_id").alias("_ia"), F.col("_tk").alias("_ka"))
-    gb = g.select(F.col("_id").alias("_ib"), F.col("_tk").alias("_kb"))
-    swap = F.col("_ia") > F.col("_ib")
-    cross = (
-        ga.join(F.broadcast(rpk), "_ka")
-        .join(gb, "_kb")
-        .select(
-            F.least(F.col("_ia"), F.col("_ib")).alias("id_a"),
-            F.greatest(F.col("_ia"), F.col("_ib")).alias("id_b"),
-            F.col("n_inter"),
-            # n_a/n_b follow the id order: the rep pair's n_a belongs
-            # to the _ka side — swap when the member ids swap
-            F.when(swap, F.col("n_b")).otherwise(F.col("n_a")).alias("n_a"),
-            F.when(swap, F.col("n_a")).otherwise(F.col("n_b")).alias("n_b"),
-            F.col("jaccard"),
-        )
-    )
-    if not (1.0 >= float(threshold)):
-        return cross
-    # within-group pairs: jaccard exactly 1.0, set sizes equal — only
-    # for groups whose text yields >= 1 shingle (shingle-less docs
-    # never enter the base operator's set table)
-    s_sh = F.size(
-        F.array_distinct(_shingles(_words(F.col("_tx")), k))
-    )
-    multi = grp.filter(F.col("_gn") >= 2).select(
-        "_tk", s_sh.alias("_s")
-    ).filter(F.col("_s") >= 1)
-    wa = g.select(F.col("_id").alias("_ia"), "_tk")
-    wb = g.select(F.col("_id").alias("_ib"), "_tk")
-    within = (
-        wa.join(F.broadcast(multi), "_tk")
-        .join(wb, "_tk")
-        .filter(F.col("_ia") < F.col("_ib"))
-        .select(
-            F.col("_ia").alias("id_a"),
-            F.col("_ib").alias("id_b"),
-            F.col("_s").alias("n_inter"),
-            F.col("_s").alias("n_a"),
-            F.col("_s").alias("n_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return within.unionByName(cross)
-
-
 def simhash64(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
     """SimHash over word tokens: per bit i, sign of sum over tokens of
     (+1 if bit_i(md5(token)) else -1). ``bits`` kept small (16) so the
@@ -783,12 +682,11 @@ def connected_components(
 
     Labels only decrease and are bounded by the component minimum, and
     a no-change fixpoint forces ``l(u) == l(v)`` across every
-    (symmetric) edge, so the result is exact.  For adversarial graphs
-    (huge diameter AND huge components) the alternating
-    large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) is the documented
-    swap-point; near-dup clusters are small and dense, where hash-min
-    + jump needs 2-4 rounds.
+    (symmetric) edge, so the result is exact.  Pointer jumping covers
+    a diameter of ~2^iters, so only an adversarial graph (huge
+    diameter AND huge components) needs a larger ``max_iters``;
+    near-dup clusters are small and dense, where hash-min + jump needs
+    2-4 rounds.
 
     Returns (node, cluster_id) for every node that appears in
     ``pairs``; singletons are absent (callers left-join and coalesce to
@@ -813,7 +711,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
             "(pointer jumping covers diameter ~2^iters — this graph is "
-            "adversarial; use the large-star/small-star variant)"
+            "adversarial; raise max_iters)"
         )
     e = pairs.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     e = (
@@ -979,99 +877,7 @@ def _hashmin_loop(e: DataFrame, max_iters: int) -> DataFrame:
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(pointer jumping covers diameter ~2^iters — this graph is "
-        "adversarial; use the large-star/small-star variant)"
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iters: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same contract as :func:`connected_components`, different
-    scale envelope: instead of re-shuffling the FULL edge list every
-    round (hash-min's weakness on giant components — think template
-    pages whose near-dup cluster spans millions of docs), each round
-    REWRITES the edge list toward a star, so the shuffled bytes shrink
-    as components collapse and the round count is O(log^2 n) worst
-    case, O(log n) in practice.
-
-    large-star: every node u connects its STRICTLY LARGER neighbors to
-    min(N(u) ∪ {u}); small-star: every node u connects its ≤ neighbors
-    and itself to that min.  Both preserve connectivity and never
-    create inter-component edges; the fixpoint is a star per component
-    centered on its minimum.  Convergence = the (canonicalized) edge
-    set stops changing — checked exactly here with two anti-joins
-    (subtract each way, ``limit(1)``); at 10^10 edges swap the check
-    for count+xor-checksum equality, documented not coded.
-
-    Returns (node, cluster_id) for every node in ``pairs``; singletons
-    absent, like :func:`connected_components`.
-    """
-
-    def canon(e: DataFrame) -> DataFrame:
-        # undirected edge set, canonical (lo, hi) orientation, no loops
-        return (
-            e.filter(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-        )
-
-    def neighborhoods(e: DataFrame) -> DataFrame:
-        # both directions: one row per (u, neighbor v)
-        return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def large_star(e: DataFrame) -> DataFrame:
-        nb = neighborhoods(e)
-        w = Window.partitionBy("u")
-        m = F.least(F.min("v").over(w), F.col("u")).alias("m")
-        return canon(
-            nb.select("u", "v", m)
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient edges toward the smaller endpoint: rows (u, v<=u)
-        nb = neighborhoods(e).filter(F.col("v") <= F.col("u"))
-        w = Window.partitionBy("u")
-        m = F.least(F.min("v").over(w), F.col("u")).alias("m")
-        links = nb.select("u", "v", m)
-        return canon(
-            links.select(F.col("v").alias("u"), F.col("m").alias("v")).union(
-                links.select(F.col("u"), F.col("m").alias("v"))
-            )
-        )
-
-    e = canon(
-        pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    ).localCheckpoint(eager=True)
-    nodes = neighborhoods(e).select(F.col("u").alias("node")).distinct()
-    for _ in range(max_iters):
-        new = small_star(large_star(e)).localCheckpoint(eager=True)
-        stable = (
-            new.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(new).limit(1).count() == 0
-        )
-        e = new
-        if stable:
-            # fixpoint is a star per component: every non-min node has
-            # exactly one edge, to the component min
-            star = e.select(F.col("v").alias("node"), F.col("u").alias("label"))
-            return (
-                nodes.join(star, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("label", F.col("node")).alias("cluster_id"),
-                )
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} rounds"
+        "adversarial; raise max_iters)"
     )
 
 

@@ -446,15 +446,10 @@ def embedding_neardup_pairs(
     if dim is None:
         dim = _dim_of(vectors, vec_col)
     if plane_kind == "gaussian":
-        if dim is None:
-            row = vectors.select(
-                F.first(F.size(F.col(vec_col))).alias("d")
-            ).head()
-            dim = int(row["d"]) if row["d"] is not None else 4
-        mat = gaussian_planes(dim, bits=len(planes), seed=plane_seed)
+        mat = gaussian_planes(dim or 4, bits=len(planes), seed=plane_seed)
         thresholds = None
         if center:
-            mu = corpus_mean(vectors, vec_col, dim)
+            mu = corpus_mean(vectors, vec_col, dim or 4)
             thresholds = [
                 sum(wi * mi for wi, mi in zip(w, mu)) for w in mat
             ]
@@ -961,41 +956,37 @@ def _np_pair_scores_cols(
     a_col: str,
     b_col: str,
     score_name: str,
-    dim: int,
-    norms: tuple | None = None,
 ) -> DataFrame:
     """Row-wise cosine between two vector columns of the SAME row
-    (post-join pairs) — the bit-identical fold, one opaque stage in
-    place of the unrolled cosine expression tree. Emits (*keys, raw
-    score); the @6dp round stays JVM-side. With ``norms`` =
-    (na_col, nb_col) the precomputed per-side norms pass through and
-    the score divides by their product (the bucket-join shape where
-    norms were computed once per vector BEFORE the self-join)."""
+    (post-join pairs) — the bit-identical fold as one opaque stage.
+    Emits (*keys, raw score), each key typed as in ``df``; the @6dp
+    round stays JVM-side. Each batch's width comes from its rows, so
+    no width probe runs and an empty input gives the typed empty
+    frame. A null or zero-norm vector on either side scores null."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    schema = ", ".join(f"{k} long" for k in keys)
+    schema = ", ".join(
+        f"{k} {df.schema[k].dataType.simpleString()}" for k in keys
+    )
     schema += f", {score_name} double"
-    in_cols = keys + [a_col, b_col] + (list(norms) if norms else [])
 
     def scorer(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = vec_matrix(pdf[a_col], dim)
-            B = vec_matrix(pdf[b_col], dim)
-            if norms is None:
-                nrm = fold_norm(A) * fold_norm(B)
-            else:
-                na, nb = (pdf[c].to_numpy(dtype=np.float64) for c in norms)
-                nrm = na * nb
-            s = fold_rows(A, B) / nrm
-            out = {k: pdf[k].to_numpy(dtype=np.int64) for k in keys}
+            s = np.full(len(pdf), np.nan)
+            ok = (pdf[a_col].notna() & pdf[b_col].notna()).to_numpy()
+            if ok.any():
+                A = vec_matrix(pdf[a_col][ok], None)
+                B = vec_matrix(pdf[b_col][ok], None)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    s[ok] = fold_rows(A, B) / (fold_norm(A) * fold_norm(B))
+            out = {k: pdf[k].to_numpy() for k in keys}
             out[score_name] = s
             yield pd.DataFrame(out)
 
-    return df.select(*in_cols).mapInPandas(scorer, schema)
+    return df.select(*keys, a_col, b_col).mapInPandas(scorer, schema)
 
 
 def _sample_rank(id_col: Column) -> Column:
@@ -2131,10 +2122,8 @@ def mrl_rerank_topk(
     so the candidate set — not just the final order — is deterministic
     and engine-independent."""
     dim = _dim_of(vectors, vec_col)
-    prefix_q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qv"),
-    )
+    if dim is None:
+        return _no_candidates(vectors, query_id_col, id_col, "cos_sim")
     # coarse stage as the NumPy corpus scan (bit-identical raw scores,
     # JVM @6dp round — see _np_cross_scores); queries are sliced to
     # the d_prime prefix on the driver, the corpus slice is a one-node
@@ -2166,29 +2155,17 @@ def mrl_rerank_topk(
     # semi-join fetch: candidates are tiny (#queries * candidates),
     # broadcast them INTO the vectors scan — no shuffle of the corpus
     full = vectors.join(F.broadcast(cand), on=id_col)
-    if dim is None:
-        rescored = full.join(
-            F.broadcast(prefix_q.select(query_id_col, "_qv")),
-            on=query_id_col,
-        ).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_qv"), dim), 6).alias(
-                "cos_sim"
-            ),
-        )
-    else:
-        # candidate rows already carry their query id from the cand
-        # join: full-dim rescore through the keyed NumPy stage (query
-        # vectors in the closure — no second broadcast join)
-        rescored = _np_keyed_scores(
-            full, dict(full_q_rows), query_id_col, id_col, vec_col,
-            "_rsraw", dim,
-        ).select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(F.col("_rsraw"), 6).alias("cos_sim"),
-        )
+    # candidate rows already carry their query id from the cand join:
+    # full-dim rescore through the keyed NumPy stage (query vectors in
+    # the closure — no second broadcast join)
+    rescored = _np_keyed_scores(
+        full, dict(full_q_rows), query_id_col, id_col, vec_col,
+        "_rsraw", dim,
+    ).select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(F.col("_rsraw"), 6).alias("cos_sim"),
+    )
     # rerank input is already bounded (#queries x candidates rows)
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col).asc()
@@ -2281,42 +2258,23 @@ def alignment_gate(
     Scale shape: ONE equi-join on the shared pair id (Catalyst plans
     co-partitioned sort-merge; with both embedding tables bucketed by
     ``id_col`` at 100 TB the shuffle disappears entirely), then the
-    cosine runs JVM-side (zip_with/aggregate over attribute columns —
-    never inline expressions inside the lambda, which would re-evaluate
-    per element). No broadcast needed: both sides are corpus-sized.
+    row-wise scoring of :func:`alignment_gate_paired`. No broadcast
+    needed: both sides are corpus-sized.
 
     Returns (id_col, align_score, keep); the score is rounded to
     ``round_dp`` BEFORE the threshold compare so the gate decision is
     bit-identical across engines (same convention as the ANN ops).
     """
-    dim = _dim_of(images, vec_col)
     img = images.select(F.col(id_col), F.col(vec_col).alias("_iv"))
     cap = captions.select(F.col(id_col), F.col(vec_col).alias("_cv"))
-    if dim is None:
-        scored = img.join(cap, id_col).select(
-            F.col(id_col),
-            F.round(
-                cosine(F.col("_iv"), F.col("_cv"), dim), round_dp
-            ).alias("align_score"),
-        )
-    else:
-        # row-wise pair cosine as one NumPy stage after the equi-join
-        # (bit-identical fold; round JVM-side)
-        scored = _np_pair_scores_cols(
-            img.join(cap, id_col), id_col, "_iv", "_cv", "_sraw", dim
-        ).select(
-            F.col(id_col),
-            F.round(F.col("_sraw"), round_dp).alias("align_score"),
-        )
-    return scored.select(
-        F.col(id_col),
-        F.col("align_score"),
-        (F.col("align_score") >= F.lit(float(threshold))).alias("keep"),
+    return alignment_gate_paired(
+        img.join(cap, id_col), id_col, "_iv", "_cv", threshold, round_dp
     )
 
 
 def alignment_gate_paired(
     pairs: DataFrame,
+    id_col: str = "image_id",
     image_vec_col: str = "image_embedding",
     caption_vec_col: str = "caption_embedding",
     threshold: float = 0.3,
@@ -2324,16 +2282,18 @@ def alignment_gate_paired(
 ) -> DataFrame:
     """Row-wise form of :func:`alignment_gate` for the common storage
     layout where a pair's image and caption embeddings live in ONE row
-    (the encoder writes them together): appends (align_score, keep)
-    with NO join and NO shuffle — a pure projection that stays inside
-    whole-stage codegen next to the scan. Same rounded-before-compare
-    gate decision as the two-table form."""
-    dim = _dim_of(pairs, image_vec_col)
-    score = F.round(
-        cosine(F.col(image_vec_col), F.col(caption_vec_col), dim),
-        round_dp,
+    (the encoder writes them together): scores each row with NO join
+    and NO shuffle through one NumPy stage (the bit-identical fold;
+    round JVM-side). Returns (id_col, align_score, keep) with the same
+    rounded-before-compare gate decision; a null or zero-norm vector
+    on either side gives a null score and a null ``keep``."""
+    scored = _np_pair_scores_cols(
+        pairs, id_col, image_vec_col, caption_vec_col, "_sraw"
+    ).select(
+        F.col(id_col),
+        F.round(F.col("_sraw"), round_dp).alias("align_score"),
     )
-    return pairs.withColumn("align_score", score).withColumn(
+    return scored.withColumn(
         "keep", F.col("align_score") >= F.lit(float(threshold))
     )
 

@@ -247,20 +247,18 @@ def build_training_dataset(
         # image-text alignment gate (similarity.alignment_gate_paired):
         # embeddings come from an external encoder keyed by image_id
         # (no encoder lives in-engine — swap-point like the codecs),
-        # one row per pair with BOTH vectors, so the score is a pure
-        # projection on that frame and the only movement is the keyed
-        # join back to the exemplars. Running it post-dedup means only
-        # exemplars are checked, not the collapsed near-dup mass.
-        # Pairs WITHOUT an embedding row pass (encoder coverage lags
-        # ingest; dropping them would silently empty a fresh corpus) —
-        # audit them upstream if coverage is a contract.
+        # one row per pair with BOTH vectors, so scoring needs no join
+        # and the only movement is the keyed join back to the
+        # exemplars. Running it post-dedup means only exemplars are
+        # checked, not the collapsed near-dup mass. Pairs WITHOUT an
+        # embedding row, or with a null score (a null or zero-norm
+        # vector), pass (encoder coverage lags ingest; dropping them
+        # would silently empty a fresh corpus) — audit them upstream
+        # if coverage is a contract.
         from ..operators.similarity import alignment_gate_paired
 
         align = alignment_gate_paired(
-            alignment_embeddings.select(
-                "image_id", "image_embedding", "caption_embedding"
-            ),
-            threshold=alignment_threshold,
+            alignment_embeddings, "image_id", threshold=alignment_threshold,
         ).select("image_id", F.col("keep").alias("_aligned"))
         pairs = pairs.join(align, "image_id", "left")
         misaligned = F.col("_aligned") == F.lit(False)

@@ -289,7 +289,9 @@ def test_dataset_lm_score_column(spark):
 def test_dataset_alignment_gate(spark):
     """Pairs whose image/caption embedding cosine falls below the
     threshold are routed to audit_rejects (misaligned); pairs with NO
-    embedding row pass (encoder coverage lags ingest)."""
+    embedding row pass (encoder coverage lags ingest), and so does a
+    pair with a zero embedding (no cosine: null score, not a
+    misalignment)."""
     from publicationsretriever_spark.plans.dataset import (
         build_training_dataset,
     )
@@ -301,6 +303,7 @@ def test_dataset_alignment_gate(spark):
         make_payload_row("img-0", 0),   # aligned (cos 1.0)
         make_payload_row("img-1", 1),   # misaligned (cos 0.0)
         make_payload_row("img-2", 2),   # no embedding row -> passes
+        make_payload_row("img-3", 3),   # zero image embedding -> passes
     ]
     df = spark.createDataFrame(
         rows,
@@ -311,6 +314,7 @@ def test_dataset_alignment_gate(spark):
         [
             ("img-0", [1.0, 0.0], [1.0, 0.0]),
             ("img-1", [1.0, 0.0], [0.0, 1.0]),
+            ("img-3", [0.0, 0.0], [1.0, 0.0]),
         ],
         "image_id string, image_embedding array<float>, "
         "caption_embedding array<float>",
@@ -324,8 +328,9 @@ def test_dataset_alignment_gate(spark):
         r["image_id"]: r["reject_reason"]
         for r in out["audit_rejects"].collect()
     }
-    assert pair_ids == {"img-0", "img-2"}
+    assert pair_ids == {"img-0", "img-2", "img-3"}
     assert rejects.get("img-1") == "misaligned"
+    assert "img-3" not in rejects
 
 
 def test_dataset_job_zorder_stage(spark, tmp_path, monkeypatch, capsys):

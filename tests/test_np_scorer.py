@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 from publicationsretriever_spark.operators.similarity import (
     _collect_query_rows,
     _np_cross_scores,
+    _np_pair_scores_cols,
+    alignment_gate,
+    alignment_gate_paired,
     brute_force_topk,
+    cosine,
     dot,
     l2_norm,
     partial_topk,
@@ -70,6 +74,63 @@ def test_np_scorer_bit_identical_to_expression_fold(spark, vecs):
     assert set(np_scores) == set(jvm_scores)
     for k in jvm_scores:
         assert _bits(np_scores[k]) == _bits(jvm_scores[k]), k
+
+
+def test_np_pair_scorer_bit_identical_to_cosine_expression(spark, vecs):
+    """The paired alignment scorer's raw doubles equal the unrolled
+    cosine(a, b, dim) expression on the same rows, bit for bit."""
+    b = vecs.select(
+        ((F.col("vec_id") + 7) % 40).alias("vec_id"),
+        F.col("embedding").alias("_b"),
+    )
+    pairs = vecs.withColumnRenamed("embedding", "_a").join(b, "vec_id")
+    np_scores = {
+        r["vec_id"]: r["_s"]
+        for r in _np_pair_scores_cols(
+            pairs, "vec_id", "_a", "_b", "_s"
+        ).collect()
+    }
+    jvm_scores = {
+        r["vec_id"]: r["_s"]
+        for r in pairs.select(
+            "vec_id", cosine(F.col("_a"), F.col("_b"), 8).alias("_s")
+        ).collect()
+    }
+    assert set(np_scores) == set(jvm_scores) and len(jvm_scores) == 40
+    for k in jvm_scores:
+        assert _bits(np_scores[k]) == _bits(jvm_scores[k]), k
+
+
+def test_alignment_zero_norm_scores_null_on_both_forms(spark):
+    """A zero image vector has no cosine: both alignment forms give
+    that pair a null score and a null keep (the IVF family's zero
+    vector rule), and still score the other pairs. A null caption
+    vector scores null the same way."""
+    rows = [
+        (0, [0.0, 0.0, 0.0], [1.0, 0.0, 0.0]),
+        (1, [1.0, 0.0, 0.0], [1.0, 1.0, 0.0]),
+        (2, [1.0, 0.0, 0.0], None),
+    ]
+    paired = spark.createDataFrame(
+        rows,
+        "pair_id long, image_embedding array<float>, "
+        "caption_embedding array<float>",
+    )
+    img = paired.select("pair_id", F.col("image_embedding").alias("embedding"))
+    cap = paired.select(
+        "pair_id", F.col("caption_embedding").alias("embedding")
+    )
+    want = {0: (None, None), 1: (0.707107, True), 2: (None, None)}
+    for out in (
+        alignment_gate(img, cap, threshold=0.3),
+        alignment_gate_paired(paired, "pair_id", threshold=0.3),
+    ):
+        assert out.columns == ["pair_id", "align_score", "keep"]
+        got = {
+            r["pair_id"]: (r["align_score"], r["keep"])
+            for r in out.collect()
+        }
+        assert got == want
 
 
 def test_np_scorer_extra_per_query_column(spark, vecs):
@@ -467,6 +528,13 @@ def _empty_corpus_ops():
             top + ["cos_sim"],
         ),
         "lsh_topk": (lambda v, q: S.lsh_topk(v, q, k=3), top + ["cos_sim"]),
+        "alignment_gate": (
+            lambda v, q: S.alignment_gate(
+                v.withColumnRenamed("vec_id", "pair_id"),
+                q.withColumnRenamed("query_id", "pair_id"),
+            ),
+            ["pair_id", "align_score", "keep"],
+        ),
         "hard_negatives": (
             lambda v, q: S.hard_negatives(
                 q, v, k=3, query_id_col="query_id", id_col="vec_id"

@@ -82,7 +82,21 @@ def test_ngram_jaccard_df_modes_identical(spark, docs):
     hot = [(i, f"common shared boilerplate prefix doc {i} body {i * 7}")
            for i in range(12)]
     hot_df = spark.createDataFrame(hot, ["doc_id", "text"])
-    for frame in (docs, hot_df):
+    # exact duplicate texts, and shingle-less short docs (one of them
+    # duplicated)
+    texts = [
+        "the quick brown fox jumps over the lazy dog again and again",
+        "the quick brown fox jumps over the lazy dog again and again",
+        "the quick brown fox jumps over the lazy dog once more today",
+        "completely different words entirely here nothing shared at all",
+        "tiny",
+        "tiny",
+        "the quick brown fox jumps over the lazy dog again and again",
+    ]
+    dup_df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    for frame in (docs, hot_df, dup_df):
         rows = lambda mode: sorted(
             tuple(r) for r in ngram_jaccard_pairs(
                 frame, "text", "doc_id", k=3, threshold=0.1, df_mode=mode
@@ -726,38 +740,15 @@ def test_image_dedup_assign_end_to_end(spark):
     assert not got[chain_ids[-1]]["is_canonical"]
 
 
-def test_connected_components_star_matches_hashmin(spark):
-    """large-star/small-star and hash-min+jump agree on a random graph
-    (chains, triangles, isolated pairs) — same exact contract."""
-    import random
-
-    from publicationsretriever_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    edges = [(i, i + 1) for i in range(0, 30)]           # one long chain
-    edges += [(100, 101), (101, 102), (100, 102)]        # triangle
-    edges += [(rng.randrange(200, 240), rng.randrange(200, 240)) for _ in range(25)]
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-    )
-    a = {r["node"]: r["cluster_id"] for r in connected_components(pairs).collect()}
-    b = {r["node"]: r["cluster_id"] for r in connected_components_star(pairs).collect()}
-    assert a == b and len(a) > 30
-
-
 def test_connected_components_random_vs_union_find(spark):
-    """Both distributed variants agree with a pure-Python union-find
-    on random graphs of varying density — the exactness claim checked
-    against an independent reference implementation, not just against
-    each other."""
+    """connected_components agrees with a pure-Python union-find on
+    random graphs of varying density and on a mixed graph (a long
+    chain, a triangle and random edges) — the exactness claim checked
+    against an independent reference implementation."""
     import random
 
     from publicationsretriever_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
     )
 
     def uf_clusters(edges):
@@ -776,12 +767,22 @@ def test_connected_components_random_vs_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         return {n: find(n) for n in parent}
 
+    graphs = {}
     for seed, n_edges in ((3, 15), (11, 45), (42, 90)):
         rng = random.Random(seed)
-        edges = [
+        graphs[f"seed={seed}"] = [
             (rng.randrange(0, 40), rng.randrange(0, 40))
             for _ in range(n_edges)
         ]
+    rng = random.Random(7)
+    mixed = [(i, i + 1) for i in range(0, 30)]           # one long chain
+    mixed += [(100, 101), (101, 102), (100, 102)]        # triangle
+    mixed += [
+        (rng.randrange(200, 240), rng.randrange(200, 240))
+        for _ in range(25)
+    ]
+    graphs["chain+triangle+random"] = mixed
+    for name, edges in graphs.items():
         edges = [(a, b) for a, b in edges if a != b]
         want = uf_clusters(edges)
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -789,31 +790,8 @@ def test_connected_components_random_vs_union_find(spark):
             r["node"]: r["cluster_id"]
             for r in connected_components(pairs).collect()
         }
-        got_star = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components_star(pairs).collect()
-        }
-        assert got == want, f"hash-min diverges at seed={seed}"
-        assert got_star == want, f"star diverges at seed={seed}"
-
-
-def test_connected_components_star_string_ids(spark):
-    from publicationsretriever_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    pairs = spark.createDataFrame(
-        [("doc-b", "doc-c"), ("doc-a", "doc-b"), ("x", "y")],
-        "id_a string, id_b string",
-    )
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components_star(pairs).collect()
-    }
-    assert got == {
-        "doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
-        "x": "x", "y": "x",
-    }
+        assert got == want, f"hash-min diverges on {name}"
+    assert len(want) > 30  # the mixed graph, checked last
 
 
 def test_canonicalize_clusters_majority_ties_and_nulls(spark):
