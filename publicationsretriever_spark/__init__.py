@@ -22,3 +22,7 @@ citations), this package computes it with DataFrames.
 """
 
 __version__ = "0.1.0"
+
+from . import _zipdir
+
+_zipdir.install()

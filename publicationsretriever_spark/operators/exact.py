@@ -83,10 +83,14 @@ def fold_cos(a, b) -> float:
 
 def vec_matrix(cells, dim: int | None) -> np.ndarray:
     """An Arrow list column (pandas Series of arrays) or a list of
-    vectors as an (n, dim) float64 matrix."""
+    vectors as an (n, dim) float64 matrix. A null vector is a zero row,
+    so it scores null like a zero-norm vector."""
     if len(cells) == 0:
         return np.zeros((0, dim or 0))
-    return np.vstack([np.asarray(c, dtype=np.float64) for c in cells])
+    rows = [None if c is None else np.asarray(c, dtype=np.float64) for c in cells]
+    if dim is None:
+        dim = next((r.size for r in rows if r is not None), 0)
+    return np.vstack([np.zeros(dim) if r is None else r for r in rows])
 
 
 def fold_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:

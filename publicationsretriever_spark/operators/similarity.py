@@ -102,13 +102,14 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
 
 
 def _dim_of(df: DataFrame, vec_col: str) -> int | None:
-    """Vector width from the first row — one limit-1 job. The unrolled
-    expressions need the (uniform) dim at plan time; None (empty
-    input) falls back to the interpreted fold."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).head()
-    if row is None or row["d"] is None or int(row["d"]) <= 0:
-        return None
-    return int(row["d"])
+    """Vector width from the first non-null, non-empty vector — one
+    limit-1 job (a null first row must not hide the corpus). None when
+    there is no such vector: the scans then return their typed empty
+    frame, and ``dot``/``l2_norm`` fold over the array instead of
+    unrolling a known width."""
+    d = F.size(F.col(vec_col))
+    row = df.select(d.alias("d")).filter(d > 0).head()
+    return None if row is None else int(row["d"])
 
 
 def _local_literal_df(spark, rows, fields):
@@ -209,7 +210,8 @@ def _np_cross_scores(
     between operators. Queries must be the bounded eval/mining sample
     (the operators' existing contract). ``extra_per_query`` emits one
     extra per-query double column (e.g. the true-match score) so
-    consumers need no extra join. Null vectors are not supported."""
+    consumers need no extra join. A null corpus vector scores null,
+    like a zero-norm one."""
     qids = [int(q) for q, _ in q_rows]
     qvecs = [[float(x) for x in v] for _, v in q_rows]
     extras = (

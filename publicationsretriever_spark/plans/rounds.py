@@ -18,8 +18,10 @@ over one round context (``_Round``), in pipeline order:
 A round is many Spark jobs: the seven eager cuts (``staged``,
 ``marked``, ``ranked`` in round 0 only, ``sched``, ``fetch``,
 ``pages``, ``links``) run while the plan is built, then the store's
-close writes the deltas and tables beside the fused metrics job — 118
-jobs, 117 stages and 185 tasks in the ``crawl`` benchmark's timed round.
+close writes the deltas and tables beside the fused metrics job — 85
+jobs, 84 stages and 148 tasks in the ``crawl`` benchmark's timed round
+(seed 1). The close runs no Python: every canonical hash it needs
+(``reject_hash``, ``final_hash``) is computed inside a cut.
 
 This replaces the reference's per-record virtual-thread pipeline
 (LoaderAndChecker.loadAndCheckIdUrlPairs, util/url/LoaderAndChecker.java:156-300
@@ -59,9 +61,9 @@ Scale design (10^10 frontier):
   (operators/blocking.py — the reference-exact A2/A3/A4 rules).
 - ONE metrics job per round (a union of tagged aggregates over warm
   caches, run alongside the round's close) carries the per-partition
-  lineage; the delta and next-frontier counts come from the store's
-  commit (parquet footers, or ``observe()`` on the checkpoint job), so
-  the driver never runs isEmpty()/count() probe jobs between rounds.
+  lineage; the delta and next-frontier counts are ``observe()``
+  metrics of the store's write or checkpoint jobs, so the driver never
+  runs isEmpty()/count() probe jobs between rounds.
 """
 
 from __future__ import annotations
@@ -212,6 +214,8 @@ class RoundOutput:
     #: fetch/page work from fixed small-job barriers and the partition
     #: count is the scaling ledger's parallelism-collapse detector
     cuts: dict[str, tuple[float, int]] = field(default_factory=dict)
+    #: wall seconds of each stage method, by name (cuts included)
+    stages: dict[str, float] = field(default_factory=dict)
 
 
 @dataclass
@@ -219,7 +223,8 @@ class _Round:
     """One round's context, shared by its stage methods: the state it
     reads, the round number, the A8 prediction decision, the result
     frames the stages emit (unioned in emission order into the results
-    delta), the caches ``_finalize`` releases, and the cut ledger."""
+    delta), the caches ``_finalize`` releases, and the cut and stage
+    ledgers."""
 
     state: CrawlState
     no: int
@@ -227,6 +232,14 @@ class _Round:
     results: list[DataFrame] = field(default_factory=list)
     caches: list[DataFrame] = field(default_factory=list)
     cuts: dict[str, tuple[float, int]] = field(default_factory=dict)
+    stages: dict[str, float] = field(default_factory=dict)
+
+    def run(self, stage: Callable, *args):
+        """``stage(self, *args)``, its wall recorded under its name."""
+        t = _time.time()
+        out = stage(self, *args)
+        self.stages[stage.__name__] = round(_time.time() - t, 3)
+        return out
 
     def cut(self, df: DataFrame, name: str) -> DataFrame:
         """Every fan-out point is EAGERLY materialized (localCheckpoint):
@@ -681,9 +694,13 @@ class CrawlEngine:
             self.battery.page_url_reject_reason(F.lower(url))
         ))
         df = df.withColumn("clean_url", U.clean_url(url))
+        # the UDF runs on EVERY row (Spark evaluates a Python UDF under
+        # a when() for all rows), so a rejected row's canonical form is
+        # kept as its seen key (``reject_hash``) instead of being
+        # recomputed by the round's seen delta
+        df = df.withColumn("_canon", U.canonicalize_udf(F.col("clean_url")))
         df = df.withColumn(
-            "canon_url",
-            F.when(F.col("reject_reason").isNull(), U.canonicalize_udf(F.col("clean_url"))),
+            "canon_url", F.when(F.col("reject_reason").isNull(), F.col("_canon"))
         )
         df = df.withColumn(
             "reject_reason",
@@ -696,7 +713,13 @@ class CrawlEngine:
         df = df.withColumn(
             "url_hash",
             F.when(F.col("canon_url").isNotNull(), U.url_hash64(F.col("canon_url"))),
-        )
+        ).withColumn(
+            "reject_hash",
+            F.when(
+                F.col("reject_reason").isNotNull() & F.col("_canon").isNotNull(),
+                U.url_hash64(F.col("_canon")),
+            ),
+        ).drop("_canon")
         df = df.withColumn("top3", U.top3_domain(F.col("domain")))
         df = df.withColumn("host_bucket", U.host_bucket(F.col("top3"), self.num_buckets))
         return df
@@ -743,25 +766,27 @@ class CrawlEngine:
             state, round_no,
             self.use_mla and self.mla_gate.should_run_prediction(),
         )
-        staged, unseen = self._stage_and_mark(rc, frontier)
-        picked, pool, pool_hashes = self._pick_best(rc, unseen)
-        sched, spill, fetch_in = self._schedule(rc, picked)
-        classified = self._fetch_and_classify(rc, fetch_in)
-        live, links, page_tagged, dynamic_blocked, mla_checked = (
-            self._pages_and_links(rc, classified)
+        staged, unseen = rc.run(self._stage_and_mark, frontier)
+        picked, pool, pool_hashes = rc.run(self._pick_best, unseen)
+        sched, spill, fetch_in = rc.run(self._schedule, picked)
+        classified = rc.run(self._fetch_and_classify, fetch_in)
+        live, links, page_tagged, dynamic_blocked, mla_checked = rc.run(
+            self._pages_and_links, classified
         )
-        results_delta, next_frontier, pool_next = self._fallback_wave(
-            rc, staged, picked, sched, spill, classified, page_tagged,
-            links, pool,
+        results_delta, next_frontier, pool_next = rc.run(
+            self._fallback_wave, staged, picked, sched, spill, classified,
+            page_tagged, links, pool,
         )
-        seen_delta = self._seen_delta(
-            rc, staged, unseen, spill, pool_hashes, classified
+        seen_delta = rc.run(
+            self._seen_delta, staged, unseen, spill, pool_hashes, classified
         )
-        fulls, learned_pm = self._dimension_tables(
-            rc, classified, sched, page_tagged, dynamic_blocked
+        fulls, learned_pm = rc.run(
+            self._dimension_tables, classified, sched, page_tagged,
+            dynamic_blocked,
         )
-        metrics_df = self._metrics_plan(
-            rc, staged, classified, links, live, learned_pm, mla_checked
+        metrics_df = rc.run(
+            self._metrics_plan, staged, classified, links, live, learned_pm,
+            mla_checked,
         )
         return RoundOutput(
             deltas={
@@ -776,6 +801,7 @@ class CrawlEngine:
             metrics_df=metrics_df,
             finalize=partial(self._finalize, rc),
             cuts=rc.cuts,
+            stages=rc.stages,
         )
 
     def _stage_and_mark(self, rc: _Round, frontier: DataFrame):
@@ -807,7 +833,7 @@ class CrawlEngine:
             )
         )
 
-        ok = staged.filter(F.col("reject_reason").isNull())
+        ok = staged.filter(F.col("reject_reason").isNull()).drop("reject_hash")
         w = Window.partitionBy("url_hash").orderBy("order_in_id", "id")
         seen_count = state.metrics[-1]["seen_total"] if state.metrics else 0
         marked = rc.cut(mark_seen(
@@ -1079,6 +1105,14 @@ class CrawlEngine:
             .when(M.is_html_mime(F.col("content_type")), "page")
             .otherwise("other"),
         ).join(F.broadcast(self._payload_meta), "image_id", "left")
+        # the final url's seen key, canonicalized once inside the fetch
+        # cut (see _seen_delta), so the round close runs no Python
+        classified = classified.withColumn(
+            "_fcanon", U.canonicalize_udf(U.clean_url(F.col("final_url")))
+        ).withColumn(
+            "final_hash",
+            F.when(F.col("_fcanon").isNotNull(), U.url_hash64(F.col("_fcanon"))),
+        ).drop("_fcanon")
         classified = rc.cut(classified, "fetch")
 
         # doc/error/other fetch outcomes in ONE pass (a single select with
@@ -1467,21 +1501,16 @@ class CrawlEngine:
                 pool_hashes, "url_hash", "left_anti"
             )
         # the final url's seen key is the hash of its CANONICALIZED
-        # form — the same key every staged frontier row carries and the
-        # oracle's xxh(url) = hash(canon(clean(url))). Hashing the raw
-        # Location string minted keys no frontier row could ever match
+        # form (``final_hash``, computed in the fetch cut) — the same
+        # key every staged frontier row carries and the oracle's
+        # xxh(url) = hash(canon(clean(url))). Hashing the raw Location
+        # string minted keys no frontier row could ever match
         # (uppercase hosts, jsessionid, fragments) and omitted the
         # canonical one, so a later link to the same page re-fetched
         # where the oracle said 'duplicate url'.
         final_cand = (
-            classified.select("final_url", "url_hash")
-            .withColumn(
-                "_fcanon",
-                U.canonicalize_udf(U.clean_url(F.col("final_url"))),
-            )
-            .filter(F.col("_fcanon").isNotNull())
-            .filter(U.url_hash64(F.col("_fcanon")) != F.col("url_hash"))
-            .select(U.url_hash64(F.col("_fcanon")).alias("url_hash"))
+            classified.filter(F.col("final_hash") != F.col("url_hash"))
+            .select(F.col("final_hash").alias("url_hash"))
             .distinct()
         )
         final_new = SEEN.anti_join_seen(final_cand, seen).join(
@@ -1492,18 +1521,14 @@ class CrawlEngine:
         # (oracle.py: hash = url_hash if canon, before the reject
         # split) — without them a url rejected under one battery but
         # admitted under the other kind's battery later re-fetches
-        # where the oracle says duplicate. prepare_frontier skips the
-        # canonicalize UDF for rejected rows (perf), so compute it
-        # here over the (small) rejected slice only. Same discard
-        # semantics as the oracle's set: spilled/pool hashes knock a
-        # rejected contribution out for this round too.
+        # where the oracle says duplicate. prepare_frontier keeps that
+        # hash as ``reject_hash`` (the canonicalize UDF runs on every
+        # staged row). Same discard semantics as the oracle's set:
+        # spilled/pool hashes knock a rejected contribution out for
+        # this round too.
         rejected_cand = (
-            staged.filter(F.col("reject_reason").isNotNull())
-            .select(
-                U.canonicalize_udf(F.col("clean_url")).alias("_rc")
-            )
-            .filter(F.col("_rc").isNotNull())
-            .select(U.url_hash64(F.col("_rc")).alias("url_hash"))
+            staged.filter(F.col("reject_hash").isNotNull())
+            .select(F.col("reject_hash").alias("url_hash"))
             .distinct()
         )
         rejected_hashes = (
@@ -1975,7 +2000,7 @@ class CrawlEngine:
             # rewrite, already O(age) by design) rebuilds it in full
             t0 = _time.time()
             seen_delta = None if compact else store.read_part(
-                spark, table_meta["seen"]["paths"][-1]
+                spark, table_meta["seen"]["paths"][-1], loaded["seen"].schema
             )
             state.seen_sketch, state.sketch_meta = self._maintain_seen_sketch(
                 prev_sketch, prev_meta, state.seen, seen_delta,
@@ -1991,6 +2016,7 @@ class CrawlEngine:
                 ),
                 "cuts": {k: round(secs, 3) for k, (secs, _) in out.cuts.items()},
                 "cut_parts": {k: n for k, (_, n) in out.cuts.items()},
+                "stages": out.stages,
                 **store.walls,
                 "metrics": metrics_s,
                 "sketch": round(_time.time() - t0, 3),

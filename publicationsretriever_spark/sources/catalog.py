@@ -29,6 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -157,8 +158,8 @@ class SnapshotCatalog:
     ) -> tuple[str, dict, dict[str, DataFrame]]:
         """Phase 1: materialize every table as immutable data files.
         Returns (snap_id, table_meta, read-back DataFrames). Row counts
-        come from the written parquet (footer metadata — no plan
-        recompute). The snapshot is INVISIBLE until ``finish_commit``
+        are ``observe()`` metrics of the write jobs (no count job, no
+        plan recompute). The snapshot is INVISIBLE until ``finish_commit``
         writes the manifest — an interrupted job leaves no half-commit
         (same atomicity contract as an Iceberg metadata swap).
 
@@ -213,6 +214,7 @@ class SnapshotCatalog:
         def write_one(item):
             name, df = item
             is_delta = name in deltas
+            appends = is_delta and not compact
             old_paths, old_rows = _parent_part(parent_tables, name)
             if is_delta and compact and prior is not None:
                 # a prior view the caller didn't carry (e.g. resuming a
@@ -222,30 +224,35 @@ class SnapshotCatalog:
                 # lost the handle
                 p = prior.get(name)
                 if p is None and old_paths:
-                    p = spark.read.parquet(*old_paths)
+                    p = spark.read.schema(df.schema).parquet(*old_paths)
                 if p is not None:
                     df = p.unionByName(df)
-            path = snap_dir / name
-            df.write.mode("overwrite").parquet(str(path))
-            back = spark.read.parquet(str(path))
-            n = back.count()  # parquet footer metadata — no plan recompute
-            if is_delta and not compact:
-                paths = old_paths + [str(path)]
-                meta = {"paths": paths, "rows": old_rows + n, "delta_rows": n}
-                return name, meta, spark.read.parquet(*paths)
-            meta = {"paths": [str(path)], "rows": n}
+            # the row count is an observe() metric of the write job
+            # itself, and every read-back carries the written frame's
+            # schema: no count job and no schema-inferring read per table
+            obs = Observation()
+            path = str(snap_dir / name)
+            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(path)
+            n = int(obs.get["n"])
+            paths = old_paths + [path] if appends else [path]
+            meta = {"paths": paths, "rows": n + (old_rows if appends else 0)}
             if is_delta:
                 meta["delta_rows"] = n - (old_rows if compact else 0)
-            return name, meta, back
+            return name, meta, spark.read.schema(df.schema).parquet(*paths)
 
         table_meta, loaded, self.walls = _materialize(
             write_one, {**deltas, **fulls}, warm_first
         )
         return snap_id, table_meta, loaded
 
-    def read_part(self, spark: SparkSession, path: str) -> DataFrame:
-        """One data part named in a snapshot's ``paths``."""
-        return spark.read.parquet(path)
+    def read_part(
+        self, spark: SparkSession, path: str, schema: StructType
+    ) -> DataFrame:
+        """One data part named in a snapshot's ``paths``, read with the
+        schema it was written with (no schema-inference job)."""
+        return spark.read.schema(schema).parquet(path)
 
     def commit(
         self,
@@ -395,7 +402,9 @@ class MemoryCatalog:
     def latest(self) -> dict | None:
         return self._snaps[-1] if self._snaps else None
 
-    def read_part(self, spark: SparkSession, path: str) -> DataFrame:
+    def read_part(
+        self, spark: SparkSession, path: str, schema: StructType
+    ) -> DataFrame:
         return self._parts[path]
 
     def _union(self, paths: list[str]) -> DataFrame:

@@ -54,3 +54,52 @@ def test_compaction_and_catalog_resume_across_boundary(spark, tmp_path):
     for got, want in zip(resumed.metrics, reference.metrics):
         assert {k: got[k] for k in lineage} == {k: want[k] for k in lineage}
         assert set(got["driver_phases"]) == set(want["driver_phases"])
+
+
+def test_write_round_counts_and_schemas_match_the_written_parquet(spark, tmp_path):
+    """The snapshot catalog counts each table on its write job and reads
+    every part back with the written frame's schema: for an appended
+    delta, a compacted delta and a full table, ``rows``/``delta_rows``
+    equal a count of the written parquet and each read-back schema
+    equals the one Spark infers from the files (nullable everywhere,
+    though ``range``'s id is NOT NULL)."""
+    from pyspark.sql import functions as F
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            "id",
+            F.col("id").cast("string").alias("s"),
+            F.array(F.col("id").cast("string")).alias("arr"),
+            F.struct((F.col("id") * 0.5).alias("x")).alias("st"),
+            F.when(F.col("id") % 2 == 0, F.lit(True)).alias("flag"),
+        )
+
+    def counted(paths):
+        return spark.read.parquet(*paths).count()
+
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    for rnd, (lo, hi, compact) in enumerate([(0, 5, False), (5, 12, False),
+                                             (12, 15, True)]):
+        prior = None if rnd == 0 else {"delta": loaded["delta"]}
+        snap, meta, loaded = cat.write_round(
+            spark, deltas={"delta": frame(lo, hi)},
+            fulls={"full": frame(0, hi).filter(F.col("id") > 2)},
+            prior=prior, compact=compact,
+        )
+        cat.finish_commit(snap, meta, rnd, {})
+        d, f = meta["delta"], meta["full"]
+        # a compacted part holds the prior rows too: its delta is the
+        # part's count minus the parent's rows
+        assert d["delta_rows"] == hi - lo == counted(d["paths"][-1:]) - (
+            lo if compact else 0
+        )
+        assert d["rows"] == hi == counted(d["paths"])
+        assert len(d["paths"]) == (1 if compact else rnd + 1)
+        assert f["rows"] == hi - 3 == counted(f["paths"])
+        for name in ("delta", "full"):
+            assert loaded[name].schema == spark.read.parquet(
+                *meta[name]["paths"]
+            ).schema
+            assert loaded[name].count() == meta[name]["rows"]
+        part = cat.read_part(spark, d["paths"][-1], loaded["delta"].schema)
+        assert part.schema == spark.read.parquet(d["paths"][-1]).schema

@@ -245,6 +245,13 @@ def test_observation_delta_counts_and_phase_ledger(crawl_setup):
         if m["round"] == 0:
             cut_names.add("ranked")
         assert set(phases["cuts"]) == set(phases["cut_parts"]) == cut_names
+        # every stage method's wall, round 0 and later alike
+        assert set(phases["stages"]) == {
+            "_stage_and_mark", "_pick_best", "_schedule",
+            "_fetch_and_classify", "_pages_and_links", "_fallback_wave",
+            "_seen_delta", "_dimension_tables", "_metrics_plan",
+        }
+        assert all(s >= 0 for s in phases["stages"].values())
 
 
 def test_mixed_priority_quota_rejected_seed_and_noncanonical_redirect(spark):

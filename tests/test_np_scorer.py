@@ -565,3 +565,41 @@ def test_ann_ops_on_empty_corpus(spark, vecs, op):
     out = fn(empty, queries)
     assert out.columns == cols
     assert out.collect() == []
+
+
+def test_null_first_corpus_row_keeps_the_width(spark):
+    """``_dim_of`` takes the width from the first non-null vector: a
+    null embedding in row 0 of a one-partition corpus (11 valid 4-dim
+    vectors behind it) once made both top-k ops return [] over a
+    non-empty corpus. The valid ids now score and rank as they do
+    without row 0, and the null vector scores null, ranked last."""
+    from publicationsretriever_spark.operators.similarity import mrl_rerank_topk
+
+    rows = [(0, None)] + [
+        (i, [float((i * 5 + j * 3) % 7 - 3) for j in range(4)])
+        for i in range(1, 12)
+    ]
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    valid = corpus.filter(F.col("vec_id") > 0)
+    queries = valid.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
+    )
+    ops = {
+        "brute": lambda c: brute_force_topk(c, queries, k=12),
+        "mrl": lambda c: mrl_rerank_topk(
+            c, queries, d_prime=2, candidates=12, k=12
+        ),
+    }
+    for name, op in ops.items():
+        want = sorted(tuple(r) for r in op(valid).collect())
+        out = op(corpus).collect()
+        got = sorted(tuple(r) for r in out if r[2] != 0)
+        assert len(want) == 2 * 11, name
+        assert got == want, name
+        # the null vector itself scores null and ranks last, like a
+        # zero-norm one
+        assert sorted(tuple(r) for r in out if r[2] == 0) == [
+            (1, 12, 0, None), (2, 12, 0, None)
+        ], name
